@@ -31,6 +31,14 @@ object BenchRetry {
 }
 
 object Bench {
+  /** The stdout line that points at the per-run detail file. The path comes
+    * from the environment, so `\` and `"` are escaped to keep the line
+    * valid JSON. */
+  def detailPointerLine(detailPath: String): String = {
+    val escaped = detailPath.replace("\\", "\\\\").replace("\"", "\\\"")
+    s"""{"detail":"bench_runs","detail_file":"$escaped"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -229,7 +237,7 @@ object Bench {
     try {
       val w = new java.io.PrintWriter(detailPath, "UTF-8")
       try w.println(detailLine) finally w.close()
-      println(s"""{"detail":"bench_runs","detail_file":"$detailPath"}""")
+      println(detailPointerLine(detailPath))
     } catch { case e: java.io.IOException =>
       // an unwritable CWD must not cost the evidence — fall back to stdout
       println(detailLine)

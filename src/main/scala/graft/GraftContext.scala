@@ -130,11 +130,7 @@ class GraftContext(
     /** explicit state location override — a directory, an `hdfs://`-style
       * URI, or a `jdbc:` URL for a shared database-backed state (reference
       * config/connection.py state_connection). Default: `<workspace>/state`. */
-    val stateLocation: Option[String] = None,
-    /** physical commit protocol (config `table_format`): "dir" (default) or
-      * "manifest" — resolved through the [[graft.adapter.TableFormat]] seam,
-      * or any custom instance via the Option overload. */
-    val tableFormat: Option[String] = None) {
+    val stateLocation: Option[String] = None) {
 
   /** Durable contexts persist snapshots/intervals/environments under
     * `<workspace>/state` (reference state_sync/db), so a new context over the
@@ -143,12 +139,7 @@ class GraftContext(
     if (durableState) new graft.state.FileStateStore(
       stateLocation.getOrElse(s"$workspace/state"))
     else new InMemoryStateStore
-  val materializer = new SparkMaterializer(spark, tableFormat.map {
-    case "manifest" => new graft.adapter.ManifestFormat(spark)
-    case "dir" => new graft.adapter.DirVersionFormat(spark)
-    case other => throw new IllegalArgumentException(
-      s"unknown table_format '$other' (dir|manifest)")
-  })
+  val materializer = new SparkMaterializer(spark)
   private val customStrategies =
     scala.collection.mutable.Map[String, (SparkMaterializer, PhysicalTable, DataFrame) => Unit]()
   private val customMacros =

@@ -193,6 +193,7 @@ object Main {
     def has(name: String): Boolean = flags.contains(name)
 
     try {
+      flag("table-format").foreach(graft.loader.ProjectConfig.refuseRemovedTableFormat)
       val projects = flagAll("project")
       // project config.yaml (reference core/config/root.py Config): CLI flags
       // override file config, file config overrides built-in defaults
@@ -215,8 +216,7 @@ object Main {
         envSuffixTarget = config.environmentSuffixTarget.getOrElse("schema"),
         beforeAll = config.beforeAll,
         afterAll = config.afterAll,
-        stateLocation = config.stateConnection,
-        tableFormat = flag("table-format").orElse(config.tableFormat))
+        stateLocation = config.stateConnection)
       // init/format operate on files, not the loaded model graph — and must
       // work on projects that don't parse yet (that's what init creates and
       // what format may be asked to clean up)
@@ -441,16 +441,15 @@ object Main {
           out.println(ctx.envTable(model, positional.drop(1).headOption.getOrElse("prod")))
           0
         case "partitions" =>
-          // SHOW PARTITIONS analog over the TableFormat metadata (dir names
-          // / manifest entries — never a data scan)
+          // SHOW PARTITIONS analog over the TableFormat metadata (partition
+          // dir names — never a data scan)
           val model = positionalRequired(positional, "partitions <model>")
           val snap = ctx.state.latestSnapshot(model).getOrElse(
             throw new IllegalArgumentException(s"$model has no snapshot"))
           val t = ctx.evaluator.physicalTable(snap)
           ctx.materializer.partitionValues(t) match {
-            case None => out.println("(format reports no partition metadata)"); 0
-            case Some(Nil) => out.println("(unpartitioned or empty)"); 0
-            case Some(pvs) =>
+            case Nil => out.println("(unpartitioned or empty)"); 0
+            case pvs =>
               pvs.map(_.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
                   .mkString("/"))
                 .sorted.foreach(out.println)

@@ -40,11 +40,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * plugin re-reads them per load, so concurrent promotes behave like
   * concurrent CREATE OR REPLACE VIEW.
   *
-  * Scope: requires the dir-version [[TableFormat]] (plain parquet
-  * snapshot dirs). Manifest-format tables promote through session-catalog
-  * suffix targets — their read path is a multi-commit union no standalone
-  * file scan can express; [[SparkMaterializer.promote]] rejects the
-  * combination up front.
+  * Scope: the entry scans [[DirVersionFormat]]'s plain parquet snapshot
+  * dirs directly, with no session-side view in between.
   *
   * Managed physical columns (`__graft_*` partition keys) are hidden from
   * the catalog schema exactly like the session-catalog view's

@@ -38,8 +38,8 @@ class SparkMaterializer(val spark: SparkSession,
                         formatOverride: Option[TableFormat] = None) {
 
   /** The storage/commit protocol (see [[TableFormat]]): every physical
-    * read/commit below routes through this seam, so an open-table-format
-    * backend swaps in without touching any strategy logic. */
+    * read/commit below routes through this seam. `formatOverride` lets a
+    * test wrap the default [[DirVersionFormat]]. */
   val format: TableFormat = formatOverride.getOrElse(new DirVersionFormat(spark))
   import SparkMaterializer._
 
@@ -68,8 +68,8 @@ class SparkMaterializer(val spark: SparkSession,
   def versions(t: PhysicalTable): Seq[Int] = format.versions(t)
 
   /** Driver-side partition metadata of the current snapshot (see
-    * [[TableFormat.partitionValues]]); None when the format can't say. */
-  def partitionValues(t: PhysicalTable): Option[Seq[Map[String, String]]] =
+    * [[TableFormat.partitionValues]]). */
+  def partitionValues(t: PhysicalTable): Seq[Map[String, String]] =
     format.partitionValues(t)
 
   /** Time travel: read the table as of a specific committed version
@@ -490,17 +490,12 @@ class SparkMaterializer(val spark: SparkSession,
     * root.py:120): the virtual-layer entry lands in a registered
     * [[EnvCatalog]] as a zero-copy handle onto the physical root —
     * repointing semantics identical to the view path (the handle resolves
-    * the CURRENT snapshot at read time). Vanilla-Spark limitation, checked
-    * here: only the dir-version format's plain parquet snapshot dirs can
-    * back a standalone catalog scan (the manifest read is a multi-commit
-    * union only the session can plan). `virtualProperties` don't apply —
-    * catalog entries carry no DDL surface for TBLPROPERTIES. */
+    * the CURRENT `v<N>` parquet snapshot dir at read time).
+    * `virtualProperties` don't apply — catalog entries carry no DDL
+    * surface for TBLPROPERTIES. */
   def promoteCatalog(catalog: String, envDb: String, viewName: String,
                      physical: PhysicalTable,
                      virtualProperties: Map[String, String] = Map.empty): Unit = {
-    require(format.name == "dir-versions",
-      s"environment catalogs require the dir-version table format " +
-        s"(this context uses '${format.name}'); use schema/table suffix targets")
     // catalog entries carry no DDL surface for TBLPROPERTIES — a model
     // routing virtual_properties into a catalog target must not lose them
     // SILENTLY (grants/ownership tooling keys on these)

@@ -4,12 +4,12 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The storage/commit protocol behind [[PhysicalTable]] — the seam an
-  * open-table-format backend (Delta, Iceberg) would implement with its own
-  * transaction log instead of the default copy-on-write version-directory
-  * scheme (reference WAP is Iceberg-native, engine_adapter/spark.py:492-533;
-  * this trait is where that protocol plugs in without touching any
-  * evaluation strategy).
+/** The storage/commit protocol behind [[PhysicalTable]]. Its one
+  * implementation is [[DirVersionFormat]]'s copy-on-write version
+  * directories; the trait keeps the protocol behind one interface so a test
+  * can wrap it and prove that no strategy in [[SparkMaterializer]] bypasses
+  * it. (The reference owns no commit protocol: its WAP uses the
+  * warehouse's, e.g. Iceberg in engine_adapter/spark.py:492-533.)
   *
   * Everything ABOVE this seam — merge emulation, SCD2, insert-overwrite
   * guards, schema migration — is storage-agnostic composition in
@@ -17,12 +17,11 @@ import org.apache.spark.sql.functions._
   * read, versioned, and bound into the catalog:
   *
   *  - `createOrReplace`: publish a full new table snapshot atomically
-  *    (Delta: `overwrite`; dir scheme: write v(N+1), repoint the view)
+  *    (write v(N+1), repoint the view)
   *  - `append`: add rows to the current snapshot
   *  - `overwritePartitions`: replaceWhere-shaped dynamic partition
   *    overwrite — only partitions present in `df` are replaced; `staged`
-  *    must be true when `df` reads the table being written (formats with
-  *    snapshot isolation may ignore it)
+  *    must be true when `df` reads the table being written
   *  - `timeTravel`/`versions`: read a prior committed snapshot
   *  - `rollbackTo`: discard snapshots after a kept one (the WAP
   *    rollback half)
@@ -64,7 +63,6 @@ object TableFormat {
 }
 
 trait TableFormat {
-  def name: String
   /** Opaque token for the current committed snapshot (the dir scheme's
     * `v<N>` path), None before the first commit. Callers treat it as
     * "has data" + a WAP bookmark for [[rollbackTo]]. */
@@ -93,11 +91,10 @@ trait TableFormat {
   /** Catalog-level rename; data stays where it is. */
   def renameTable(t: PhysicalTable, newTable: String): PhysicalTable
   /** Committed partition values of the current snapshot, as driver-side
-    * METADATA (dir names / manifest entries — never a data scan). None =
-    * this format can't say (callers must assume anything may exist);
-    * Some(Nil) = table exists with no partition dirs (or no data). Used by
-    * the one-pass audit fast-path to prove an interval has no prior rows. */
-  def partitionValues(t: PhysicalTable): Option[Seq[Map[String, String]]] = None
+    * METADATA (partition dir names — never a data scan). Nil = no
+    * partition dirs (unpartitioned, or no data). Used by the one-pass audit
+    * fast-path to prove an interval has no prior rows. */
+  def partitionValues(t: PhysicalTable): Seq[Map[String, String]]
 }
 
 /** Default [[TableFormat]]: plain parquet under copy-on-write version
@@ -105,12 +102,9 @@ trait TableFormat {
   * current one. Full replaces roll a new dir and repoint — readers of the
   * old version are never disturbed, prior versions stay for time travel
   * until the janitor reclaims them; appends and dynamic partition
-  * overwrites land in the current dir. Works on any Hadoop filesystem with
-  * no table-format dependency — object-store deployments wanting
-  * log-backed commits implement the trait instead. */
+  * overwrites land in the current dir. Works on any Hadoop filesystem,
+  * with no Delta or Iceberg dependency. */
 final class DirVersionFormat(spark: SparkSession) extends TableFormat {
-  def name: String = "dir-versions"
-
   private def fs(p: Path) =
     p.getFileSystem(spark.sessionState.newHadoopConf())
 
@@ -131,8 +125,8 @@ final class DirVersionFormat(spark: SparkSession) extends TableFormat {
   }
 
   /** One recursive listing of the current version dir — metadata only. */
-  override def partitionValues(t: PhysicalTable): Option[Seq[Map[String, String]]] =
-    Some(currentDataDir(t).map { dir =>
+  def partitionValues(t: PhysicalTable): Seq[Map[String, String]] =
+    currentDataDir(t).map { dir =>
       val base0 = new Path(dir); val f = fs(base0)
       val base = f.makeQualified(base0)
       val found = scala.collection.mutable.Set[Map[String, String]]()
@@ -149,7 +143,7 @@ final class DirVersionFormat(spark: SparkSession) extends TableFormat {
         }
       }
       found.toSeq
-    }.getOrElse(Nil))
+    }.getOrElse(Nil)
 
   /** True when `dir` holds at least one parquet data file. A partitioned
     * write of ZERO rows emits no files at all, so schema inference over the

@@ -105,10 +105,13 @@ object Barrier {
     * plan tree by reference, so the action cannot fire while any
     * downstream consumer — a derived Dataset, a temp view, a running
     * action — can still reach the cache; once the caller drops the last
-    * reference, the next GC cycle unpersists the helpers. Worst case on a
-    * false-early drop (a caller holding only a physical plan or RDD) is a
-    * recompute, never a wrong result — unpersist only removes the cache.
-    * Returns `result` for chaining.
+    * reference, the next GC cycle releases the helpers. On a false-early
+    * drop (a caller holding only a physical plan or RDD) the outcome
+    * depends on the helper's kind: a PERSISTED helper's consumer
+    * recomputes it (slow, still correct), but a CHECKPOINTED helper's
+    * blocks are the only copy of its data — the truncated lineage cannot
+    * rebuild them — so that surviving consumer FAILS with missing
+    * checkpoint blocks. Returns `result` for chaining.
     *
     * RETENTION CONTRACT for callers (the two edges of tying release to
     * reachability):
@@ -116,8 +119,9 @@ object Barrier {
     *    as long as you want the helper caches warm. A caller that extracts
     *    and retains only `result.queryExecution.executedPlan` or the
     *    underlying RDD has dropped the logical tree — the helpers may
-    *    release early and later actions silently recompute (correct, but
-    *    corpus-priced). Hold the Dataset, not its internals.
+    *    release early, and later actions then recompute persisted helpers
+    *    (corpus-priced) or fail on checkpointed ones. Hold the Dataset,
+    *    not its internals.
     *  - Conversely, parking the result in a long-lived reference (a REPL
     *    val, a registered temp view, a driver-side registry) pins the
     *    helper caches for that lifetime BY DESIGN — that is what keeps a
@@ -133,9 +137,10 @@ object Barrier {
     cleaner.register(result.queryExecution.commandExecuted, () =>
       helpers.foreach { df =>
         // persisted helper → CacheManager unpersist; checkpointed helper
-        // (LogicalRDD) → drop its RDD blocks; both no-op on the other kind
-        try { df.unpersist(blocking = false); release(df) }
-        catch { case _: Throwable => () }
+        // (LogicalRDD) → drop its RDD blocks; both no-op on the other kind.
+        // Separate trys: a failed unpersist must not skip the block release.
+        try df.unpersist(blocking = false) catch { case _: Throwable => () }
+        try release(df) catch { case _: Throwable => () }
       })
     result
   }

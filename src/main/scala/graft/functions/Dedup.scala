@@ -594,8 +594,8 @@ object Dedup {
   /** Exact row count from parquet footers — driver-side metadata reads
     * only, no executor scan. The metadata-sizing source for
     * [[incrementalExactBloomCached]]'s `expectedKeys` when the corpus is a
-    * parquet-backed table (dir-version and manifest TableFormats both
-    * store plain parquet under the data dir). None when the dir is absent. */
+    * parquet-backed table (the dir-version TableFormat stores plain
+    * parquet under the data dir). None when the dir is absent. */
   def parquetRowCount(spark: org.apache.spark.sql.SparkSession, dir: String): Option[Long] = {
     val conf = spark.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(dir)

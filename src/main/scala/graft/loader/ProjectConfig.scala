@@ -29,7 +29,6 @@ import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
   * environment_suffix_target: schema | table
   * state_dir: .graft        # workspace root, relative to the project dir
   * state_connection: 'jdbc:derby:/shared/state;create=true'  # DB-backed state
-  * table_format: dir | manifest    # physical commit protocol (TableFormat)
   * concurrency: 4
   * before_all: [ "SET x=1" ]
   * after_all: []
@@ -51,9 +50,6 @@ final case class ProjectConfig(
     /** shared state backend (`jdbc:` URL or `hdfs://` URI) — reference
       * config/connection.py `state_connection`. */
     stateConnection: Option[String] = None,
-    /** physical storage backend: "dir" (default copy-on-write version dirs)
-      * or "manifest" (log-backed commits) — see graft.adapter.TableFormat. */
-    tableFormat: Option[String] = None,
     concurrency: Option[Int] = None,
     beforeAll: Seq[String] = Nil,
     afterAll: Seq[String] = Nil,
@@ -112,6 +108,7 @@ object ProjectConfig {
       case n              => Seq(n.asText)
     }.getOrElse(Nil)
 
+    textOpt(root, "table_format").foreach(refuseRemovedTableFormat)
     val linter = Option(root.get("linter"))
     ProjectConfig(
       modelDefaults = defaults,
@@ -122,7 +119,6 @@ object ProjectConfig {
       environmentSuffixTarget = textOpt(root, "environment_suffix_target"),
       stateDir = textOpt(root, "state_dir"),
       stateConnection = textOpt(root, "state_connection"),
-      tableFormat = textOpt(root, "table_format"),
       concurrency = textOpt(root, "concurrency").map(_.toInt),
       beforeAll = strList("before_all"),
       afterAll = strList("after_all"),
@@ -132,6 +128,18 @@ object ProjectConfig {
       linterRules = ruleSet(linter, "rules"),
       linterWarnRules = ruleSet(linter, "warn_rules"))
   }
+
+  /** `table_format` (config key) / `--table-format` (CLI flag) selected a
+    * second, manifest-log table format that no longer exists. Its tables
+    * hold no `v<N>` snapshot dirs, so the dir format would read every one
+    * as empty while the state store still records their intervals as done:
+    * refuse loudly instead of ignoring the setting. `dir` is accepted. */
+  def refuseRemovedTableFormat(value: String): Unit =
+    if (value != "dir") throw new IllegalArgumentException(
+      s"table_format '$value' is no longer supported: the manifest table " +
+        "format was removed and every table is stored as dir-version " +
+        "snapshots. Rebuild the workspace (delete its state and physical " +
+        "dirs, then plan and apply again) and drop the table_format setting.")
 
   /** A linter rule list: YAML array or a single scalar, lowercased
     * (reference LinterConfig.rules_validator). */

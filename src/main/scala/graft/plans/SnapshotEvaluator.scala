@@ -365,7 +365,7 @@ class SnapshotEvaluator(
         // audited interval, which the batch can't see. Unpartitioned
         // tables rewrite the whole range (DELETE_INSERT) — always sound;
         // auto-time partitioning proves freshness from driver-side
-        // partition METADATA (manifest entries / one dir listing); custom
+        // partition METADATA (one dir listing); custom
         // partitioning can't prove it, so it keeps the query path.
         if (t.partitionedBy.isEmpty) true
         else if (!autoTimePartitioned(s.model)) false
@@ -374,9 +374,9 @@ class SnapshotEvaluator(
             .ofPattern(timePartPattern(s.model)).withZone(java.time.ZoneOffset.UTC)
           val loS = fmtr.format(java.time.Instant.ofEpochMilli(interval.start))
           val hiS = fmtr.format(java.time.Instant.ofEpochMilli(interval.end - 1))
-          materializer.partitionValues(t).exists(_.forall(pv =>
+          materializer.partitionValues(t).forall(pv =>
             pv.get(SnapshotEvaluator.TimePartitionCol)
-              .forall(v => v < loS || v > hiS)))
+              .forall(v => v < loS || v > hiS))
         }
       case _ => false
     }

@@ -61,17 +61,13 @@ object KindQueries {
         |WHERE o_orderdate >= TIMESTAMP '1995-01-01' AND o_orderdate < TIMESTAMP '1995-04-01'
         |GROUP BY 1 ORDER BY d""".stripMargin)),
 
-    // ------------- same incremental cycle on the MANIFEST table format ----
+    // ------------- same incremental cycle on a second context -------------
     "mk_manifest_format" -> Entry((s, dir) => {
-      // the log-backed commit protocol (adapter/ManifestFormat.scala) under
-      // the REAL framework: plan + batched run commit through versioned
-      // manifests (createOrReplace, then dynamic partition overwrites as
-      // manifest-entry replacement) — end state must hash-match the same
-      // oracle the dir-scheme entry uses
-      val c = new GraftContext(s,
-        java.nio.file.Files.createTempDirectory("graft_kind_mf").toString,
-        concurrency = 2, tableFormat = Some("manifest"))
-      tables.foreach(t => c.addExternal(s"raw.$t", externalFor(s, dir, t)))
+      // named for a removed second table format; it now repeats
+      // mk_incremental_by_time on a fresh workspace under another model
+      // name. The name and oracle SQL stay so the oracle's entry set is
+      // unchanged.
+      val c = ctx(s, dir)
       c.addModel(Model(
         name = "mart.mf_daily_rev",
         body = SqlBody(

@@ -695,37 +695,43 @@ class MainCliSpec extends AnyFunSuite {
       && shown.contains("o_custkey"), shown)
   }
 
-  test("table_format: manifest drives a full plan/run/audit cycle end-to-end") {
-    val proj = SparkTestSession.tmpDir("cli-manifest")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(proj, "config.yaml"),
-      "table_format: manifest\n")
+  test("table_format: a removed format is refused before plan or run; dir is accepted") {
+    val proj = SparkTestSession.tmpDir("cli-tblfmt")
+    val config = java.nio.file.Paths.get(proj, "config.yaml")
+    java.nio.file.Files.writeString(config, "table_format: manifest\n")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(proj, "daily.sql"),
       """MODEL (
-        |  name mfmt.daily,
+        |  name tfmt.daily,
         |  kind INCREMENTAL_BY_TIME_RANGE (time_column o_orderdate),
-        |  start '1995-01-01',
-        |  audits (not_null(columns = (o_orderdate)))
+        |  start '1995-01-01'
         |);
         |SELECT o_orderdate, count(*) AS n FROM raw.orders
         |WHERE o_orderdate BETWEEN @start_dt AND @end_dt GROUP BY o_orderdate
         |""".stripMargin)
     val base = Seq("--project", proj, "--external", s"raw.orders=$sf/orders.parquet")
-    assert(cli(Seq("plan", "prod", "--start", "1995-01-01",
-      "--end", "1995-01-08", "--auto-apply") ++ base: _*)._1 == 0)
-    val n1 = spark.table("mfmt.daily").count()
+    val plan = Seq("plan", "prod", "--start", "1995-01-01", "--end", "1995-01-08",
+      "--auto-apply")
+    val run = Seq("run", "prod", "--start", "1995-01-01", "--end", "1995-01-15")
+    def refused(out: String) =
+      out.contains("table_format 'manifest' is no longer supported") &&
+        out.contains("manifest table format was removed") &&
+        out.contains("Rebuild the workspace")
+    // config key: refused before the context exists — no state, no table
+    val (c1, o1) = cli(plan ++ base: _*)
+    assert(c1 == 1 && refused(o1), o1)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(proj, ".graft")))
+    assert(!spark.catalog.tableExists("tfmt.daily"))
+    // `dir` names the one format there is: accepted and ignored
+    java.nio.file.Files.writeString(config, "table_format: dir\n")
+    assert(cli(plan ++ base: _*)._1 == 0)
+    val n1 = spark.table("tfmt.daily").count()
     assert(n1 > 0)
-    // incremental extension commits through the manifest log, earlier
-    // intervals intact
-    assert(cli(Seq("run", "prod", "--start", "1995-01-01",
-      "--end", "1995-01-15") ++ base: _*)._1 == 0)
-    assert(spark.table("mfmt.daily").count() > n1)
-    val (ca, audited) = cli(Seq("audit", "mfmt.daily") ++ base: _*)
-    assert(ca == 0 && audited.contains("PASS"), audited)
-    // the physical root is manifest-shaped (no v* dirs)
-    val phys = java.nio.file.Paths.get(proj, ".graft", "physical")
-    val roots = java.nio.file.Files.list(phys).toArray.map(_.toString)
-    assert(roots.exists(r =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(r, "_manifests"))), roots.mkString(","))
+    // CLI flag: refused the same way, and the run does not happen
+    val (c2, o2) = cli(run ++ base ++ Seq("--table-format", "manifest"): _*)
+    assert(c2 == 1 && refused(o2), o2)
+    assert(spark.table("tfmt.daily").count() == n1)
+    assert(cli(run ++ base ++ Seq("--table-format", "dir"): _*)._1 == 0)
+    assert(spark.table("tfmt.daily").count() > n1)
   }
 
   test("dbt source freshness classifies fresh/stale sources from loaded_at_field") {

@@ -8,20 +8,19 @@ import graft.core.ModelKind
 
 /** The [[TableFormat]] seam contract: (a) every physical read/commit the
   * materializer performs routes THROUGH the injected format — no bypass, so
-  * an open-table-format backend really does take over the commit protocol;
-  * (b) the full strategy surface (replace, append, time/partition overwrite,
-  * merge, SCD2, compact, WAP rollback, time travel) behaves identically when
-  * driven through an explicitly-injected format instance. */
+  * the format alone owns the commit protocol; (b) the full strategy surface
+  * (replace, append, time/partition overwrite, merge, SCD2, compact, WAP
+  * rollback, time travel) behaves correctly when driven through an
+  * explicitly-injected [[DirVersionFormat]]. */
 class TableFormatSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   /** Counting pass-through: proves the materializer never sidesteps the
-    * seam (a Delta/Iceberg impl would otherwise silently not take over). */
+    * seam. */
   final class Recording(inner: TableFormat) extends TableFormat {
     val calls = collection.mutable.Buffer[String]()
     private def rec[A](op: String)(a: => A): A = { calls += op; a }
-    def name = "recording:" + inner.name
     def currentDataDir(t: PhysicalTable) = rec("currentDataDir")(inner.currentDataDir(t))
     def read(t: PhysicalTable) = rec("read")(inner.read(t))
     def createOrReplace(t: PhysicalTable, df: DataFrame, clusterFiles: Option[Int]) =
@@ -44,28 +43,20 @@ class TableFormatSpec extends AnyFunSuite {
       rec("cloneTable")(inner.cloneTable(target, source))
     def renameTable(t: PhysicalTable, newTable: String) =
       rec("renameTable")(inner.renameTable(t, newTable))
+    def partitionValues(t: PhysicalTable) =
+      rec("partitionValues")(inner.partitionValues(t))
   }
 
-  // the whole contract runs against BOTH formats: the default dir scheme
-  // and the log-backed manifest format — same strategies, same results,
-  // different commit protocol (the point of the seam)
-  private val formats: Seq[(String, () => TableFormat)] = Seq(
-    "dir" -> (() => new DirVersionFormat(spark)),
-    "manifest" -> (() => new ManifestFormat(spark)))
-
-  private def harness(mk: () => TableFormat) = {
-    val fmt = new Recording(mk())
+  private def harness() = {
+    val fmt = new Recording(new DirVersionFormat(spark))
     (new SparkMaterializer(spark, Some(fmt)), fmt)
   }
-  private def tbl(fmtName: String, name: String, parts: Seq[String] = Nil) =
-    PhysicalTable("graft__fmt", s"${name}_$fmtName",
-      SparkTestSession.tmpDir(s"fmt_${fmtName}_$name"), parts)
+  private def tbl(name: String, parts: Seq[String] = Nil) =
+    PhysicalTable("graft__fmt", name, SparkTestSession.tmpDir(s"fmt_$name"), parts)
 
-  for ((fmtName, mk) <- formats) {
-
-  test(s"[$fmtName] replace/append/overwrite/merge/compact route through the format") {
-    val (m, fmt) = harness(mk)
-    val t = tbl(fmtName, "routed", parts = Seq("d"))
+  test("[dir] replace/append/overwrite/merge/compact route through the format") {
+    val (m, fmt) = harness()
+    val t = tbl("routed", parts = Seq("d"))
     m.replaceQuery(t, Seq((1, "a", "x"), (2, "b", "y")).toDF("id", "v", "d"))
     m.insertAppend(t, Seq((3, "c", "y")).toDF("id", "v", "d"))
     m.insertOverwriteByPartition(t, Seq((4, "B", "y")).toDF("id", "v", "d"))
@@ -84,9 +75,9 @@ class TableFormatSpec extends AnyFunSuite {
     assert(got == Set((1, "a", "x"), (4, "B2", "y")))
   }
 
-  test(s"[$fmtName] time-partition overwrite leaves other intervals intact") {
-    val (m, fmt) = harness(mk)
-    val t = tbl(fmtName, "tp", parts = Seq("__graft_ts"))
+  test("[dir] time-partition overwrite leaves other intervals intact") {
+    val (m, fmt) = harness()
+    val t = tbl("tp", parts = Seq("__graft_ts"))
     def day(d: String) = java.sql.Timestamp.valueOf(s"$d 00:00:00")
     def df(rows: (Int, String)*) = rows.toSeq
       .map { case (id, d) => (id, day(d)) }.toDF("id", "ts")
@@ -99,9 +90,9 @@ class TableFormatSpec extends AnyFunSuite {
     assert(m.read(t).select("id").as[Int].collect().toSet == Set(1, 20))
   }
 
-  test(s"[$fmtName] versions/time travel/WAP rollback are format-owned") {
-    val (m, fmt) = harness(mk)
-    val t = tbl(fmtName, "tt")
+  test("[dir] versions/time travel/WAP rollback are format-owned") {
+    val (m, fmt) = harness()
+    val t = tbl("tt")
     m.replaceQuery(t, Seq(1).toDF("id"))
     val bookmark = m.currentDataDir(t)
     m.replaceQuery(t, Seq(1, 2).toDF("id"))
@@ -113,9 +104,9 @@ class TableFormatSpec extends AnyFunSuite {
     assert(Seq("versions", "timeTravel", "rollbackTo").forall(fmt.calls.contains))
   }
 
-  test(s"[$fmtName] SCD2 through an injected format produces the same history") {
-    val (m, fmt) = harness(mk)
-    val t = tbl(fmtName, "scd")
+  test("[dir] SCD2 through an injected format produces the same history") {
+    val (m, fmt) = harness()
+    val t = tbl("scd")
     val kind = ModelKind.ScdType2ByTime(uniqueKey = Seq("id"), updatedAtCol = "ua")
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     m.scdType2ByTime(t, Seq((1, "a", ts("2024-01-01 00:00:00"))).toDF("id", "v", "ua"),
@@ -129,9 +120,9 @@ class TableFormatSpec extends AnyFunSuite {
     assert(fmt.calls.count(_ == "createOrReplace") == 2)
   }
 
-  test(s"[$fmtName] vacuum reclaims old snapshots, keeps time travel for the rest") {
-    val (m, fmt) = harness(mk)
-    val t = tbl(fmtName, "vac")
+  test("[dir] vacuum reclaims old snapshots, keeps time travel for the rest") {
+    val (m, fmt) = harness()
+    val t = tbl("vac")
     m.replaceQuery(t, Seq(1).toDF("id"))
     m.replaceQuery(t, Seq(1, 2).toDF("id"))
     m.replaceQuery(t, Seq(1, 2, 3).toDF("id"))
@@ -147,42 +138,39 @@ class TableFormatSpec extends AnyFunSuite {
     assert(fmt.calls.contains("vacuum"))
   }
 
-  test(s"[$fmtName] catalog view round-trips escaped partition values") {
+  test("[dir] catalog view round-trips escaped partition values") {
     // partition values with ':' are Hive-escaped in dir names (k=a%3Ab);
-    // the catalog view must show the REAL value (r8 review finding for the
-    // manifest format's rebuilt partition literals)
-    val (m, _) = harness(mk)
-    val t = tbl(fmtName, "esc", parts = Seq("k"))
+    // the catalog view must show the REAL value
+    val (m, _) = harness()
+    val t = tbl("esc", parts = Seq("k"))
     m.replaceQuery(t, Seq((1, "a:b"), (2, "plain")).toDF("id", "k"))
-    val viaView = spark.table(s"graft__fmt.esc_$fmtName")
+    val viaView = spark.table("graft__fmt.esc")
       .select("id", "k").as[(Int, String)].collect().toSet
     assert(viaView == Set((1, "a:b"), (2, "plain")))
     val viaRead = m.read(t).select("id", "k").as[(Int, String)].collect().toSet
     assert(viaRead == viaView)
   }
 
-  test(s"[$fmtName] clone and rename are format-owned") {
-    val (m, fmt) = harness(mk)
-    val src = tbl(fmtName, "cl_src2"); val dst = tbl(fmtName, "cl_dst2")
+  test("[dir] clone and rename are format-owned") {
+    val (m, fmt) = harness()
+    val src = tbl("cl_src2"); val dst = tbl("cl_dst2")
     m.replaceQuery(src, Seq(1, 2).toDF("id"))
     m.cloneTable(dst, src)
-    assert(spark.table(s"graft__fmt.cl_dst2_$fmtName").count() == 2)
-    m.renameTable(src, s"cl_src2_renamed_$fmtName")
-    assert(spark.table(s"graft__fmt.cl_src2_renamed_$fmtName").count() == 2)
+    assert(spark.table("graft__fmt.cl_dst2").count() == 2)
+    m.renameTable(src, "cl_src2_renamed")
+    assert(spark.table("graft__fmt.cl_src2_renamed").count() == 2)
     assert(Seq("cloneTable", "renameTable").forall(fmt.calls.contains))
   }
 
-  test(s"[$fmtName] vacuum reclaims a crashed writer's orphan dirs, live commits untouched") {
-    val (m, _) = harness(mk)
-    val t = tbl(fmtName, "orphan", parts = Seq("d"))
+  test("[dir] vacuum reclaims a crashed writer's orphan dirs, live commits untouched") {
+    val (m, _) = harness()
+    val t = tbl("orphan", parts = Seq("d"))
     m.replaceQuery(t, Seq((1, "a"), (2, "b")).toDF("id", "d"))
     m.insertAppend(t, Seq((3, "c")).toDF("id", "d"))
-    // simulate crashed writers: a data dir that no manifest/pointer ever
-    // published (c99 for the log format) and an abandoned staging dir
-    // (tmp_* in the dir scheme) — both accumulate on object stores
+    // simulate crashed writers: abandoned staging dirs (tmp_*) — they
+    // accumulate on object stores
     val root = new java.io.File(t.root)
-    val debris = Seq(new java.io.File(root, if (fmtName == "manifest") "c99" else "tmp_123"),
-      new java.io.File(root, if (fmtName == "manifest") "c42" else "tmp_9"))
+    val debris = Seq(new java.io.File(root, "tmp_123"), new java.io.File(root, "tmp_9"))
     debris.foreach { d =>
       d.mkdirs()
       java.nio.file.Files.writeString(
@@ -193,106 +181,5 @@ class TableFormatSpec extends AnyFunSuite {
     // live data intact through the same view and a fresh read
     assert(m.read(t).select("id").as[Int].collect().toSet == Set(1, 2, 3))
     assert(spark.table(t.qualified).count() == 3)
-  }
-  }
-
-  test("manifest view text is O(commits): fully-live commits collapse, partial fall back") {
-    val m = new SparkMaterializer(spark, Some(new ManifestFormat(spark)))
-    val t = tbl("vtext", "collapse", parts = Seq("d"))
-    def viewText: String =
-      spark.sql(s"SHOW CREATE TABLE ${t.qualified}").head().getString(0)
-    // one UNION branch per live unit: collapsed commits read their external
-    // helper table (`graft_sys`.…), per-entry fallbacks read parquet.`dir`
-    def branches: Int = "UNION ALL".r.findAllIn(viewText).length + 1
-    // c0: three partitions, fully live → ONE select for the whole commit
-    m.replaceQuery(t, Seq((1, "x", "a"), (2, "y", "b"), (3, "z", "c"))
-      .toDF("id", "v", "d"))
-    assert(branches == 1, s"fully-live commit not collapsed: $branches")
-    // c1 appends two more partitions → one more branch, still O(commits)
-    m.insertAppend(t, Seq((4, "p", "e"), (5, "q", "f")).toDF("id", "v", "d"))
-    assert(branches == 2)
-    assert(m.read(t).count() == 5)
-    // replacing ONE of c0's partitions supersedes part of c0: c0 falls back
-    // to per-entry selects (2 live) so the stale dir is never resurrected;
-    // c1 and the new c2 stay collapsed → 2 + 1 + 1
-    m.insertOverwriteByPartition(t, Seq((30, "Z", "c")).toDF("id", "v", "d"))
-    assert(branches == 4, s"partial commit must fall back per-entry: $branches")
-    // the fallback branches are the only parquet-path reads; collapsed
-    // commits go through their declared-schema helper tables
-    assert("FROM parquet".r.findAllIn(viewText).length == 2)
-    assert("`graft_sys`".r.findAllIn(viewText).length == 2)
-    val got = m.read(t).select("id").as[Int].collect().toSet
-    assert(got == Set(1, 2, 30, 4, 5))
-    assert(m.read(t).filter($"d" === "e").select("id").as[Int].collect().toSeq == Seq(4))
-    assert(spark.table(t.qualified).filter($"d" === "a").count() == 1)
-  }
-
-  test("manifest: numeric-looking STRING partition values collapse AND survive exactly") {
-    // partition inference would coerce "0001" to int 1 ("1" after cast). The
-    // collapsed branch reads a per-commit external table whose DECLARED
-    // schema pins the type, so even digit-leading string partitions stay
-    // O(commits) in the view text with exact round-trip — no inference
-    // anywhere (the daily-grain "2024-01-01" string partition is the common
-    // case this protects).
-    val m = new SparkMaterializer(spark, Some(new ManifestFormat(spark)))
-    val t = tbl("strpart", "codes", parts = Seq("code"))
-    m.replaceQuery(t, Seq((1, "0001"), (2, "007"), (3, "plain"))
-      .toDF("id", "code"))
-    val text = spark.sql(s"SHOW CREATE TABLE ${t.qualified}").head().getString(0)
-    assert(!text.contains("UNION ALL") && text.contains("`graft_sys`"),
-      s"digit-leading string partitions must still collapse via helper: $text")
-    assert(m.read(t).select("code").as[String].collect().toSet ==
-      Set("0001", "007", "plain"))
-    assert(spark.table(t.qualified).select("code").as[String].collect().toSet ==
-      Set("0001", "007", "plain"))
-    assert(spark.table(t.qualified).filter($"code" === "0001")
-      .select("id").as[Int].collect().toSeq == Seq(1))
-    // a daily-grain string date partition: collapsed, exact, prunable
-    val t2 = tbl("strpart2", "days", parts = Seq("d"))
-    m.replaceQuery(t2, Seq((1, "2024-01-01"), (2, "2024-01-02")).toDF("id", "d"))
-    m.insertAppend(t2, Seq((3, "2024-01-03")).toDF("id", "d"))
-    val text2 = spark.sql(s"SHOW CREATE TABLE ${t2.qualified}").head().getString(0)
-    assert("UNION ALL".r.findAllIn(text2).length == 1) // 2 commits, O(commits)
-    assert(spark.table(t2.qualified).select("d").as[String].collect().toSet ==
-      Set("2024-01-01", "2024-01-02", "2024-01-03"))
-    assert(spark.table(t2.qualified).filter($"d" === "2024-01-03")
-      .select("id").as[Int].collect().toSeq == Seq(3))
-  }
-
-  test("manifest commits serialize over a concurrent writer; rename guards the race") {
-    // optimistic-concurrency contract (Delta/Iceberg commit shape), both
-    // halves: (1) a writer whose base snapshot is superseded BEFORE it reads
-    // re-reads the latest manifest and serializes on top — no lost update;
-    // (2) the read→publish window is guarded by Hadoop rename refusing an
-    // existing destination, so a true same-version race loses loudly
-    // instead of clobbering the winner.
-    val m = new SparkMaterializer(spark, Some(new ManifestFormat(spark)))
-    val t = tbl("conflict", "race")
-    m.replaceQuery(t, Seq((1, "a")).toDF("id", "v")) // publishes m0
-    // a "concurrent writer" lands m1 (same content, bumped version)
-    val mdir = new java.io.File(t.root, "_manifests")
-    val m0 = new String(java.nio.file.Files.readAllBytes(
-      new java.io.File(mdir, "m0.json").toPath), "UTF-8")
-    java.nio.file.Files.writeString(new java.io.File(mdir, "m1.json").toPath,
-      m0.replace("\"version\":0", "\"version\":1"))
-    // (1) append sees m1 as its base and publishes m2 on top of it
-    m.insertAppend(t, Seq((2, "b")).toDF("id", "v"))
-    assert(new java.io.File(mdir, "m2.json").exists)
-    assert(m.read(t).select("id").as[Int].collect().toSet == Set(1, 2))
-    // (2) the atomic-publish primitive: rename onto an existing manifest
-    // returns false (POSIX-overwrite semantics would silently lose m2)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dirPath = new org.apache.hadoop.fs.Path(mdir.toString)
-    val hfs = dirPath.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(dirPath, ".m2.json.tmp")
-    val out = hfs.create(tmp, true)
-    out.write("{\"version\":2,\"entries\":[]}".getBytes("UTF-8")); out.close()
-    val before = java.nio.file.Files.readAllBytes(
-      new java.io.File(mdir, "m2.json").toPath).toSeq
-    assert(!hfs.rename(tmp, new org.apache.hadoop.fs.Path(dirPath, "m2.json")),
-      "rename over an existing manifest must fail — the conflict guard " +
-        "ManifestFormat.publish relies on")
-    assert(java.nio.file.Files.readAllBytes(
-      new java.io.File(mdir, "m2.json").toPath).toSeq == before)
   }
 }
