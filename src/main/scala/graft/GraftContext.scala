@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core._
 import graft.adapter.{PhysicalTable, SparkMaterializer}
-import graft.plans.{Renderer, Scheduler, Signals, SnapshotEvaluator}
+import graft.plans.{BatchPlanner, Renderer, Scheduler, Signals, SnapshotEvaluator}
 import graft.state.{EnvironmentRecord, InMemoryStateStore, StateStore}
 
 /** A plan: what changes and what gets backfilled (reference:
@@ -576,62 +576,69 @@ class GraftContext(
   /** Names of loaded standalone AUDIT files. */
   def standaloneAuditNames: Seq[String] = standaloneAudits.keys.toSeq
 
-  /** Per-model missing interval gaps in an environment's window (reference
-    * `sqlmesh check_intervals`, cli/main.py): what a `run` would backfill. */
-  def checkIntervals(env: String, start: Long, end: Long,
-                     select: Seq[String] = Nil): Map[String, Seq[Interval]] = {
+  /** An environment's snapshots as `run` resolves them — by identifier
+    * first, then by version. */
+  private def envSnapshots(env: String): Seq[Snapshot] = {
     val envRec = state.getEnvironment(env).getOrElse(
       throw new IllegalStateException(s"environment $env not planned"))
-    val snapsByName = envRec.snapshots.flatMap { case (name, v) =>
-      state.getSnapshot(name, v).map(name -> _)
-    }
+    envRec.snapshots.flatMap { case (n, v) =>
+      envRec.identifiers.get(n).flatMap(id => state.getSnapshotById(n, id))
+        .orElse(state.getSnapshot(n, v))
+    }.toSeq
+  }
+
+  /** Which snapshots use their `__dev` preview table (DeployabilityIndex). */
+  private def devFlagsOf(env: String, snaps: Seq[Snapshot]): Map[String, Boolean] = {
+    val index = DeployabilityIndex.of(snaps, snaps.map(s => s.model.name -> s.model.references).toMap)
+    snaps.map(s => s.model.name -> (env != "prod" && !index.isDeployable(s))).toMap
+  }
+
+  /** Per-model missing interval gaps in an environment's window (reference
+    * `sqlmesh check_intervals`, cli/main.py): what `run --ignore-cron`
+    * started now would process ([[BatchPlanner]]) — elapsed intervals only,
+    * whether or not the model's cron has fired for them yet. */
+  def checkIntervals(env: String, start: Long, end: Long,
+                     select: Seq[String] = Nil): Map[String, Seq[Interval]] = {
+    val snaps = envSnapshots(env)
     val chosen: String => Boolean =
       if (select.isEmpty) _ => true
-      else ModelSelector.expand(select, snapsByName.map { case (n, s) => n -> s.model }.toMap,
+      else ModelSelector.expand(select, snaps.map(s => s.model.name -> s.model).toMap,
         changedFiles = gitChangedFiles)
-    snapsByName.collect { case (name, s)
-        if s.model.kind.isMaterialized && chosen(name) =>
-      name -> IntervalAlgebra.merge(s.missingIntervals(start, end)).toSeq
-    }
+    val devFlags = devFlagsOf(env, snaps)
+    val now = System.currentTimeMillis()
+    snaps.collect { case s if s.model.kind.isMaterialized && chosen(s.model.name) =>
+      s.model.name -> BatchPlanner.pending(s, start, math.min(end, now), now,
+        devFlags(s.model.name), ignoreCron = true).gaps
+    }.toMap
   }
 
   /** Read-only schedule export for an external orchestrator (reference
     * `sqlmesh/schedulers/`): the environment's models with cron/unit/batch
-    * metadata, dependency edges, and the missing-interval batches a run
-    * over [start, end) would process — same merge + batch_size slicing as
-    * the built-in scheduler, computed WITHOUT recording anything. */
+    * metadata, dependency edges, and the batches a `run` started now would
+    * process ([[BatchPlanner]]), computed WITHOUT recording anything. */
   def exportSchedule(env: String, start: Long, end: Long): Seq[graft.plans.ScheduleExport.ModelSchedule] = {
-    val envRec = state.getEnvironment(env).getOrElse(
-      throw new IllegalStateException(s"environment $env not planned"))
-    val snapsByName = envRec.snapshots.flatMap { case (name, v) =>
-      state.getSnapshot(name, v).map(name -> _)
-    }
-    val names = snapsByName.map(_._1).toSet
-    snapsByName.collect { case (name, s) if s.model.kind.isMaterialized =>
+    val snaps = envSnapshots(env)
+    val names = snaps.map(_.model.name).toSet
+    val devFlags = devFlagsOf(env, snaps)
+    val now = System.currentTimeMillis()
+    snaps.collect { case s if s.model.kind.isMaterialized =>
       val m = s.model
-      val unit = m.intervalUnit
-      val batchSize = m.kind match {
-        case k: ModelKind.IncrementalByTimeRange => k.batchSize
-        case _ => None
-      }
-      val gaps = IntervalAlgebra.merge(s.missingIntervals(start, end)).toSeq
-      val batches = gaps.flatMap(g => batchSize match {
-        case Some(bs) if bs > 0 => IntervalAlgebra.batch(g, unit, bs, m.allowPartials)
-        case _ => Seq(g)
-      })
       graft.plans.ScheduleExport.ModelSchedule(
-        name = name,
+        name = m.name,
         kind = m.kind.name,
         cron = m.cron,
         cronTz = m.cronTz,
-        intervalUnit = unit.name,
-        batchSize = batchSize,
+        intervalUnit = m.intervalUnit.name,
+        batchSize = m.kind match {
+          case k: ModelKind.IncrementalByTimeRange => k.batchSize
+          case _ => None
+        },
         owner = m.owner,
         // within-project dependencies only: externals are inputs, not tasks
         dependsOn = m.references.filter(names.contains).toSeq.sorted,
-        hasSignal = signals.contains(name),
-        batches = batches)
-    }.toSeq.sortBy(_.name)
+        hasSignal = signals.contains(m.name),
+        batches = BatchPlanner.pending(s, start, end, now, devFlags(m.name)).batches)
+    }.sortBy(_.name)
   }
 
   /** Signal-gate probe backing the `signal-ready` CLI verb (the poke target
@@ -928,38 +935,72 @@ class GraftContext(
       minIntervals = minIntervals)
   }
 
-  /** Evaluate a plan: stages per plan/stages.py:238 — snapshot records →
-    * physical layer → restatement → backfill → environment record → virtual
-    * layer → finalize. */
+  /** Which snapshots [[apply]] previews in `__dev` tables, migrates in
+    * place, backfills (the rest only get an empty physical object) and
+    * repoints views at, plus the (model, version, interval) drops it makes
+    * before the backfill — decided once, so [[explain]] narrates the same. */
+  private final class ApplySteps(
+      val devFlags: Map[String, Boolean],
+      val migrating: Seq[Snapshot],
+      val drops: Seq[(String, String, Interval)],
+      val backfillable: Set[String],
+      val backfill: Seq[Snapshot],
+      val promoted: Seq[Snapshot])
+
+  private def applySteps(p: Plan): ApplySteps = {
+    val migrating = p.modified.collect {
+      case (_, nw) if nw.category.contains(ChangeCategory.ForwardOnly) &&
+        !p.isDevPreview(nw) => nw
+    }
+    // restatement against the PLAN's snapshot version (_build_restatements);
+    // effective_from keeps inherited intervals only BEFORE the floored
+    // effective date (snapshot/definition.py:970-977, :1425)
+    val drops = p.restatements.toSeq.flatMap { case (name, ivl) =>
+      p.snapshots.find(_.model.name == name).orElse(state.latestSnapshot(name))
+        .map(s => (name, s.version, ivl))
+    } ++ p.effectiveFrom.toSeq.flatMap(ef => migrating.map(nw =>
+      (nw.model.name, nw.version, Interval(nw.model.intervalUnit.floor(ef), Long.MaxValue / 2))))
+    val backfillable: Set[String] =
+      if (p.skipBackfill || p.emptyBackfill) Set.empty
+      else p.backfillSelected.getOrElse(p.envSnapshots.map(_.model.name).toSet)
+    new ApplySteps(
+      devFlags = p.snapshots.map(s => s.model.name -> p.isDevPreview(s)).toMap,
+      migrating = migrating,
+      drops = drops,
+      backfillable = backfillable,
+      backfill =
+        if (p.skipBackfill) Nil
+        else p.envSnapshots.filter(s => p.emptyBackfill || backfillable(s.model.name)),
+      promoted = p.envSnapshots.filter(_.model.kind.isMaterialized))
+  }
+
   /** `plan --explain` (reference sqlmesh/core/plan/explainer.py:38-160
-    * PlanExplainer): narrate, stage by stage, exactly what [[apply]] would
-    * do — snapshot records, restatement interval clears, physical-layer
-    * creates (dev previews flagged), in-place schema migrations, per-model
-    * backfill batches after cron capping, audit gates, the virtual-layer
-    * view repoints, and environment finalization — WITHOUT mutating state,
-    * tables, or views. The stage order below matches applyInner line for
-    * line, so the narration is the contract, not an approximation. */
+    * PlanExplainer): narrate, stage by stage, what [[apply]] would do —
+    * snapshot records, restatement interval clears, physical-layer creates
+    * (dev previews flagged), in-place schema migrations, per-model backfill
+    * batches, audit gates, the virtual-layer view repoints, and environment
+    * finalization — WITHOUT mutating state, tables, or views. Snapshots come
+    * from [[applySteps]]; batches from [[BatchPlanner]] over the intervals
+    * apply leaves: pushed, minus its drops and a due auto-restatement. */
   def explain(p: Plan, executionTs: Long = System.currentTimeMillis()): String = {
+    def iso(ms: Long) = java.time.Instant.ofEpochMilli(ms)
+    val steps = applySteps(p)
+    val devFlags = steps.devFlags
     val L = Seq.newBuilder[String]
-    L += s"explained plan → env '${p.env}'  [${java.time.Instant.ofEpochMilli(p.start)} … ${java.time.Instant.ofEpochMilli(p.end)})  (dry run — nothing applied)"
+    L += s"explained plan → env '${p.env}'  [${iso(p.start)} … ${iso(p.end)})  (dry run — nothing applied)"
     if (beforeAll.nonEmpty)
       L += s"├─ before_all: execute ${beforeAll.size} statement(s)"
     L += s"├─ snapshot records: push ${p.snapshots.size} snapshot(s) to state"
     if (p.restatements.nonEmpty) {
       L += "├─ restatement: clear processed intervals (re-run below)"
       p.restatements.foreach { case (n, iv) =>
-        L += s"│    ↻ $n  [${java.time.Instant.ofEpochMilli(iv.start)} … ${java.time.Instant.ofEpochMilli(iv.end)})"
+        L += s"│    ↻ $n  [${iso(iv.start)} … ${iso(iv.end)})"
       }
     }
     p.effectiveFrom.foreach { ef =>
-      val affected = p.modified.collect {
-        case (_, nw) if nw.category.contains(ChangeCategory.ForwardOnly) &&
-          !p.isDevPreview(nw) => nw.model.name
-      }
-      if (affected.nonEmpty)
-        L += s"├─ effective_from ${java.time.Instant.ofEpochMilli(ef)}: drop inherited intervals at/after it for ${affected.mkString(", ")}"
+      if (steps.migrating.nonEmpty)
+        L += s"├─ effective_from ${iso(ef)}: drop inherited intervals at/after it for ${steps.migrating.map(_.model.name).mkString(", ")}"
     }
-    val devFlags = p.snapshots.map(s => s.model.name -> p.isDevPreview(s)).toMap
     L += "├─ physical layer: validate SQL, create missing tables/views"
     p.snapshots.filter(_.model.kind.isMaterialized).foreach { s =>
       val t = evaluator.physicalTable(s, devFlags(s.model.name))
@@ -969,67 +1010,45 @@ class GraftContext(
           (if (devFlags(s.model.name)) ", dev preview" else "")
       L += s"│    ${t.qualified}  ($tag)"
     }
-    val migrating = p.modified.collect {
-      case (_, nw) if nw.category.contains(ChangeCategory.ForwardOnly) &&
-        !p.isDevPreview(nw) => nw
-    }
-    if (migrating.nonEmpty) {
+    if (steps.migrating.nonEmpty) {
       L += "├─ migrate schemas in place (forward-only reuses the physical table)"
-      migrating.foreach { nw =>
+      steps.migrating.foreach { nw =>
         val destr = if (p.allowDestructive.contains(nw.model.name))
           "  [destructive changes allowed this apply]" else ""
         L += s"│    ~ ${nw.model.name} → ${evaluator.physicalTable(nw).qualified}$destr"
       }
     }
-    // Backfill preview: the scheduler's own cron-capping + batching math,
-    // run read-only (auto-restatement windows are narrated, never dropped)
-    val backfillable: Set[String] =
-      if (p.skipBackfill || p.emptyBackfill) Set.empty
-      else p.backfillSelected.getOrElse(p.snapshots.map(_.model.name).toSet)
+    def without(s: Snapshot, iv: Interval): Snapshot =
+      s.copy(intervals = IntervalAlgebra.remove(s.intervals, iv),
+        devIntervals = IntervalAlgebra.remove(s.devIntervals, iv))
     if (p.skipBackfill)
       L += "├─ backfill: SKIPPED (--skip-backfill: physical layer + views only)"
     else {
       L += (if (p.emptyBackfill)
         "├─ backfill: record intervals as processed WITHOUT evaluating (--empty-backfill)"
       else "├─ backfill missing intervals")
-      p.snapshots.filter(s => s.model.kind.isMaterialized &&
-          (p.emptyBackfill || backfillable(s.model.name))).foreach { s =>
-        val dev = devFlags(s.model.name)
-        val fresh = state.getSnapshot(s.model.name, s.version).getOrElse(s)
-        val unit = s.model.intervalUnit
-        val cappedEnd =
-          if (s.model.allowPartials || !s.model.kind.isIncremental) p.end
-          else math.min(p.end,
-            unit.floor(CronSchedule.lastTickAtOrBefore(s.model.cron, executionTs,
-              s.model.cronTz.getOrElse("UTC"))))
-        // restated intervals WILL be cleared by apply — fold them into the
-        // preview so the narration shows the re-run work (the reference's
-        // ExplainableRestatementStage brings the same calculation forward)
-        val restated = p.restatements.get(s.model.name).toVector
-          .map(iv => Interval(math.max(iv.start, p.start), math.min(iv.end, cappedEnd)))
-          .filter(iv => iv.start < iv.end)
-          .flatMap(iv => IntervalAlgebra.batch(iv, unit, 1, s.model.allowPartials))
-        val effStart =
-          if (p.minIntervals <= 0) p.start
-          else math.min(p.start, unit.add(cappedEnd, -p.minIntervals))
-        val missing =
-          (fresh.missingIntervals(effStart, cappedEnd, dev) ++ restated).distinct.sortBy(_.start)
-        val contiguous = IntervalAlgebra.merge(missing)
-        val batchSize = s.model.kind match {
-          case k: ModelKind.IncrementalByTimeRange => k.batchSize.getOrElse(0)
-          case _ => 0
-        }
-        val batches = contiguous.flatMap(c =>
-          if (batchSize > 0)
-            IntervalAlgebra.batch(c, unit, batchSize, s.model.allowPartials)
-          else Vector(c))
-        val gate = if (signals.contains(s.model.name)) "  [signal-gated]" else ""
-        val capped = if (cappedEnd < p.end)
-          s"  (cron-capped at ${java.time.Instant.ofEpochMilli(cappedEnd)})" else ""
+      steps.backfill.filter(_.model.kind.isMaterialized).foreach { s =>
+        val name = s.model.name
+        val pushed = state.getSnapshot(name, s.version).fold(s)(cur => s.copy(
+          intervals = IntervalAlgebra.merge(cur.intervals ++ s.intervals),
+          devIntervals = IntervalAlgebra.merge(cur.devIntervals ++ s.devIntervals)))
+        val dropped = steps.drops.collect {
+          case (n, v, iv) if n == name && v == s.version => iv
+        }.foldLeft(pushed)(without)
+        val auto = BatchPlanner.autoRestatement(dropped, executionTs,
+          state.lastAutoRestatement(name)).flatMap(_.window)
+        val pending = BatchPlanner.pending(auto.fold(dropped)(without(dropped, _)),
+          p.start, p.end, executionTs, devFlags(name), minIntervals = p.minIntervals)
+        val batches = pending.batches
+        val restated = auto.fold("")(w =>
+          s"  (auto-restatement re-runs [${iso(w.start)} … ${iso(w.end)}))")
+        val gate = if (signals.contains(name)) "  [signal-gated]" else ""
+        val capped = if (pending.cappedEnd < p.end)
+          s"  (cron-capped at ${iso(pending.cappedEnd)})" else ""
         if (batches.isEmpty)
-          L += s"│    ${s.model.name}: up to date$capped$gate"
+          L += s"│    $name: up to date$capped$restated$gate"
         else
-          L += s"│    ${s.model.name}: ${missing.size} interval(s) in ${batches.size} batch(es)  [${java.time.Instant.ofEpochMilli(batches.head.start)} … ${java.time.Instant.ofEpochMilli(batches.last.end)})$capped$gate"
+          L += s"│    $name: ${pending.missing.size} interval(s) in ${batches.size} batch(es)  [${iso(batches.head.start)} … ${iso(batches.last.end)})$capped$restated$gate"
       }
     }
     val standalone = standaloneAuditNames
@@ -1040,7 +1059,7 @@ class GraftContext(
     L += "├─ virtual layer: repoint environment views"
     val descCat = SparkMaterializer.envCatalog(p.env, envSuffixTarget, envCatalogMapping)
       .map(_ + ".").getOrElse("")
-    p.snapshots.filter(_.model.kind.isMaterialized).foreach { s =>
+    steps.promoted.foreach { s =>
       val (db, view) = SparkMaterializer.envLocation(
         s.model.schemaName, s.model.tableName, p.env, envSuffixTarget)
       L += s"│    $descCat$db.$view → ${evaluator.physicalTable(s, devFlags(s.model.name)).qualified}"
@@ -1053,7 +1072,7 @@ class GraftContext(
       }
     }
     val ttl = if (p.env == "prod") "never expires"
-      else s"expires ${java.time.Instant.ofEpochMilli(executionTs + envTtlMs)}"
+      else s"expires ${iso(executionTs + envTtlMs)}"
     L += s"├─ environment record: promote + finalize '${p.env}'  ($ttl)"
     if (afterAll.nonEmpty)
       L += s"└─ after_all: execute ${afterAll.size} statement(s)"
@@ -1061,6 +1080,9 @@ class GraftContext(
     L.result().mkString("\n")
   }
 
+  /** Evaluate a plan: stages per plan/stages.py:238 — snapshot records →
+    * physical layer → restatement → backfill → environment record → virtual
+    * layer → finalize. */
   def apply(p: Plan, executionTs: Long = System.currentTimeMillis()): Unit = {
     val planId = s"${p.env}@$executionTs"
     notifier.notifyApplyStart(p.env, planId)
@@ -1073,30 +1095,15 @@ class GraftContext(
   private def applyInner(p: Plan, executionTs: Long): Unit = {
     // BeforeAll stage (plan/stages.py:238; config/root.py:172)
     runEnvStatements(beforeAll, p.start, p.end, executionTs)
+    val steps = applySteps(p)
     // CreateSnapshotRecords
     p.snapshots.foreach(state.pushSnapshot)
-    // Restatement: drop intervals so the scheduler re-runs them (builder.py:369)
-    // — against the PLAN's snapshot version (several snapshots may share it)
-    p.restatements.foreach { case (name, ivl) =>
-      p.snapshots.find(_.model.name == name)
-        .orElse(state.latestSnapshot(name))
-        .foreach(s => state.removeInterval(name, s.version, ivl))
-    }
-    // effective_from (snapshot/definition.py:970-977): a forward-only change
-    // inherits its predecessor's intervals only BEFORE the effective date —
-    // everything at/after it is dropped from the shared version's accounting
-    // so the new logic re-runs it
-    p.effectiveFrom.foreach { ef =>
-      p.modified.foreach { case (_, nw) =>
-        if (nw.category.contains(ChangeCategory.ForwardOnly) && !p.isDevPreview(nw)) {
-          val floored = nw.model.intervalUnit.floor(ef) // cron_floor, definition.py:1425
-          state.removeInterval(nw.model.name, nw.version, Interval(floored, Long.MaxValue / 2))
-        }
-      }
-    }
+    // Restatement + effective_from: drop intervals so the scheduler re-runs
+    // them with the plan's logic
+    steps.drops.foreach { case (name, version, ivl) => state.removeInterval(name, version, ivl) }
     // DeployabilityIndex: forward-only changes (and their downstream) preview
     // in __dev tables when the plan targets a non-prod environment
-    val devFlags = p.snapshots.map(s => s.model.name -> p.isDevPreview(s)).toMap
+    val devFlags = steps.devFlags
     // PhysicalLayerUpdate
     val mapping = tableMappingFor(p.snapshots, devFlags)
     p.snapshots.foreach(s => evaluator.create(s, mapping(s.model.name)))
@@ -1104,37 +1111,30 @@ class GraftContext(
     // place — but NEVER from a dev plan, whose preview table starts fresh.
     // `--allow-destructive-model` lifts the on_destructive_change guard for
     // the matching models for THIS apply only (plan/builder.py).
-    p.modified.foreach { case (_, nw) =>
-      if (nw.category.contains(ChangeCategory.ForwardOnly) && !p.isDevPreview(nw)) {
-        var m = nw.model
-        if (p.allowDestructive.contains(m.name)) m = m.copy(onDestructiveChange = "allow")
-        if (p.allowAdditive.contains(m.name)) m = m.copy(onAdditiveChange = "allow")
-        evaluator.migrate(nw.copy(model = m), p.start, p.end, executionTs, mapping(nw.model.name))
-      }
+    steps.migrating.foreach { nw =>
+      var m = nw.model
+      if (p.allowDestructive.contains(m.name)) m = m.copy(onDestructiveChange = "allow")
+      if (p.allowAdditive.contains(m.name)) m = m.copy(onAdditiveChange = "allow")
+      evaluator.migrate(nw.copy(model = m), p.start, p.end, executionTs, mapping(nw.model.name))
     }
     // Backfill. `--skip-backfill`/`--empty-backfill` plans build just the
     // physical layer (empty tables/views created parents-first so the env
     // views resolve); `--backfill-model` does the same for UNSELECTED models.
-    val backfillable: Set[String] =
-      if (p.skipBackfill || p.emptyBackfill) Set.empty
-      else p.backfillSelected.getOrElse(p.envSnapshots.map(_.model.name).toSet)
     locally {
-      val mat = p.snapshots.filter(_.model.kind.isMaterialized)
-      val byName = mat.map(s => s.model.name -> s).toMap
+      val byName = p.snapshots.filter(_.model.kind.isMaterialized)
+        .map(s => s.model.name -> s).toMap
       var remaining = byName.keySet
       while (remaining.nonEmpty) {
         val ready = remaining.filter(n =>
           !byName(n).model.references.exists(r => remaining.contains(r) && r != n))
         require(ready.nonEmpty, s"cycle among models: $remaining")
-        ready.toSeq.sorted.filterNot(backfillable).foreach(n => evaluator.ensurePhysical(
+        ready.toSeq.sorted.filterNot(steps.backfillable).foreach(n => evaluator.ensurePhysical(
           byName(n), executionTs, mapping(n), devFlags.getOrElse(n, false)))
         remaining --= ready
       }
     }
     if (!p.skipBackfill) {
-      val live = p.snapshots
-        .filter(s => p.emptyBackfill || backfillable(s.model.name))
-        .map(s => state.getSnapshot(s.model.name, s.version).getOrElse(s))
+      val live = steps.backfill.map(s => state.getSnapshot(s.model.name, s.version).getOrElse(s))
       scheduler.run(live, p.start, p.end, executionTs, mapping, signals.toMap, devFlags,
         recordOnly = p.emptyBackfill, minIntervals = p.minIntervals)
     }
@@ -1178,7 +1178,7 @@ class GraftContext(
     if (prevRec.exists(r => prevCat != envCat || r.suffixTarget != envSuffixTarget))
       prevRec.get.snapshots.keys.foreach(name =>
         demoteByName(p.env, name, prevRec.get.suffixTarget, prevCat))
-    p.envSnapshots.filter(_.model.kind.isMaterialized).foreach(s =>
+    steps.promoted.foreach(s =>
       evaluator.promote(s, p.env, devFlags(s.model.name), envSuffixTarget, executionTs,
         envCat))
     p.removed.foreach { name =>
@@ -1236,12 +1236,7 @@ class GraftContext(
                        selectModels: Seq[String] = Nil,
                        autoUpstream: Boolean = true): Unit = {
     runEnvStatements(beforeAll, start, end, executionTs)
-    val envRec = state.getEnvironment(env).getOrElse(
-      throw new IllegalStateException(s"environment $env not planned"))
-    val allSnaps = envRec.snapshots.flatMap { case (n, v) =>
-      envRec.identifiers.get(n).flatMap(id => state.getSnapshotById(n, id))
-        .orElse(state.getSnapshot(n, v))
-    }.toSeq
+    val allSnaps = envSnapshots(env)
     val snaps =
       if (selectModels.isEmpty) allSnaps
       else {
@@ -1262,10 +1257,7 @@ class GraftContext(
         }
         allSnaps.filter(s => wanted(s.model.name))
       }
-    val dag = snaps.map(s => s.model.name -> s.model.references).toMap
-    val index = DeployabilityIndex.of(snaps, dag)
-    val devFlags = snaps.map(s =>
-      s.model.name -> (env != "prod" && !index.isDeployable(s))).toMap
+    val devFlags = devFlagsOf(env, snaps)
     scheduler.run(snaps, start, end, executionTs, tableMappingFor(snaps, devFlags),
       signals.toMap, devFlags, ignoreCron = ignoreCron)
     runStandaloneAudits(snaps, devFlags, start, end, executionTs)
@@ -1355,12 +1347,13 @@ class GraftContext(
     }.toMap
   }
 
-  /** Ad-hoc evaluate (context.py:1168): render + execute, no materialization. */
+  /** Ad-hoc evaluate (context.py:1168): render (as a backfill does) +
+    * execute, no materialization. */
   def evaluate(name: String, start: Long, end: Long,
                executionTs: Long = System.currentTimeMillis()): DataFrame = {
     val snaps = snapshotsOf(models.keys.toSeq)
-    Renderer.evaluate(spark, models(name), start, end, executionTs,
-      tableMappingFor(snaps.values.toSeq)(name), allVariables)
+    evaluator.query(snaps(name), start, end, executionTs,
+      tableMappingFor(snaps.values.toSeq)(name), evaluator.physicalTable(snaps(name)).qualified)
   }
 
   /** Query through the environment's virtual layer. */

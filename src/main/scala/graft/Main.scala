@@ -23,7 +23,7 @@ import graft.core.{Interval, IntervalUnit}
   *   lint                  print linter violations (exit 2 if blocking)
   *   test                  run YAML unit tests (--tests DIR or <project>/tests)
   *   table-diff [<model>] <srcEnv:tgtEnv>  row/schema diff (no model: all changed)
-  *   check-intervals [env] per-model missing intervals in the window
+  *   check-intervals [env] per-model elapsed intervals still missing
   *   fetch <sql>           query through the virtual layer, print rows
   *   table-name <model> [env]   the env view a model resolves to
   *   partitions <model>    committed partition values (metadata only)
@@ -31,7 +31,7 @@ import graft.core.{Interval, IntervalUnit}
   *   create-external-models     write external_models.yaml for unknown refs
   *   create-test <model>   generate a YAML unit test from live data
   *   state-export <path> / state-import <path>   durable state round-trip
-  *   export-schedule [env]  DAG + crons + missing-interval batches for an
+  *   export-schedule [env]  DAG + crons + the batches a run now would do, for an
   *                          external orchestrator (--format json|airflow)
   *   environments          list environments
   *   diff [env]            change summary against an environment (no apply)
@@ -606,7 +606,7 @@ object Main {
           0
         case "export-schedule" =>
           // external-orchestrator export (reference sqlmesh/schedulers/):
-          // read-only — computes what a run WOULD backfill, mutates nothing
+          // read-only — computes what a run now WOULD backfill, mutates nothing
           val env = positional.headOption.getOrElse("prod")
           val sched = ctx.exportSchedule(env, start, end)
           val text = flag("format").getOrElse("json") match {

@@ -74,7 +74,9 @@ object Barrier {
     * (PageRank ranks, label-propagation labels) come out of each round
     * partitioned by the very key the next round joins on — declaring it
     * lets EnsureRequirements reuse the layout, cutting the per-iteration
-    * Exchange(+Sort) that re-shuffled the vector every round. */
+    * Exchange(+Sort) that re-shuffled the vector every round. `eager =
+    * false` defers only the final write: under AQE the call still runs
+    * every upstream query stage, even if the result is never acted on. */
   def iterCheckpoint(df: DataFrame, eager: Boolean = true): DataFrame = {
     val spark = df.sparkSession
     val reliable = spark.conf.getOption("spark.graft.reliableCheckpoints")

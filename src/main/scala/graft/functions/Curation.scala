@@ -350,8 +350,13 @@ object Curation {
     // lesson, r17 change 4). The checkpoint truncates to a LogicalRDD. The
     // two-pass plan shape is pinned on [[crawlKeptPlan]]'s own plan
     // (BenchPlanSpec), since the materialized seam is opaque from outside.
-    val kept = Barrier.iterCheckpoint(
-      crawlKeptPlan(pages, screened, htmlCol, urlCol, idCol), eager = false)
+    // Always LOCAL, checkpoint dir or not: a lazy reliable checkpoint of
+    // this corpus-sized frame re-runs the extraction to write it to DFS.
+    // Under AQE even this lazy checkpoint runs the upstream stages (key
+    // scan, winner aggregate, semi-joins) when crawlIngest is called.
+    val kept = org.apache.spark.sql.graft.PlanCheckpoint.checkpoint(
+      crawlKeptPlan(pages, screened, htmlCol, urlCol, idCol), eager = false,
+      reliable = false)
     val reb = Dedup.paragraphDedup(kept.select(col(idCol), col("text")))
     // NOTE (r17): merging this filter/withColumn/drop chain (and the quota
     // and paragraph-dedup internals) into fewer select+where constructions

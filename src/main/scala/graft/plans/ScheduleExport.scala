@@ -13,9 +13,10 @@ import graft.core.Interval
   */
 object ScheduleExport {
 
-  /** One model's schedulable surface. `batches` are the missing-interval
-    * batches a run over the export window would process, after the same
-    * merge + batch_size slicing the built-in scheduler applies. */
+  /** One model's schedulable surface. `batches` are the batches a `run`
+    * over the export window executed at export time would process — the
+    * scheduler's own [[BatchPlanner]] answer, cron-capped and target-lag
+    * gated. */
   final case class ModelSchedule(
       name: String,
       kind: String,

@@ -94,79 +94,22 @@ class Scheduler(
       topoLevels(snapshots).foreach { level => state.deferPersist {
         val fs = level.filter(_.model.kind.isMaterialized).map { snap =>
           Future {
-            // auto-restatement (kind.py:388/:470 + `_auto_restatements` state):
-            // when the restatement cron has fired since the last application,
-            // drop the trailing N unit-intervals so they recompute below
-            snap.model.kind match {
-              case k: ModelKind.IncrementalByTimeRange if k.autoRestatementCron.nonEmpty =>
-                val restateUnit = IntervalUnit.fromCron(k.autoRestatementCron.get)
-                val lastFire = restateUnit.floor(executionTs)
-                if (state.lastAutoRestatement(snap.model.name).forall(_ < lastFire)) {
-                  val n = k.autoRestatementIntervals.getOrElse(1)
-                  val unit0 = snap.model.intervalUnit
-                  state.getSnapshot(snap.model.name, snap.version)
-                    .flatMap(_.intervals.lastOption).foreach { last =>
-                      state.removeInterval(snap.model.name, snap.version,
-                        Interval(unit0.add(last.end, -n), last.end))
-                    }
-                  state.setAutoRestatement(snap.model.name, lastFire)
-                }
-              case k if ModelKind.fullAutoRestatementCron(k).nonEmpty =>
-                // unique-key/custom auto-restatement = FULL restatement (drop
-                // every processed interval; the next run recomputes history)
-                val cron = ModelKind.fullAutoRestatementCron(k).get
-                val restateUnit = IntervalUnit.fromCron(cron)
-                val lastFire = restateUnit.floor(executionTs)
-                if (state.lastAutoRestatement(snap.model.name).forall(_ < lastFire)) {
-                  state.getSnapshot(snap.model.name, snap.version)
-                    .flatMap(_.intervals.lastOption).foreach { last =>
-                      state.removeInterval(snap.model.name, snap.version,
-                        Interval(0L, last.end))
-                    }
-                  state.setAutoRestatement(snap.model.name, lastFire)
-                }
-              case _ => ()
+            // a due auto-restatement drops its window so the batches below
+            // recompute it; what to run is BatchPlanner's decision alone
+            val name = snap.model.name
+            val current = state.getSnapshot(name, snap.version).getOrElse(snap)
+            val fresh = BatchPlanner.autoRestatement(current, executionTs,
+                state.lastAutoRestatement(name)) match {
+              case Some(r) =>
+                r.window.foreach(state.removeInterval(name, snap.version, _))
+                state.setAutoRestatement(name, r.firedAt)
+                state.getSnapshot(name, snap.version).getOrElse(snap)
+              case None => current
             }
-            val dev = devFlags.getOrElse(snap.model.name, false)
-            val fresh = state.getSnapshot(snap.model.name, snap.version).getOrElse(snap)
-            val unit = snap.model.intervalUnit
-            // cron-tick readiness (reference croniter gating, scheduler.py
-            // merged_missing_intervals): an interval is runnable only once a
-            // cron fire at/after its end has passed — a "30 3 * * *" daily
-            // model's yesterday is NOT ready at 01:00. allow_partials opts
-            // out, exactly like it opts out of unit completeness.
-            // …only INCREMENTAL kinds: FULL/VIEW/SCD2 refresh wholesale on
-            // every run (FullRefreshStrategy replaces regardless of ticks)
-            val cappedEnd =
-              if (ignoreCron || snap.model.allowPartials || !snap.model.kind.isIncremental) end
-              else math.min(end,
-                unit.floor(CronSchedule.lastTickAtOrBefore(snap.model.cron, executionTs,
-                  snap.model.cronTz.getOrElse("UTC"))))
-            // MANAGED target_lag gate: the table refreshes only when its data
-            // watermark lags the requested end by more than the declared lag —
-            // inside the window the run is a no-op (ModelKind.Managed doc)
-            val withinTargetLag = snap.model.kind match {
-              case k: ModelKind.Managed =>
-                val covered = if (dev) fresh.devIntervals else fresh.intervals
-                covered.nonEmpty &&
-                  end - covered.map(_.end).max < ModelKind.Managed.lagMs(k.targetLag)
-              case _ => false
-            }
-            val effStart =
-              if (minIntervals <= 0) start
-              else math.min(start, unit.add(cappedEnd, -minIntervals))
-            val missing =
-              if (withinTargetLag) Vector.empty[Interval]
-              else fresh.missingIntervals(effStart, cappedEnd, dev)
-            val contiguous = IntervalAlgebra.merge(missing)
-            val batchSize = snap.model.kind match {
-              case k: ModelKind.IncrementalByTimeRange => k.batchSize.getOrElse(0)
-              case _ => 0
-            }
-            val batches = contiguous.flatMap(c =>
-              if (batchSize > 0)
-                IntervalAlgebra.batch(c, unit, batchSize, snap.model.allowPartials)
-              else Vector(c))
+            val dev = devFlags.getOrElse(name, false)
+            val batches = BatchPlanner.pending(
+              snap.copy(intervals = fresh.intervals, devIntervals = fresh.devIntervals),
+              start, end, executionTs, dev, ignoreCron, minIntervals).batches
             // batch_concurrency (kind.py:517, scheduler.py:334): batches of
             // one model may run concurrently when the kind allows it. Safe
             // only for time-partitioned INCREMENTAL_BY_TIME_RANGE, where
@@ -182,17 +125,14 @@ class Scheduler(
               case _ => 1
             }
             var first = (if (dev) fresh.devIntervals else fresh.intervals).isEmpty
-            val ready = batches.filter(b =>
-              signals.get(snap.model.name).forall(sig => sig(b)))
+            val ready = batches.filter(b => signals.get(name).forall(sig => sig(b)))
+            lazy val mapping = tableMapping(name)
             if (recordOnly) {
-              ready.foreach(b => state.addInterval(snap.model.name, snap.version, b, dev))
+              ready.foreach(b => state.addInterval(name, snap.version, b, dev))
             } else if (batchConc <= 1 || ready.size <= 1) {
               ready.foreach { b =>
-                timed(snap.model.name, b) {
-                  evaluator.evaluate(fresh, b, executionTs, tableMapping(snap.model.name),
-                    first, dev)
-                }
-                state.addInterval(snap.model.name, snap.version, b, dev)
+                timed(name, b)(evaluator.evaluate(fresh, b, executionTs, mapping, first, dev))
+                state.addInterval(name, snap.version, b, dev)
                 first = false
               }
             } else {
@@ -201,25 +141,17 @@ class Scheduler(
               // dirs (phase 1) and publish serially (phase 2): concurrent
               // writers never share a destination path
               val (head, rest) = (ready.head, ready.tail)
-              timed(snap.model.name, head) {
-                evaluator.evaluate(fresh, head, executionTs, tableMapping(snap.model.name),
-                  first, dev)
-              }
-              state.addInterval(snap.model.name, snap.version, head, dev)
+              timed(name, head)(evaluator.evaluate(fresh, head, executionTs, mapping, first, dev))
+              state.addInterval(name, snap.version, head, dev)
               val pool2 = Executors.newFixedThreadPool(batchConc)
               try {
                 val staged = rest.map(b => b -> pool2.submit(
                   new java.util.concurrent.Callable[String] {
-                    def call(): String =
-                      evaluator.stageBatch(fresh, b, executionTs,
-                        tableMapping(snap.model.name), dev)
+                    def call(): String = evaluator.stageBatch(fresh, b, executionTs, mapping, dev)
                   }))
                 staged.foreach { case (b, f) =>
-                  timed(snap.model.name, b) {
-                    evaluator.ingestStaged(fresh, b, executionTs,
-                      tableMapping(snap.model.name), f.get(), dev)
-                  }
-                  state.addInterval(snap.model.name, snap.version, b, dev)
+                  timed(name, b)(evaluator.ingestStaged(fresh, b, executionTs, mapping, f.get(), dev))
+                  state.addInterval(name, snap.version, b, dev)
                 }
               } finally pool2.shutdown()
             }

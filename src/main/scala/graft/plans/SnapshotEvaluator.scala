@@ -136,15 +136,48 @@ class SnapshotEvaluator(
     * query — called from evaluate() so upstreams already exist. */
   private def createView(s: Snapshot, interval: Interval, executionTs: Long,
                          mapping: Map[String, String]): Unit = {
-    val sql = RenderCache.cachedRender(renderCache, s.fingerprint.full, s.model,
-      interval.start, interval.end, executionTs,
-      mapping, variables, thisModel = Some(physicalTable(s).qualified),
+    val sql = renderSql(s, interval.start, interval.end, executionTs, mapping,
+      physicalTable(s).qualified)
+    spark.sql(s"CREATE OR REPLACE VIEW ${physicalTable(s).qualified} AS $sql")
+  }
+
+  /** The one render path of every evaluator site: the context's variables
+    * and macros, `@this_model` bound to `thisModel`, catalog introspection
+    * over `mapping`, memoized in [[renderCache]]. */
+  private def renderSql(s: Snapshot, start: Long, end: Long, executionTs: Long,
+                        mapping: Map[String, String], thisModel: String,
+                        vars: Map[String, String] = variables): String =
+    RenderCache.cachedRender(renderCache, s.fingerprint.full, s.model, start, end,
+      executionTs, mapping, vars, thisModel = Some(thisModel),
       schemaOf = Renderer.catalogSchemaOf(spark, mapping),
       macros = macros, macrosVersion = macrosVersion,
       columnValues = Renderer.catalogColumnValues(spark, mapping),
       runQuery = Renderer.catalogRunQuery(spark, mapping))
-    spark.sql(s"CREATE OR REPLACE VIEW ${physicalTable(s).qualified} AS $sql")
-  }
+
+  /** The model's query as a frame, whatever its body: SQL through
+    * [[renderSql]] (`vars` is read only there), Scala bodies called, seeds
+    * read with the kind's CSV options. */
+  private[graft] def query(s: Snapshot, start: Long, end: Long, executionTs: Long,
+                           mapping: Map[String, String], thisModel: String,
+                           vars: => Map[String, String] = variables): DataFrame =
+    s.model.body match {
+      case SqlBody(_) =>
+        spark.sql(renderSql(s, start, end, executionTs, mapping, thisModel, vars))
+      case ScalaBody(fn) => fn(spark, mapping, start, end)
+      case SeedBody(path) =>
+        val opts = s.model.kind match {
+          case k: ModelKind.Seed => k.options
+          case _ => Map.empty[String, String]
+        }
+        spark.read.option("header", "true").option("inferSchema", "true")
+          .options(opts).csv(path)
+    }
+
+  /** dbt `{% if is_incremental() %}`: true only for an incremental kind
+    * writing into a table that already has data. */
+  private def incrementalVars(s: Snapshot, t: PhysicalTable): Map[String, String] =
+    variables + ("is_incremental" ->
+      (s.model.kind.isIncremental && materializer.currentDataDir(t).nonEmpty).toString)
 
   /** Backfill one interval batch (reference `_evaluate_snapshot` :677):
     * pre-statements → render → strategy insert → post-statements → audits. */
@@ -162,20 +195,7 @@ class SnapshotEvaluator(
           createView(s, Interval(0L, 0L), executionTs, tableMapping)
       case k if k.isMaterialized =>
         if (materializer.currentDataDir(t).isEmpty) {
-          // SEED bodies must honor the kind's csv reader options here too,
-          // or the empty table gets a mis-parsed schema that conflicts with
-          // the later real backfill
-          val df = s.model.body match {
-            case SeedBody(path) =>
-              val opts = s.model.kind match {
-                case sk: ModelKind.Seed => sk.options
-                case _ => Map.empty[String, String]
-              }
-              spark.read.option("header", "true").option("inferSchema", "true")
-                .options(opts).csv(path)
-            case _ => Renderer.evaluate(
-              spark, s.model, 0L, 0L, executionTs, tableMapping, variables)
-          }
+          val df = query(s, 0L, 0L, executionTs, tableMapping, t.qualified)
           materializer.replaceQuery(t, withManagedCols(df, s.model).limit(0))
         }
       case _ => ()
@@ -194,21 +214,9 @@ class SnapshotEvaluator(
     // render with @this resolved like evaluate() does; models with
     // pre-statements never reach here (the scheduler keeps them sequential —
     // concurrent pre-statements would race on session-global temp state)
-    val df = s.model.body match {
-      case SqlBody(_) =>
-        val t = physicalTable(s, dev)
-        val vars = variables + ("is_incremental" ->
-          (s.model.kind.isIncremental && materializer.currentDataDir(t).nonEmpty).toString)
-        spark.sql(RenderCache.cachedRender(renderCache, s.fingerprint.full, s.model,
-          interval.start, interval.end, executionTs,
-          tableMapping, vars, thisModel = Some(t.qualified),
-          schemaOf = Renderer.catalogSchemaOf(spark, tableMapping), macros = macros,
-          macrosVersion = macrosVersion,
-          columnValues = Renderer.catalogColumnValues(spark, tableMapping),
-          runQuery = Renderer.catalogRunQuery(spark, tableMapping)))
-      case _ => Renderer.evaluate(spark, s.model, interval.start, interval.end,
-        executionTs, tableMapping, variables)
-    }
+    val t = physicalTable(s, dev)
+    val df = query(s, interval.start, interval.end, executionTs, tableMapping,
+      t.qualified, incrementalVars(s, t))
     df.write.mode("overwrite").parquet(dir)
     dir
   }
@@ -270,28 +278,8 @@ class SnapshotEvaluator(
     s.model.preStatements.foreach(st => spark.sql(renderStatement(s, st, interval, executionTs, mapping, thisName)))
 
     def rendered: DataFrame = {
-      // dbt {% if is_incremental() %} guard: true only for an incremental
-      // kind writing into a table that already has data
-      val vars = variables + ("is_incremental" ->
-        (s.model.kind.isIncremental && materializer.currentDataDir(t).nonEmpty).toString)
-      val df = s.model.body match {
-        case SqlBody(_) =>
-          spark.sql(RenderCache.cachedRender(renderCache, s.fingerprint.full, s.model,
-            interval.start, interval.end, executionTs, mapping,
-            vars, thisModel = Some(thisName),
-            schemaOf = Renderer.catalogSchemaOf(spark, mapping),
-            columnValues = Renderer.catalogColumnValues(spark, mapping),
-            runQuery = Renderer.catalogRunQuery(spark, mapping),
-            macros = macros, macrosVersion = macrosVersion))
-        case ScalaBody(fn) => fn(spark, mapping, interval.start, interval.end)
-        case SeedBody(path) =>
-          val opts = s.model.kind match {
-            case k: ModelKind.Seed => k.options
-            case _ => Map.empty[String, String]
-          }
-          spark.read.option("header", "true").option("inferSchema", "true")
-            .options(opts).csv(path)
-      }
+      val df = query(s, interval.start, interval.end, executionTs, mapping, thisName,
+        incrementalVars(s, t))
       // declared-columns contract (columns_to_types): project + cast to
       // exactly the declared schema; a missing column fails analysis loudly
       val contracted =
@@ -493,22 +481,9 @@ class SnapshotEvaluator(
               mapping: Map[String, String]): Unit = {
     val t = physicalTable(s)
     if (materializer.currentDataDir(t).isEmpty) return
-    val target = s.model.body match {
-      case SqlBody(_) =>
-        // full render context — a model using variables or custom macros
-        // must migrate the same way it evaluates (r8 review finding: the
-        // macro-less render here aborted migration of any @MACRO model)
-        spark.sql(RenderCache.cachedRender(renderCache, s.fingerprint.full, s.model,
-          start, end, executionTs, mapping, variables,
-          thisModel = Some(t.qualified),
-          schemaOf = Renderer.catalogSchemaOf(spark, mapping),
-          macros = macros, macrosVersion = macrosVersion,
-          columnValues = Renderer.catalogColumnValues(spark, mapping),
-          runQuery = Renderer.catalogRunQuery(spark, mapping))).schema
-      case ScalaBody(fn) => fn(spark, mapping, start, end).schema
-      case SeedBody(path) =>
-        spark.read.option("header", "true").option("inferSchema", "true").csv(path).schema
-    }
+    // full render context — a model using variables or custom macros must
+    // migrate the same way it evaluates
+    val target = query(s, start, end, executionTs, mapping, t.qualified).schema
     // on_destructive_change guard (reference model attr): forward-only
     // migrations that would drop/narrow columns abort (or warn) — history
     // destruction must be opted into, never accidental

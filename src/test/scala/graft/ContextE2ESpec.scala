@@ -418,6 +418,23 @@ class ContextE2ESpec extends AnyFunSuite {
     assert(spark.table("mart.macro_fwd").columns.contains("o_orderstatus"))
   }
 
+  test("evaluate and the skip-backfill physical layer render with the context's macros") {
+    val ctx = newCtx()
+    ctx.addMacro("PRICECOL")(_ => "o_totalprice")
+    ctx.addModel(Model("mart.macro_eval", SqlBody(
+      """SELECT o_orderkey, @PRICECOL() AS p, o_orderdate FROM raw.orders
+        |WHERE o_orderdate BETWEEN @start_dt AND @end_dt""".stripMargin),
+      kind = ModelKind.IncrementalByTimeRange(timeColumn = "o_orderdate"),
+      start = Some(dayMs("1995-01-01"))))
+    val df = ctx.evaluate("mart.macro_eval", dayMs("1995-01-01"), dayMs("1995-01-05"))
+    assert(df.columns.toSeq == Seq("o_orderkey", "p", "o_orderdate"))
+    assert(df.count() > 0)
+    // --skip-backfill builds the empty physical object from the same render
+    ctx.apply(ctx.plan("prod", dayMs("1995-01-01"), dayMs("1995-01-05"), skipBackfill = true))
+    assert(spark.table("mart.macro_eval").columns.contains("p"))
+    assert(spark.table("mart.macro_eval").count() == 0)
+  }
+
   test("includeUnmodified=false keeps unchanged models out of a dev environment") {
     val ctx = newCtx()
     def base(expr: String) = Model("mart.iu_base", SqlBody(

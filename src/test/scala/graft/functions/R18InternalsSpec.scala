@@ -59,6 +59,40 @@ class R18InternalsSpec extends AnyFunSuite {
     }
   }
 
+  test("crawlIngest survivors stay a local checkpoint when a checkpoint dir is set") {
+    // same order-robust pattern as the mode-precedence test: the dir may
+    // already be set by another suite; the conf is left explicitly false
+    val sc = spark.sparkContext
+    val hadConf = spark.conf.getOption("spark.graft.reliableCheckpoints")
+    if (sc.getCheckpointDir.isEmpty)
+      sc.setCheckpointDir(
+        java.nio.file.Files.createTempDirectory("graft_ckpt").toString)
+    val dir = new org.apache.hadoop.fs.Path(sc.getCheckpointDir.get)
+    val fs = dir.getFileSystem(sc.hadoopConfiguration)
+    def files(): Set[String] = {
+      val it = fs.listFiles(dir, true)
+      val b = Set.newBuilder[String]
+      while (it.hasNext) b += it.next().getPath.toString
+      b.result()
+    }
+    val pages = Seq(
+      (1L, "https://a.com/x", "<html><head><title>A</title></head><body><p>alpha words here</p></body></html>"),
+      (2L, "https://b.com/y", "<html><head><title>B</title></head><body><p>beta words here</p></body></html>"))
+      .toDF("doc_id", "url", "html")
+    try {
+      spark.conf.unset("spark.graft.reliableCheckpoints")
+      val before = files()
+      val out = Curation.crawlIngest(pages, domainCap = 3)
+      assert(out.count() == 2)
+      assert(files() == before, "crawlIngest wrote reliable checkpoint files")
+    } finally {
+      hadConf match {
+        case Some(v) => spark.conf.set("spark.graft.reliableCheckpoints", v)
+        case None => spark.conf.set("spark.graft.reliableCheckpoints", "false")
+      }
+    }
+  }
+
   test("checkpoint declares the final plan's hash partitioning (and only a truthful one)") {
     val n = spark.sessionState.conf.numShufflePartitions
     // explicit-N repartition: AQE never coalesces REPARTITION_BY_NUM, so
