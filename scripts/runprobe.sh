@@ -1,6 +1,6 @@
 #!/bin/bash
 # Run a test-scope probe main directly (no sbt lock): mirrors build.sbt's
-# forked-JVM options. Usage: scripts/runprobe.sh graft.CrawlAbProbe [args...]
+# forked-JVM options. Usage: scripts/runprobe.sh graft.StageProfileProbe [args...]
 set -e
 cd /root/repo
 CP="target/scala-2.13/classes:target/scala-2.13/test-classes:/opt/spark/jars/*"

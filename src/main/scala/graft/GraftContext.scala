@@ -395,13 +395,16 @@ class GraftContext(
     * `sqlmesh render`, cli/main.py:253). */
   def renderSql(name: String, start: Long, end: Long,
                 executionTs: Long = System.currentTimeMillis()): String = {
+    val (s, mapping, thisModel) = renderScope(name)
+    evaluator.renderSql(s, start, end, executionTs, mapping, thisModel)
+  }
+
+  /** A model's snapshot, upstream mapping and `@this_model` table: what
+    * `render`, lineage and `evaluate` render against, as a backfill does. */
+  private def renderScope(name: String): (Snapshot, Map[String, String], String) = {
     val snaps = snapshotsOf(models.keys.toSeq)
-    val mapping = tableMappingFor(snaps.values.toSeq)(name)
-    Renderer.render(models(name), start, end, executionTs,
-      mapping, allVariables, macros = customMacros.toMap,
-      schemaOf = Renderer.catalogSchemaOf(spark, mapping),
-      columnValues = Renderer.catalogColumnValues(spark, mapping),
-      runQuery = Renderer.catalogRunQuery(spark, mapping))
+    val s = snaps(name)
+    (s, tableMappingFor(snaps.values.toSeq)(name), evaluator.physicalTable(s).qualified)
   }
 
   /** Column-level lineage for a model (reference `sqlmesh lineage
@@ -412,13 +415,9 @@ class GraftContext(
     * their physical tables, so their tables must exist (plan applied) or be
     * externals. */
   def columnLineage(name: String): Map[String, Set[String]] = {
-    val snaps = snapshotsOf(models.keys.toSeq)
-    val mapping = tableMappingFor(snaps.values.toSeq)(name)
-    val sql = Renderer.render(models(name), 0L, 86400000L, 0L, mapping, allVariables,
-      macros = customMacros.toMap,
-      schemaOf = Renderer.catalogSchemaOf(spark, mapping),
-      columnValues = Renderer.catalogColumnValues(spark, mapping))
-    graft.plans.Lineage.columnLineage(spark.sql(sql),
+    val (s, mapping, thisModel) = renderScope(name)
+    graft.plans.Lineage.columnLineage(
+      spark.sql(evaluator.renderSql(s, 0L, 86400000L, 0L, mapping, thisModel)),
       graft.plans.Lineage.namerFromMapping(mapping))
   }
 
@@ -562,7 +561,7 @@ class GraftContext(
   /** Run every loaded YAML test; returns one result per test case. */
   def runTests(): Seq[graft.testing.YamlModelTest.Result] =
     testFiles.toSeq.flatMap(f =>
-      graft.testing.YamlModelTest.runFile(spark, f, models.toMap))
+      graft.testing.YamlModelTest.runFile(spark, f, models.toMap, renderer = evaluator.renderer))
 
   /** All environment records (reference `sqlmesh environments`). */
   def environments: Seq[EnvironmentRecord] = state.environments
@@ -1096,11 +1095,13 @@ class GraftContext(
     // BeforeAll stage (plan/stages.py:238; config/root.py:172)
     runEnvStatements(beforeAll, p.start, p.end, executionTs)
     val steps = applySteps(p)
-    // CreateSnapshotRecords
-    p.snapshots.foreach(state.pushSnapshot)
-    // Restatement + effective_from: drop intervals so the scheduler re-runs
-    // them with the plan's logic
-    steps.drops.foreach { case (name, version, ivl) => state.removeInterval(name, version, ivl) }
+    // CreateSnapshotRecords, then restatement + effective_from: drop
+    // intervals so the scheduler re-runs them with the plan's logic — one
+    // durable write for the lot, not one whole-image rewrite per snapshot
+    state.deferPersist {
+      p.snapshots.foreach(state.pushSnapshot)
+      steps.drops.foreach { case (name, version, ivl) => state.removeInterval(name, version, ivl) }
+    }
     // DeployabilityIndex: forward-only changes (and their downstream) preview
     // in __dev tables when the plan targets a non-prod environment
     val devFlags = steps.devFlags
@@ -1206,10 +1207,8 @@ class GraftContext(
     * statements (environment.py:265, plan BeforeAll/AfterAll stages). */
   private def runEnvStatements(statements: Seq[String], start: Long, end: Long,
                                executionTs: Long): Unit =
-    statements.foreach { st =>
-      spark.sql(new graft.macros.MacroEvaluator(start, end, executionTs, None,
-        allVariables, registry = customMacros.toMap).render(st))
-    }
+    statements.foreach(st =>
+      spark.sql(evaluator.renderer.statement(st, Interval(start, end), executionTs, Map.empty, None)))
 
   /** `sqlmesh run` (context.py:756): backfill new missing intervals in an
     * already-planned environment. */
@@ -1279,8 +1278,8 @@ class GraftContext(
           .map(s => r -> evaluator.physicalTable(s, devFlags.getOrElse(r, false)).qualified)
           .orElse(externals.get(r).map(r -> _))
       }.toMap
-      val sql = Renderer.render(synthetic, start, end, executionTs, mapping, allVariables)
-      val violations = spark.sql(sql).limit(1).collect()
+      val violations = evaluator.renderer.frame(spark, synthetic, None, start, end,
+        executionTs, mapping, None).limit(1).collect()
       if (violations.nonEmpty) {
         val msg = s"standalone audit ${a.name} failed: ${violations.head}"
         if (a.blocking) throw new IllegalStateException(msg)
@@ -1329,9 +1328,7 @@ class GraftContext(
       val name = rawName.stripSuffix("_non_blocking")
       val timeCond = m.kind match {
         case k: ModelKind.IncrementalByTimeRange if end < Long.MaxValue =>
-          val lo = new java.sql.Timestamp(start)
-          val hi = new java.sql.Timestamp(end)
-          Map("condition" -> s"${k.timeColumn} >= TIMESTAMP '$lo' AND ${k.timeColumn} < TIMESTAMP '$hi'")
+          Map("condition" -> graft.audits.Audits.intervalCondition(k, start, end))
         case _ => Map.empty[String, String]
       }
       // audit args may reference OTHER models (relationships `to:`) — resolve
@@ -1351,9 +1348,8 @@ class GraftContext(
     * execute, no materialization. */
   def evaluate(name: String, start: Long, end: Long,
                executionTs: Long = System.currentTimeMillis()): DataFrame = {
-    val snaps = snapshotsOf(models.keys.toSeq)
-    evaluator.query(snaps(name), start, end, executionTs,
-      tableMappingFor(snaps.values.toSeq)(name), evaluator.physicalTable(snaps(name)).qualified)
+    val (s, mapping, thisModel) = renderScope(name)
+    evaluator.query(s, start, end, executionTs, mapping, thisModel)
   }
 
   /** Query through the environment's virtual layer. */
@@ -1542,9 +1538,8 @@ class GraftContext(
           case Some(up) if up.model.kind == ModelKind.Embedded =>
             // EMBEDDED: inline the upstream query as a subquery, with the
             // embedded model's own refs resolved recursively (evaluator.py:1965)
-            val sub = graft.plans.RenderCache.cachedRender(evaluator.renderCache,
-              up.fingerprint.full, up.model, 0L, 0L, 0L, mappingFor(r),
-              macros = customMacros.toMap, macrosVersion = macroVersion.get)
+            val sub = evaluator.renderSql(up, 0L, 0L, 0L, mappingFor(r),
+              evaluator.physicalTable(up).qualified)
             Some(r -> s"($sub)")
           // EXTERNAL models carry schema metadata only — the physical
           // binding is still the registered external relation

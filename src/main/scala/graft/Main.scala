@@ -288,15 +288,15 @@ object Main {
             if (!has("no-diff")) p.modified.foreach { case (old, nw) =>
               (old.model.body, nw.model.body) match {
                 case (graft.core.SqlBody(o), graft.core.SqlBody(n)) if o != n =>
-                  def rendered(m: graft.core.Model, raw: String): String =
+                  // model names stay logical (empty mapping), as in the source
+                  def rendered(s: graft.core.Snapshot, raw: String): String =
                     if (!has("diff-rendered")) raw
-                    else try graft.plans.Renderer.render(m, start, end,
-                      System.currentTimeMillis(), Map.empty)
+                    else try ctx.evaluator.renderSql(s, start, end, now, Map.empty,
+                      s.model.name)
                     catch { case _: Exception => raw }
                   out.println(s"--- ${nw.model.name} (${old.version})")
                   out.println(s"+++ ${nw.model.name} (${nw.version})")
-                  out.println(graft.core.TextDiff.unified(
-                    rendered(old.model, o), rendered(nw.model, n)))
+                  out.println(graft.core.TextDiff.unified(rendered(old, o), rendered(nw, n)))
                 case _ => ()
               }
             }
@@ -484,7 +484,7 @@ object Main {
           val yaml = graft.testing.YamlModelTest.fromLive(spark,
             s"test_${model.replace('.', '_')}", ctx.model(model), resolve,
             limit = flag("limit").map(_.toInt).getOrElse(10),
-            start = start, end = end)
+            start = start, end = end, renderer = ctx.evaluator.renderer)
           flag("output") match {
             case Some(p) =>
               java.nio.file.Files.writeString(java.nio.file.Paths.get(p), yaml)

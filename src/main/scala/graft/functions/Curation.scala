@@ -362,7 +362,7 @@ object Curation {
     // and paragraph-dedup internals) into fewer select+where constructions
     // to cut per-construction analyzer walks was tried and REVERTED — the
     // quiet-window construct+plan CPU is flat (0.594 → 0.597 s min across
-    // alternating stash A/B sessions, DecomposeProbe `plan`); the "~1 s
+    // alternating stash A/B sessions, OPTIMIZATION_r17.md §A); the "~1 s
     // construction tax" earlier sessions measured was a loaded-window
     // artifact (thread-CPU inflates ~4× under this sandbox's contention).
     // Unmeasurable changes don't get to carry hash risk on 259 entries.
@@ -475,7 +475,7 @@ object Curation {
         size(split(col("shingle"), " ")).as("__glen"))
       // NO per-(bench_id, gram) dedup here — adjudicated r18: the r17
       // dedup-drop's k·m join-output inflation under repetitive text was
-      // probed at 1×/10×/100× boilerplate repetition (R18ContamSkewProbe):
+      // probed at 1×/10×/100× boilerplate repetition (OPTIMIZATION_r18.md §4):
       // the match rows feed the report aggregate IN-TASK (broadcast build,
       // streamed probe), so memory and shuffle stay flat at every factor
       // (peak exec mem 17 MB, shuffle ~0), and quiet-floor min-of-3

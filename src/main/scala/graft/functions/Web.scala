@@ -47,7 +47,7 @@ object Web {
     // does not dedupe under conditional branches (nor does interpreted HOF
     // eval at all), so the evaluated expression count grows combinatorially.
     // Any future rewrite must bind intermediates (lambda-variable idiom) or
-    // stay flat — and must re-run the DecomposeProbe `web` A/B first.
+    // stay flat — and must first re-run the A/B of OPTIMIZATION_r17.md §B.
     val base = regexp_extract(u, "^[^#]*", 0) // fragment gone
     val scheme = lower(regexp_extract(base, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
     val hostport0 = lower(regexp_extract(base, "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)", 1))

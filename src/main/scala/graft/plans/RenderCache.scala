@@ -1,7 +1,5 @@
 package graft.plans
 
-import graft.core.{Model, SqlBody}
-
 /** Rendered-query cache (reference: sqlmesh/core/snapshot/cache.py:1-111
   * SnapshotCache and renderer.py:111-116 `self._cache`): rendered SQL text
   * keyed by snapshot fingerprint plus every render input that can alter the
@@ -18,7 +16,8 @@ import graft.core.{Model, SqlBody}
   *    substring, conservatively matched) — so a FULL model re-rendered each
   *    run with a fresh executionTs still hits;
   *  - variables (including the per-call `is_incremental` flag), the table
-  *    mapping, `@this` and the custom-macro names are always in the key;
+  *    mapping, `@this`, the custom-macro names and the registry's version
+  *    counter (names alone miss a redefinition) are always in the key;
   *  - bodies that introspect live catalog state at render time (`@STAR`,
   *    `@UNION`, dbt `star`, `get_column_values`) BYPASS the cache — their
   *    output can change without any key input changing.
@@ -65,41 +64,20 @@ object RenderCache {
   def cacheable(body: String): Boolean =
     !introspective.exists(_.findFirstIn(body).isDefined)
 
-  /** Memoizing front-end over [[Renderer.render]] for SQL bodies. */
-  def cachedRender(
-      cache: RenderCache,
-      fingerprint: String,
-      model: Model,
-      start: Long,
-      end: Long,
-      execution: Long,
-      tableMapping: Map[String, String],
-      variables: Map[String, String] = Map.empty,
-      thisModel: Option[String] = None,
-      schemaOf: String => Seq[(String, String)] = _ => Nil,
-      macros: Map[String, Seq[String] => String] = Map.empty,
-      /** registry version counter (bumped on every registration, including
-        * re-registration under an existing name) — names alone can't see a
-        * behavior change behind the same name (r7 advisor finding). */
-      macrosVersion: Long = 0L,
-      columnValues: Option[(String, String, Int) => Seq[String]] = None,
-      runQuery: Option[String => (Seq[String], Seq[Seq[Any]])] = None): String = {
-    def run = Renderer.render(model, start, end, execution, tableMapping,
-      variables, thisModel, schemaOf, macros, columnValues, runQuery)
-    model.body match {
-      case SqlBody(sql) if cacheable(sql) =>
-        val ivKey =
-          if (intervalRe.findFirstIn(sql).isDefined) s"$start,$end" else "-"
-        val exKey = if (execRe.findFirstIn(sql).isDefined) execution.toString else "-"
-        val key = Seq(
-          fingerprint, ivKey, exKey,
-          tableMapping.toSeq.sorted.mkString(";"),
-          variables.toSeq.sorted.mkString(";"),
-          thisModel.getOrElse("-"),
-          macros.keys.toSeq.sorted.mkString(","),
-          macrosVersion.toString).mkString("\u0001")
-        cache.getOrElseUpdate(key)(run)
-      case _ => run
-    }
-  }
+  /** The cache key of one render of a SQL `body`, or None when the body
+    * must render fresh (catalog introspection) — the rules above. */
+  def key(fingerprint: String, body: String, start: Long, end: Long, execution: Long,
+          tableMapping: Map[String, String], variables: Map[String, String],
+          thisModel: Option[String], macroNames: Iterable[String],
+          macrosVersion: Long): Option[String] =
+    if (!cacheable(body)) None
+    else Some(Seq(
+      fingerprint,
+      if (intervalRe.findFirstIn(body).isDefined) s"$start,$end" else "-",
+      if (execRe.findFirstIn(body).isDefined) execution.toString else "-",
+      tableMapping.toSeq.sorted.mkString(";"),
+      variables.toSeq.sorted.mkString(";"),
+      thisModel.getOrElse("-"),
+      macroNames.toSeq.sorted.mkString(","),
+      macrosVersion.toString).mkString("\u0001"))
 }

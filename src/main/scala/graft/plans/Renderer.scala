@@ -8,7 +8,8 @@ import graft.macros.MacroEvaluator
   * macro expansion with interval-bound time variables, then upstream model
   * references swapped for their physical (or environment) tables. The rendered
   * text is Spark SQL — Catalyst does qualify/annotate/simplify for free
-  * (SURVEY §4), so render stops at text.
+  * (SURVEY §4), so render stops at text. This primitive sees no context:
+  * every caller that has one renders through [[QueryRenderer]].
   */
 object Renderer {
 
@@ -103,22 +104,67 @@ object Renderer {
       spark.sql(s"SELECT * FROM $resolved WHERE 1 = 0")
         .schema.fields.toSeq.map(f => f.name -> f.dataType.sql)
     } catch { case _: Exception => Nil }
+}
 
-  /** Render + execute → DataFrame; Scala-body models call their function. */
-  def evaluate(
-      spark: SparkSession,
-      model: Model,
-      start: Long,
-      end: Long,
-      execution: Long,
-      tableMapping: Map[String, String],
-      variables: Map[String, String] = Map.empty,
-      macros: Map[String, Seq[String] => String] = Map.empty): DataFrame = model.body match {
-    case SqlBody(_) =>
-      spark.sql(render(model, start, end, execution, tableMapping, variables,
-        macros = macros))
-    case ScalaBody(fn) => fn(spark, tableMapping, start, end)
-    case SeedBody(path) =>
-      spark.read.option("header", "true").option("inferSchema", "true").csv(path)
+/** The one render path (reference renderer.py:527 QueryRenderer, shared by
+  * `render`, `evaluate`, unit tests and audits): every site that turns a
+  * model body or a statement into SQL or a frame comes here, so all see the
+  * same variables, macros, `@this_model` and catalog introspection. Inputs
+  * are live views (vars merged late by dbt are visible); the macro registry's
+  * version counter joins the cache key, so redefining a macro invalidates. */
+final class QueryRenderer(
+    variablesFn: () => Map[String, String] = () => Map.empty,
+    macrosFn: () => (Map[String, Seq[String] => String], Long) = () => (Map.empty, 0L)) {
+
+  /** Rendered-SQL cache for this renderer's lifetime (reference
+    * snapshot/cache.py) — see [[RenderCache]] for the key/bypass rules. */
+  val renderCache = new RenderCache()
+
+  def variables: Map[String, String] = variablesFn()
+
+  /** A SQL body rendered: `@this_model` bound to `thisModel`, catalog
+    * introspection over `mapping`, memoized in [[renderCache]] under the
+    * snapshot `fingerprint` (None — a unit test's or standalone audit's
+    * model, which has no snapshot — renders uncached). */
+  def sql(spark: SparkSession, model: Model, fingerprint: Option[String],
+          start: Long, end: Long, executionTs: Long, mapping: Map[String, String],
+          thisModel: Option[String], vars: Map[String, String] = variables): String = {
+    val (macros, macrosVersion) = macrosFn()
+    def run = Renderer.render(model, start, end, executionTs, mapping, vars, thisModel,
+      Renderer.catalogSchemaOf(spark, mapping), macros,
+      Renderer.catalogColumnValues(spark, mapping), Renderer.catalogRunQuery(spark, mapping))
+    val key = (fingerprint, model.body) match {
+      case (Some(fp), SqlBody(body)) => RenderCache.key(fp, body, start, end, executionTs,
+        mapping, vars, thisModel, macros.keys, macrosVersion)
+      case _ => None
+    }
+    key.fold(run)(renderCache.getOrElseUpdate(_)(run))
   }
+
+  /** The model's query as a frame, whatever its body — the one body
+    * dispatch: SQL through [[sql]] (`vars` is read only there), Scala bodies
+    * called, seeds read with the kind's CSV options. */
+  def frame(spark: SparkSession, model: Model, fingerprint: Option[String],
+            start: Long, end: Long, executionTs: Long, mapping: Map[String, String],
+            thisModel: Option[String], vars: => Map[String, String] = variables): DataFrame =
+    model.body match {
+      case SqlBody(_) =>
+        spark.sql(sql(spark, model, fingerprint, start, end, executionTs, mapping, thisModel, vars))
+      case ScalaBody(fn) => fn(spark, mapping, start, end)
+      case SeedBody(path) =>
+        val opts = model.kind match {
+          case k: ModelKind.Seed => k.options
+          case _ => Map.empty[String, String]
+        }
+        spark.read.option("header", "true").option("inferSchema", "true")
+          .options(opts).csv(path)
+    }
+
+  /** A statement — pre/post statements, merge expressions, on_virtual_update,
+    * before_all/after_all — macro-rendered the same way, then its model names
+    * resolved through `mapping`. */
+  def statement(statement: String, interval: Interval, executionTs: Long,
+                mapping: Map[String, String], thisModel: Option[String]): String =
+    Renderer.resolveTables(new MacroEvaluator(interval.start, interval.end,
+      executionTs, thisModel, variables, registry = macrosFn()._1).render(statement), mapping)
 }

@@ -14,26 +14,16 @@ class SnapshotEvaluator(
     val materializer: SparkMaterializer,
     val workspace: String,
     customStrategies: Map[String, (SparkMaterializer, PhysicalTable, DataFrame) => Unit] = Map.empty,
-    /** live view of project variables — a function so late-registered vars
-      * (e.g. dbt_project.yml `vars` merged by loadDbtProject) are visible */
+    /** project variables and macro registry, as [[QueryRenderer]] takes them */
     variablesFn: () => Map[String, String] = () => Map.empty,
-    /** live view of the custom-macro registry plus its version counter — a
-      * function for the same reason as variablesFn, and the version feeds the
-      * render-cache key so re-registering a macro under an existing name
-      * invalidates stale renders (the reference folds macro definitions into
-      * the snapshot fingerprint, snapshot/cache.py). */
     macrosFn: () => (Map[String, Seq[String] => String], Long) = () => (Map.empty, 0L),
     /** audit-failure hook (model, audit, message, blocking) — notification
       * targets observe both blocking aborts and non-blocking warns. */
     onAuditFailure: (String, String, String, Boolean) => Unit = (_, _, _, _) => ()) {
 
-  private def variables: Map[String, String] = variablesFn()
-  private def macros: Map[String, Seq[String] => String] = macrosFn()._1
-  private def macrosVersion: Long = macrosFn()._2
-
-  /** Rendered-SQL cache for this evaluator's lifetime (reference
-    * snapshot/cache.py) — see [[RenderCache]] for the key/bypass rules. */
-  val renderCache = new RenderCache()
+  /** The context's one render path (see [[QueryRenderer]]). */
+  val renderer = new QueryRenderer(variablesFn, macrosFn)
+  def renderCache: RenderCache = renderer.renderCache
 
   def spark: SparkSession = materializer.spark
 
@@ -141,42 +131,23 @@ class SnapshotEvaluator(
     spark.sql(s"CREATE OR REPLACE VIEW ${physicalTable(s).qualified} AS $sql")
   }
 
-  /** The one render path of every evaluator site: the context's variables
-    * and macros, `@this_model` bound to `thisModel`, catalog introspection
-    * over `mapping`, memoized in [[renderCache]]. */
-  private def renderSql(s: Snapshot, start: Long, end: Long, executionTs: Long,
-                        mapping: Map[String, String], thisModel: String,
-                        vars: Map[String, String] = variables): String =
-    RenderCache.cachedRender(renderCache, s.fingerprint.full, s.model, start, end,
-      executionTs, mapping, vars, thisModel = Some(thisModel),
-      schemaOf = Renderer.catalogSchemaOf(spark, mapping),
-      macros = macros, macrosVersion = macrosVersion,
-      columnValues = Renderer.catalogColumnValues(spark, mapping),
-      runQuery = Renderer.catalogRunQuery(spark, mapping))
+  /** A snapshot's SQL through [[renderer]], `@this_model` bound to `thisModel`. */
+  private[graft] def renderSql(s: Snapshot, start: Long, end: Long, executionTs: Long,
+                               mapping: Map[String, String], thisModel: String): String =
+    renderer.sql(spark, s.model, Some(s.fingerprint.full), start, end, executionTs,
+      mapping, Some(thisModel))
 
-  /** The model's query as a frame, whatever its body: SQL through
-    * [[renderSql]] (`vars` is read only there), Scala bodies called, seeds
-    * read with the kind's CSV options. */
+  /** A snapshot's query as a frame through [[renderer]]. */
   private[graft] def query(s: Snapshot, start: Long, end: Long, executionTs: Long,
                            mapping: Map[String, String], thisModel: String,
-                           vars: => Map[String, String] = variables): DataFrame =
-    s.model.body match {
-      case SqlBody(_) =>
-        spark.sql(renderSql(s, start, end, executionTs, mapping, thisModel, vars))
-      case ScalaBody(fn) => fn(spark, mapping, start, end)
-      case SeedBody(path) =>
-        val opts = s.model.kind match {
-          case k: ModelKind.Seed => k.options
-          case _ => Map.empty[String, String]
-        }
-        spark.read.option("header", "true").option("inferSchema", "true")
-          .options(opts).csv(path)
-    }
+                           vars: => Map[String, String] = renderer.variables): DataFrame =
+    renderer.frame(spark, s.model, Some(s.fingerprint.full), start, end, executionTs,
+      mapping, Some(thisModel), vars)
 
   /** dbt `{% if is_incremental() %}`: true only for an incremental kind
     * writing into a table that already has data. */
   private def incrementalVars(s: Snapshot, t: PhysicalTable): Map[String, String] =
-    variables + ("is_incremental" ->
+    renderer.variables + ("is_incremental" ->
       (s.model.kind.isIncremental && materializer.currentDataDir(t).nonEmpty).toString)
 
   /** Backfill one interval batch (reference `_evaluate_snapshot` :677):
@@ -275,7 +246,8 @@ class SnapshotEvaluator(
     val mapping = tableMapping
     val thisName = t.qualified
 
-    s.model.preStatements.foreach(st => spark.sql(renderStatement(s, st, interval, executionTs, mapping, thisName)))
+    s.model.preStatements.foreach(st =>
+      spark.sql(renderer.statement(st, interval, executionTs, mapping, Some(thisName))))
 
     def rendered: DataFrame = {
       val df = query(s, interval.start, interval.end, executionTs, mapping, thisName,
@@ -298,25 +270,9 @@ class SnapshotEvaluator(
     // ---- audit planning (before the write so aggregate-form audits can
     // ride the write action itself as observed metrics — one scan, not
     // write + N audit scans; see ObservedAudits) ------------------------
-    // the audit interval predicate must match the COLUMN's representation,
-    // exactly like the write guard (SparkMaterializer.timeBounds): a
-    // TIMESTAMP literal against an epoch/date column is a wrong predicate,
-    // and timestamp text is rendered in UTC explicitly so a JVM default
-    // zone differing from the session zone can't shift the window
     val timeCondStr: Option[String] = s.model.kind match {
       case k: ModelKind.IncrementalByTimeRange =>
-        def utc(ms: Long) = java.time.format.DateTimeFormatter
-          .ofPattern("yyyy-MM-dd HH:mm:ss.SSS").withZone(java.time.ZoneOffset.UTC)
-          .format(java.time.Instant.ofEpochMilli(ms))
-        val (lo, hi) = k.timeFormat match {
-          case "date" =>
-            (s"DATE '${java.time.LocalDate.ofEpochDay(Math.floorDiv(interval.start, 86400000L))}'",
-              s"DATE '${java.time.LocalDate.ofEpochDay(Math.floorDiv(interval.end + 86399999L, 86400000L))}'")
-          case "epoch"        => ((interval.start / 1000).toString, (interval.end / 1000).toString)
-          case "epoch_millis" => (interval.start.toString, interval.end.toString)
-          case _ => (s"TIMESTAMP '${utc(interval.start)}'", s"TIMESTAMP '${utc(interval.end)}'")
-        }
-        Some(s"${k.timeColumn} >= $lo AND ${k.timeColumn} < $hi")
+        Some(Audits.intervalCondition(k, interval.start, interval.end))
       case _ => None
     }
     final case class AuditSpec(name: String, blocking: Boolean,
@@ -407,13 +363,13 @@ class SnapshotEvaluator(
         else
           materializer.merge(t, rendered, k.uniqueKey,
             k.mergeFilter.map(f => org.apache.spark.sql.functions.expr(
-              renderStatement(s, f, interval, executionTs, mapping, thisName))),
+              renderer.statement(f, interval, executionTs, mapping, Some(thisName)))),
             k.whenMatchedUpdate.map { case (c, e) =>
               c -> org.apache.spark.sql.functions.expr(
-                renderStatement(s, e, interval, executionTs, mapping, thisName))
+                renderer.statement(e, interval, executionTs, mapping, Some(thisName)))
             },
             k.whenMatchedDelete.map(d => org.apache.spark.sql.functions.expr(
-              renderStatement(s, d, interval, executionTs, mapping, thisName))))
+              renderer.statement(d, interval, executionTs, mapping, Some(thisName)))))
       case _: ModelKind.IncrementalByPartition =>
         materializer.insertOverwriteByPartition(t, rendered)
       case k: ModelKind.IncrementalUnmanaged =>
@@ -432,7 +388,8 @@ class SnapshotEvaluator(
       case ModelKind.Embedded | ModelKind.External => ()
     }
 
-    s.model.postStatements.foreach(st => spark.sql(renderStatement(s, st, interval, executionTs, mapping, thisName)))
+    s.model.postStatements.foreach(st =>
+      spark.sql(renderer.statement(st, interval, executionTs, mapping, Some(thisName))))
 
     // audits on the affected interval (blocking; evaluator.py:1363). A failed
     // BLOCKING audit rolls the physical table back to the pre-write version
@@ -466,13 +423,6 @@ class SnapshotEvaluator(
       }
     }
   }
-
-  private def renderStatement(s: Snapshot, statement: String, interval: Interval,
-                              executionTs: Long, mapping: Map[String, String],
-                              thisName: String): String =
-    Renderer.resolveTables(
-      new graft.macros.MacroEvaluator(interval.start, interval.end, executionTs, Some(thisName),
-        variables, registry = macros).render(statement), mapping)
 
   /** MigrateSchemas (evaluator.py:1105): evolve the (reused) physical table of
     * a forward-only snapshot to the new query's output schema — analyzed, not
@@ -539,13 +489,13 @@ class SnapshotEvaluator(
         materializer.promoteCatalog(c, db, view, physicalTable(s, dev),
           s.model.virtualProperties)
         s.model.onVirtualUpdate.foreach(st =>
-          spark.sql(renderStatement(s, st, Interval(0L, executionTs), executionTs,
-            Map.empty, s"`$c`.`$db`.`$view`")))
+          spark.sql(renderer.statement(st, Interval(0L, executionTs), executionTs,
+            Map.empty, Some(s"`$c`.`$db`.`$view`"))))
       case None =>
         materializer.promote(db, view, physicalTable(s, dev), s.model.virtualProperties)
         s.model.onVirtualUpdate.foreach(st =>
-          spark.sql(renderStatement(s, st, Interval(0L, executionTs), executionTs,
-            Map.empty, s"`$db`.`$view`")))
+          spark.sql(renderer.statement(st, Interval(0L, executionTs), executionTs,
+            Map.empty, Some(s"`$db`.`$view`"))))
     }
   }
 

@@ -2,7 +2,7 @@ package graft.testing
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import graft.core._
-import graft.plans.Renderer
+import graft.plans.QueryRenderer
 
 /** Model unit tests (reference: sqlmesh/core/test/definition.py:447-571
   * `ModelTest` — YAML `inputs:` rows per upstream table, `outputs:` rows for
@@ -30,8 +30,10 @@ object ModelTest {
       /** expected rows per CTE name (reference: outputs.ctes) */
       expectedCtes: Map[String, Seq[Map[String, Any]]] = Map.empty)
 
-  /** Run one test case; throws [[Failure]] with a readable diff on mismatch. */
-  def run(spark: SparkSession, c: Case): Unit = {
+  /** Run one test case; throws [[Failure]] with a readable diff on mismatch.
+    * Renders through a context's `renderer` (its variables under the case's,
+    * its macros); `@this_model` is the model, i.e. its fixture if given. */
+  def run(spark: SparkSession, c: Case, renderer: QueryRenderer = new QueryRenderer()): Unit = {
     // register inputs as uniquely-suffixed temp views and map references
     val suffix = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
     val mapping = c.inputs.map { case (name, df) =>
@@ -39,13 +41,15 @@ object ModelTest {
       df.createOrReplaceTempView(view)
       name -> view
     }
+    val vars = renderer.variables ++ c.variables
     try {
-      val df = Renderer.evaluate(spark, c.model, c.start, c.end, c.executionTs,
-        mapping, c.variables)
+      val df = renderer.frame(spark, c.model, None, c.start, c.end, c.executionTs,
+        mapping, Some(c.model.name), vars)
       compare(s"query of ${c.model.name}", df, c.expected, c.partial)
       // CTE outputs: wrap the rendered SQL selecting the CTE by name
       c.expectedCtes.foreach { case (cte, rows) =>
-        val sql = Renderer.render(c.model, c.start, c.end, c.executionTs, mapping, c.variables)
+        val sql = renderer.sql(spark, c.model, None, c.start, c.end, c.executionTs,
+          mapping, Some(c.model.name), vars)
         val probe = spark.sql(replaceFinalSelect(sql, cte))
         compare(s"cte $cte of ${c.model.name}", probe, rows, c.partial)
       }
@@ -81,8 +85,10 @@ object ModelTest {
     val actual = df.select(cols.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
       .collect().map(rowToMap(cols)).toSeq
     val exp = expected.map(_.filter { case (k, _) => cols.contains(k) })
-    val normA = actual.map(normalize).sortBy(_.toString)
-    val normE = exp.map(normalize).sortBy(_.toString)
+    // rows sort by their sorted entries: a map's own toString follows its
+    // key order, which differs between fixture rows and result rows
+    val normA = actual.map(normalize).sortBy(_.toSeq.sorted.toString)
+    val normE = exp.map(normalize).sortBy(_.toSeq.sorted.toString)
     if (normA != normE)
       throw Failure(
         s"""$what mismatch

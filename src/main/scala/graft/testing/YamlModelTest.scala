@@ -6,6 +6,7 @@ import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import graft.core.{Model, SqlBody}
+import graft.plans.QueryRenderer
 
 /** The reference's YAML model-test format (sqlmesh/core/test/definition.py;
   * example: examples/sushi/tests/test_customer_revenue_by_day.yaml), parsed
@@ -46,16 +47,17 @@ object YamlModelTest {
     * Returns one Result per test; callers assert no failures. A
     * `nameFilter` selects ONE test before anything executes — a
     * single-test run never pays for (or triggers the side effects of) its
-    * sibling tests. */
+    * sibling tests. Queries render through `renderer` ([[ModelTest.run]]). */
   def runAll(spark: SparkSession, yaml: String,
              models: Map[String, Model],
-             nameFilter: Option[String] = None): Seq[Result] = {
+             nameFilter: Option[String] = None,
+             renderer: QueryRenderer = new QueryRenderer()): Seq[Result] = {
     val root = mapper.readTree(yaml)
     root.properties().asScala.toSeq
       .filter(e => nameFilter.forall(_ == e.getKey))
       .map { e =>
         val (name, spec) = (e.getKey, e.getValue)
-        try { runOne(spark, name, spec, models); Result(name, None) }
+        try { runOne(spark, name, spec, models, renderer); Result(name, None) }
         catch { case ex: Throwable => Result(name, Some(ex.getMessage)) }
       }
   }
@@ -71,12 +73,13 @@ object YamlModelTest {
 
   def runFile(spark: SparkSession, path: String,
               models: Map[String, Model],
-              nameFilter: Option[String] = None): Seq[Result] =
+              nameFilter: Option[String] = None,
+              renderer: QueryRenderer = new QueryRenderer()): Seq[Result] =
     runAll(spark, new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8"), models, nameFilter)
+      java.nio.file.Paths.get(path)), "UTF-8"), models, nameFilter, renderer)
 
   private def runOne(spark: SparkSession, name: String, spec: JsonNode,
-                     models: Map[String, Model]): Unit = {
+                     models: Map[String, Model], renderer: QueryRenderer): Unit = {
     val modelName = spec.path("model").asText()
     val model = models.getOrElse(modelName,
       // model may be defined inline for self-contained fixtures
@@ -101,7 +104,7 @@ object YamlModelTest {
       start = dayMs("start", 0L), end = dayMs("end", 86400000L),
       executionTs = dayMs("execution_time", 0L),
       partial = Option(spec.get("partial")).exists(_.asBoolean()),
-      expectedCtes = ctes))
+      expectedCtes = ctes), renderer)
   }
 
   /** Auto-generate a YAML unit test from LIVE data (reference `sqlmesh
@@ -112,7 +115,8 @@ object YamlModelTest {
   def fromLive(spark: SparkSession, testName: String, model: Model,
                resolve: String => DataFrame, limit: Int = 10,
                start: Long = 0L, end: Long = 86400000L,
-               executionTs: Long = 0L): String = {
+               executionTs: Long = 0L,
+               renderer: QueryRenderer = new QueryRenderer()): String = {
     val deps = model.references.toSeq.sorted
     val suffix = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
     val mapping = deps.map { d =>
@@ -130,8 +134,8 @@ object YamlModelTest {
         df.createOrReplaceTempView(mapping(d))
         d -> df
       }
-      val out = graft.plans.Renderer.evaluate(spark, model, start, end,
-        executionTs, mapping)
+      val out = renderer.frame(spark, model, None, start, end, executionTs, mapping,
+        Some(model.name))
 
       val root = mapper.createObjectNode()
       val test = root.putObject(testName)

@@ -1204,4 +1204,35 @@ class ContextE2ESpec extends AnyFunSuite {
       dayMs("1994-01-01"), dayMs("1994-01-02"))
     assert(empty("accepted_range") == 0L)
   }
+
+  test("apply records a plan's snapshots in one durable write, whatever their count") {
+    def applyWrites(models: Int): Long = {
+      val ctx = new GraftContext(spark, SparkTestSession.tmpDir("dw-ws"), concurrency = 2,
+        durableState = true)
+      ctx.addExternal("raw.orders", s"$sf/orders.parquet")
+      (1 to models).foreach(i => ctx.addModel(Model(s"dw.m$i", SqlBody(
+        s"SELECT $i AS v, count(*) AS n FROM raw.orders"))))
+      val p = ctx.plan("prod", 0L, D, skipBackfill = true)
+      val store = ctx.state.asInstanceOf[graft.state.FileStateStore]
+      val before = store.durableWrites
+      ctx.apply(p)
+      store.durableWrites - before
+    }
+    assert(applyWrites(2) == applyWrites(8))
+  }
+
+  test("ad-hoc audit scopes an epoch_millis model's window like the evaluator") {
+    val ctx = newCtx()
+    val (d1, d2, d3) = (dayMs("1995-01-01"), dayMs("1995-01-02"), dayMs("1995-01-03"))
+    // one NULL, inside the second day
+    ctx.addModel(Model("mart.ms_events", SqlBody(
+      s"""SELECT * FROM VALUES (1, 'a', ${d1 + 3600000L}L), (2, CAST(NULL AS STRING),
+         |  ${d2 + 3600000L}L), (3, 'c', ${d2 + 7200000L}L) AS t(id, v, ts)""".stripMargin),
+      kind = ModelKind.IncrementalByTimeRange(timeColumn = "ts", timeFormat = "epoch_millis"),
+      start = Some(d1),
+      audits = Seq("not_null_non_blocking" -> Map("columns" -> "v"))))
+    ctx.apply(ctx.plan("prod", d1, d3))
+    assert(ctx.audit("mart.ms_events", "prod", d2, d3)("not_null_non_blocking") == 1L)
+    assert(ctx.audit("mart.ms_events", "prod", d1, d2)("not_null_non_blocking") == 0L)
+  }
 }

@@ -120,4 +120,12 @@ class ModelTestSpec extends AnyFunSuite {
     intercept[IllegalStateException](Linter.enforce(Seq(starModel)))
     Linter.enforce(Seq(clean)) // no blocking violations
   }
+
+  test("row sets compare regardless of the key order of expected rows") {
+    val m = Model("mart.pairs", SqlBody("SELECT a, b FROM raw.pairs"))
+    val inputs = Map("raw.pairs" -> Seq((1, 2), (3, 0)).toDF("a", "b"))
+    // fixture rows parsed from YAML arrive with an arbitrary key order
+    ModelTest.run(spark, ModelTest.Case(m, inputs,
+      expected = Seq(Map("b" -> 2, "a" -> 1), Map("a" -> 3, "b" -> 0))))
+  }
 }
