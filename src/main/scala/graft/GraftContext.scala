@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core._
 import graft.adapter.{PhysicalTable, SparkMaterializer}
-import graft.plans.{BatchPlanner, Renderer, Scheduler, Signals, SnapshotEvaluator}
+import graft.plans.{Batch, BatchPlanner, Renderer, Scheduler, Signals, SnapshotEvaluator}
 import graft.state.{EnvironmentRecord, InMemoryStateStore, StateStore}
 
 /** A plan: what changes and what gets backfilled (reference:
@@ -147,7 +147,7 @@ class GraftContext(
   /** bumped on every addMacro (including same-name re-registration) — feeds
     * the render-cache key so redefinition invalidates stale renders */
   private val macroVersion = new java.util.concurrent.atomic.AtomicLong(0L)
-  lazy val evaluator = new SnapshotEvaluator(materializer, workspace, customStrategies.toMap,
+  lazy val evaluator = new SnapshotEvaluator(materializer, workspace, customStrategies.get,
     () => allVariables, () => (customMacros.toMap, macroVersion.get),
     onAuditFailure = (m, a, msg, blocking) => {
       notifier.notifyAuditFailure(m, a, msg, blocking)
@@ -395,16 +395,19 @@ class GraftContext(
     * `sqlmesh render`, cli/main.py:253). */
   def renderSql(name: String, start: Long, end: Long,
                 executionTs: Long = System.currentTimeMillis()): String = {
-    val (s, mapping, thisModel) = renderScope(name)
+    val (s, mapping, thisModel) = renderScope()(name, start, end, executionTs)
     evaluator.renderSql(s, start, end, executionTs, mapping, thisModel)
   }
 
-  /** A model's snapshot, upstream mapping and `@this_model` table: what
-    * `render`, lineage and `evaluate` render against, as a backfill does. */
-  private def renderScope(name: String): (Snapshot, Map[String, String], String) = {
+  /** What `render`, lineage, lint and `evaluate` render against, as a
+    * backfill does: the project fingerprinted once, then per (model, start,
+    * end, executionTs) its snapshot, upstream mapping and `@this_model`. */
+  private def renderScope()
+      : (String, Long, Long, Long) => (Snapshot, Map[String, String], String) = {
     val snaps = snapshotsOf(models.keys.toSeq)
-    val s = snaps(name)
-    (s, tableMappingFor(snaps.values.toSeq)(name), evaluator.physicalTable(s).qualified)
+    val upstreams = evaluator.upstreams(snaps.values, Map.empty, externals.toMap)
+    (name, start, end, executionTs) => (snaps(name), upstreams(Batch(snaps(name).model,
+      Interval(start, end), executionTs)), evaluator.physicalTable(snaps(name)).qualified)
   }
 
   /** Column-level lineage for a model (reference `sqlmesh lineage
@@ -415,7 +418,7 @@ class GraftContext(
     * their physical tables, so their tables must exist (plan applied) or be
     * externals. */
   def columnLineage(name: String): Map[String, Set[String]] = {
-    val (s, mapping, thisModel) = renderScope(name)
+    val (s, mapping, thisModel) = renderScope()(name, 0L, 86400000L, 0L)
     graft.plans.Lineage.columnLineage(
       spark.sql(evaluator.renderSql(s, 0L, 86400000L, 0L, mapping, thisModel)),
       graft.plans.Lineage.namerFromMapping(mapping))
@@ -436,11 +439,11 @@ class GraftContext(
            enforce: Boolean = false): Seq[graft.linter.Linter.Violation] = {
     import graft.linter.Linter
     val base = Linter.lint(models.values.toSeq, Linter.defaultRules ++ extraRules)
+    def unresolved(m: Model): Seq[String] =
+      m.references.toSeq.sorted.filterNot(r => models.contains(r) || externals.contains(r))
     val missingExt = models.values.flatMap { m =>
-      m.references.toSeq.sorted
-        .filterNot(r => models.contains(r) || externals.contains(r))
-        .map(r => Linter.Violation("nomissingexternalmodels", m.name,
-          s"reference '$r' is neither a model nor a registered external", blocking = true))
+      unresolved(m).map(r => Linter.Violation("nomissingexternalmodels", m.name,
+        s"reference '$r' is neither a model nor a registered external", blocking = true))
     }
     // star-specific cousin of the above (builtin.py:83): a `SELECT *` whose
     // upstream has no obtainable schema is not just an unregistered
@@ -450,21 +453,22 @@ class GraftContext(
     val starExpansion = models.values.flatMap { m =>
       m.body match {
         case SqlBody(sql) if starRe.findFirstIn(sql).nonEmpty =>
-          val unresolved = m.references.toSeq.sorted
-            .filterNot(r => models.contains(r) || externals.contains(r))
-          if (unresolved.nonEmpty)
+          val missing = unresolved(m)
+          if (missing.nonEmpty)
             Some(Linter.Violation("invalidselectstarexpansion", m.name,
-              s"SELECT * cannot be expanded: missing schema(s) for ${unresolved.mkString(", ")}" +
+              s"SELECT * cannot be expanded: missing schema(s) for ${missing.mkString(", ")}" +
                 " — register them (addExternal / create_external_models)", blocking = true))
           else None
         case _ => None
       }
     }
+    lazy val scope = renderScope()
     val analysis = models.values.flatMap { m =>
       m.body match {
         case SqlBody(_) if m.kind != ModelKind.External && m.kind != ModelKind.Embedded =>
           try {
-            val outAttrs = spark.sql(renderSql(m.name, 0L, 86400000L, 0L))
+            val (s, mapping, thisModel) = scope(m.name, 0L, 86400000L, 0L)
+            val outAttrs = spark.sql(evaluator.renderSql(s, 0L, 86400000L, 0L, mapping, thisModel))
               .queryExecution.analyzed.output
             val out = outAttrs.map(_.name)
             // noambiguousprojections (builtin.py:292): duplicate output
@@ -1106,8 +1110,8 @@ class GraftContext(
     // in __dev tables when the plan targets a non-prod environment
     val devFlags = steps.devFlags
     // PhysicalLayerUpdate
-    val mapping = tableMappingFor(p.snapshots, devFlags)
-    p.snapshots.foreach(s => evaluator.create(s, mapping(s.model.name)))
+    val upstreams = evaluator.upstreams(p.snapshots, devFlags, externals.toMap)
+    p.snapshots.foreach(evaluator.create)
     // MigrateSchemas: forward-only changes evolve the reused physical table in
     // place — but NEVER from a dev plan, whose preview table starts fresh.
     // `--allow-destructive-model` lifts the on_destructive_change guard for
@@ -1116,7 +1120,7 @@ class GraftContext(
       var m = nw.model
       if (p.allowDestructive.contains(m.name)) m = m.copy(onDestructiveChange = "allow")
       if (p.allowAdditive.contains(m.name)) m = m.copy(onAdditiveChange = "allow")
-      evaluator.migrate(nw.copy(model = m), p.start, p.end, executionTs, mapping(nw.model.name))
+      evaluator.migrate(nw.copy(model = m), p.start, p.end, executionTs, upstreams)
     }
     // Backfill. `--skip-backfill`/`--empty-backfill` plans build just the
     // physical layer (empty tables/views created parents-first so the env
@@ -1130,19 +1134,19 @@ class GraftContext(
           !byName(n).model.references.exists(r => remaining.contains(r) && r != n))
         require(ready.nonEmpty, s"cycle among models: $remaining")
         ready.toSeq.sorted.filterNot(steps.backfillable).foreach(n => evaluator.ensurePhysical(
-          byName(n), executionTs, mapping(n), devFlags.getOrElse(n, false)))
+          byName(n), executionTs, upstreams, devFlags.getOrElse(n, false)))
         remaining --= ready
       }
     }
     if (!p.skipBackfill) {
       val live = steps.backfill.map(s => state.getSnapshot(s.model.name, s.version).getOrElse(s))
-      scheduler.run(live, p.start, p.end, executionTs, mapping, signals.toMap, devFlags,
+      scheduler.run(live, p.start, p.end, executionTs, upstreams, signals.toMap, devFlags,
         recordOnly = p.emptyBackfill, minIntervals = p.minIntervals)
     }
     // standalone audits gate promotion (audit/definition.py:559): they run
     // against the PHYSICAL tables, so a failing blocking audit aborts before
     // any environment view is repointed at the new data
-    runStandaloneAudits(p.snapshots, devFlags, p.start, p.end, executionTs)
+    runStandaloneAudits(upstreams, p.start, p.end, executionTs)
     // no_gaps (_ensure_no_gaps, state_sync/db/facade.py:581): a re-versioned
     // incremental model must cover everything its predecessor had before its
     // env views repoint — promotion never silently serves interval holes
@@ -1256,10 +1260,12 @@ class GraftContext(
         }
         allSnaps.filter(s => wanted(s.model.name))
       }
-    val devFlags = devFlagsOf(env, snaps)
-    scheduler.run(snaps, start, end, executionTs, tableMappingFor(snaps, devFlags),
-      signals.toMap, devFlags, ignoreCron = ignoreCron)
-    runStandaloneAudits(snaps, devFlags, start, end, executionTs)
+    // references resolve against the whole environment, selected or not
+    val devFlags = devFlagsOf(env, allSnaps)
+    val upstreams = evaluator.upstreams(allSnaps, devFlags, externals.toMap)
+    scheduler.run(snaps, start, end, executionTs, upstreams, signals.toMap, devFlags,
+      ignoreCron = ignoreCron)
+    runStandaloneAudits(upstreams, start, end, executionTs)
     runEnvStatements(afterAll, start, end, executionTs)
   }
 
@@ -1267,26 +1273,18 @@ class GraftContext(
     * tables (audit/definition.py:559; scheduler audit pass). Blocking
     * failures abort the run; non-blocking ones warn. Only a LIMIT-1
     * violation sample ever reaches the driver. */
-  private def runStandaloneAudits(snaps: Seq[Snapshot], devFlags: Map[String, Boolean],
-                                  start: Long, end: Long, executionTs: Long): Unit = {
-    if (standaloneAudits.isEmpty) return
-    val byName = snaps.map(s => s.model.name -> s).toMap
+  private def runStandaloneAudits(upstreams: Batch => Map[String, String],
+                                  start: Long, end: Long, executionTs: Long): Unit =
     standaloneAudits.values.foreach { a =>
       val synthetic = Model(name = a.name, body = SqlBody(a.sql))
-      val mapping = synthetic.references.flatMap { r =>
-        byName.get(r)
-          .map(s => r -> evaluator.physicalTable(s, devFlags.getOrElse(r, false)).qualified)
-          .orElse(externals.get(r).map(r -> _))
-      }.toMap
-      val violations = evaluator.renderer.frame(spark, synthetic, None, start, end,
-        executionTs, mapping, None).limit(1).collect()
+      val violations = evaluator.renderer.frame(spark, synthetic, None, start, end, executionTs,
+        upstreams(Batch(synthetic, Interval(start, end), executionTs)), None).limit(1).collect()
       if (violations.nonEmpty) {
         val msg = s"standalone audit ${a.name} failed: ${violations.head}"
         if (a.blocking) throw new IllegalStateException(msg)
         else System.err.println(s"[graft] WARN $msg")
       }
     }
-  }
 
   /** Per-batch report of the LAST backfill (model, interval, wall millis) —
     * what ran and what was slow (the reference's per-batch console
@@ -1335,8 +1333,9 @@ class GraftContext(
       // them against the SAME environment being audited, like the evaluator's
       // resolvedArgs: a dev-env audit must check the dev parent, not prod's
       // (checking a dev child against the prod parent reports phantom
-      // violations for any row the dev plan legitimately changed)
-      val mapping = models.keys.map(n => n -> envTable(n, env)).toMap
+      // violations for any row the dev plan legitimately changed); externals resolve too
+      val mapping = externals.toMap ++ models.values
+        .filter(_.kind != ModelKind.External).map(m => m.name -> envTable(m.name, env))
       val resolvedArgs = (args ++ timeCond).map { case (k, v) =>
         k -> Renderer.resolveTables(v, mapping)
       }
@@ -1348,7 +1347,7 @@ class GraftContext(
     * execute, no materialization. */
   def evaluate(name: String, start: Long, end: Long,
                executionTs: Long = System.currentTimeMillis()): DataFrame = {
-    val (s, mapping, thisModel) = renderScope(name)
+    val (s, mapping, thisModel) = renderScope()(name, start, end, executionTs)
     evaluator.query(s, start, end, executionTs, mapping, thisModel)
   }
 
@@ -1522,35 +1521,5 @@ class GraftContext(
       materializer.dropTable(evaluator.physicalTable(s, dev = true))
       state.deleteSnapshot(s.model.name, s.version)
     }
-  }
-
-  /** Upstream-reference resolution for each model: model refs → physical
-    * snapshot tables (dev previews resolve to their `__dev` tables); external
-    * refs → registered locations. */
-  private def tableMappingFor(
-      snaps: Seq[Snapshot],
-      devFlags: Map[String, Boolean] = Map.empty): String => Map[String, String] = {
-    val byName = snaps.map(s => s.model.name -> s).toMap
-    lazy val mappingFor: String => Map[String, String] = (name: String) => {
-      val m = models(name)
-      m.references.flatMap { r =>
-        byName.get(r) match {
-          case Some(up) if up.model.kind == ModelKind.Embedded =>
-            // EMBEDDED: inline the upstream query as a subquery, with the
-            // embedded model's own refs resolved recursively (evaluator.py:1965)
-            val sub = evaluator.renderSql(up, 0L, 0L, 0L, mappingFor(r),
-              evaluator.physicalTable(up).qualified)
-            Some(r -> s"($sub)")
-          // EXTERNAL models carry schema metadata only — the physical
-          // binding is still the registered external relation
-          case Some(up) if up.model.kind == ModelKind.External =>
-            externals.get(r).map(r -> _)
-          case Some(up) =>
-            Some(r -> evaluator.physicalTable(up, devFlags.getOrElse(r, false)).qualified)
-          case None => externals.get(r).map(r -> _)
-        }
-      }.toMap
-    }
-    mappingFor
   }
 }

@@ -31,6 +31,9 @@ final case class SnapshotFingerprint(
 }
 
 object Fingerprint {
+  /** Total fingerprints computed (a spec pins lint's per-model cost). */
+  val computed = new java.util.concurrent.atomic.AtomicLong
+
   def md5Short(s: String): String =
     MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
       .take(8).map("%02x".format(_)).mkString
@@ -54,6 +57,7 @@ object Fingerprint {
   /** Mirrors fingerprint_from_node: data hash from rendered body + kind data
     * fields; metadata hash from the rest; parent hashes folded in recursively. */
   def of(model: Model, renderedBody: String, parents: Seq[SnapshotFingerprint]): SnapshotFingerprint = {
+    computed.incrementAndGet()
     val dataParts = Seq(canonicalSql(renderedBody), model.name, model.storageFormat,
       model.intervalUnitName.getOrElse(""),
       model.stamp.getOrElse("")) ++ // stamp busts the data hash (definition.py:1135)

@@ -60,13 +60,14 @@ class Scheduler(
 
   /** Backfill all missing intervals in [start, end) for the given snapshots,
     * honoring per-model batch_size and cross-model DAG order. `tableMapping`
-    * resolves upstream references (model name -> physical/external table). */
+    * resolves one [[Batch]]'s upstream references, as [[SnapshotEvaluator.upstreams]]
+    * does; it is called once per evaluated batch, never under `recordOnly`. */
   def run(
       snapshots: Seq[Snapshot],
       start: Long,
       end: Long,
       executionTs: Long,
-      tableMapping: String => Map[String, String],
+      tableMapping: Batch => Map[String, String],
       signals: Map[String, Interval => Boolean] = Map.empty,
       devFlags: Map[String, Boolean] = Map.empty,
       /** `--empty-backfill` (plan/builder.py:76): record every interval this
@@ -126,12 +127,12 @@ class Scheduler(
             }
             var first = (if (dev) fresh.devIntervals else fresh.intervals).isEmpty
             val ready = batches.filter(b => signals.get(name).forall(sig => sig(b)))
-            lazy val mapping = tableMapping(name)
+            def mapping(b: Interval) = tableMapping(Batch(fresh.model, b, executionTs))
             if (recordOnly) {
               ready.foreach(b => state.addInterval(name, snap.version, b, dev))
             } else if (batchConc <= 1 || ready.size <= 1) {
               ready.foreach { b =>
-                timed(name, b)(evaluator.evaluate(fresh, b, executionTs, mapping, first, dev))
+                timed(name, b)(evaluator.evaluate(fresh, b, executionTs, mapping(b), first, dev))
                 state.addInterval(name, snap.version, b, dev)
                 first = false
               }
@@ -141,16 +142,16 @@ class Scheduler(
               // dirs (phase 1) and publish serially (phase 2): concurrent
               // writers never share a destination path
               val (head, rest) = (ready.head, ready.tail)
-              timed(name, head)(evaluator.evaluate(fresh, head, executionTs, mapping, first, dev))
+              timed(name, head)(evaluator.evaluate(fresh, head, executionTs, mapping(head), first, dev))
               state.addInterval(name, snap.version, head, dev)
               val pool2 = Executors.newFixedThreadPool(batchConc)
               try {
-                val staged = rest.map(b => b -> pool2.submit(
-                  new java.util.concurrent.Callable[String] {
-                    def call(): String = evaluator.stageBatch(fresh, b, executionTs, mapping, dev)
-                  }))
-                staged.foreach { case (b, f) =>
-                  timed(name, b)(evaluator.ingestStaged(fresh, b, executionTs, mapping, f.get(), dev))
+                val staged = rest.map(b => (b, mapping(b))).map { case (b, m) =>
+                  (b, m, pool2.submit(new java.util.concurrent.Callable[String] {
+                    def call(): String = evaluator.stageBatch(fresh, b, executionTs, m, dev)
+                  })) }
+                staged.foreach { case (b, m, f) =>
+                  timed(name, b)(evaluator.ingestStaged(fresh, b, executionTs, m, f.get(), dev))
                   state.addInterval(name, snap.version, b, dev)
                 }
               } finally pool2.shutdown()

@@ -5,6 +5,9 @@ import graft.core._
 import graft.adapter.{PhysicalTable, SparkMaterializer}
 import graft.audits.Audits
 
+/** One evaluation of a model: the consumer, its interval and execution time. */
+final case class Batch(model: Model, interval: Interval, executionTs: Long)
+
 /** Evaluation strategies: model kind → materializer calls (reference:
   * sqlmesh/core/snapshot/evaluator.py, dispatch :1643 `_evaluation_strategy`;
   * strategy table SURVEY §2.2). Every strategy implements create/insert/
@@ -13,7 +16,8 @@ import graft.audits.Audits
 class SnapshotEvaluator(
     val materializer: SparkMaterializer,
     val workspace: String,
-    customStrategies: Map[String, (SparkMaterializer, PhysicalTable, DataFrame) => Unit] = Map.empty,
+    /** CUSTOM-kind strategies by name, looked up at evaluation time */
+    customStrategies: String => Option[(SparkMaterializer, PhysicalTable, DataFrame) => Unit],
     /** project variables and macro registry, as [[QueryRenderer]] takes them */
     variablesFn: () => Map[String, String] = () => Map.empty,
     macrosFn: () => (Map[String, Seq[String] => String], Long) = () => (Map.empty, 0L),
@@ -28,6 +32,27 @@ class SnapshotEvaluator(
   def spark: SparkSession = materializer.spark
 
   def physicalTable(s: Snapshot): PhysicalTable = physicalTable(s, dev = false)
+
+  /** The one upstream resolver: what each name in a batch consumer's OWN
+    * `references` reads at that batch. An EMBEDDED model inlines as a subquery
+    * rendered at the batch's interval (reference EmbeddedStrategy,
+    * evaluator.py:1965); an EXTERNAL-kind model or a non-model name reads its
+    * registered external; any other model its physical (or `__dev`) table. */
+  def upstreams(snapshots: Iterable[Snapshot], devFlags: Map[String, Boolean],
+                externals: Map[String, String]): Batch => Map[String, String] = {
+    val byName = snapshots.map(s => s.model.name -> s).toMap
+    def resolve(b: Batch): Map[String, String] = b.model.references.flatMap { r =>
+      byName.get(r) match {
+        case Some(up) if up.model.kind == ModelKind.Embedded =>
+          Some(r -> s"(${renderSql(up, b.interval.start, b.interval.end, b.executionTs,
+            resolve(b.copy(model = up.model)), physicalTable(up).qualified)})")
+        case Some(up) if up.model.kind != ModelKind.External =>
+          Some(r -> physicalTable(up, devFlags.getOrElse(r, false)).qualified)
+        case _ => externals.get(r).map(r -> _)
+      }
+    }.toMap
+    resolve
+  }
 
   /** `dev = true` gives the `__dev` preview table (reference `__dev`/`__temp`
     * suffixing, snapshot/definition.py:1761 table_name): keyed by the change's
@@ -116,7 +141,7 @@ class SnapshotEvaluator(
   /** PhysicalLayerUpdate: ensure schema + (empty) physical object exists
     * (evaluator.py:360). For parquet-backed tables, creation happens lazily on
     * first insert; views are created eagerly. */
-  def create(s: Snapshot, tableMapping: Map[String, String]): Unit = {
+  def create(s: Snapshot): Unit = {
     materializer.createSchema(s"graft__${s.model.schemaName}")
     // View bodies reference upstream physical tables that may not exist until
     // backfill runs; the scheduler re-creates views DAG-ordered in evaluate().
@@ -157,16 +182,17 @@ class SnapshotEvaluator(
     * env views must resolve even though no interval was ever evaluated.
     * Callers iterate parents-first so view/limit(0) bodies can reference
     * their upstreams. */
-  def ensurePhysical(s: Snapshot, executionTs: Long, tableMapping: Map[String, String],
+  def ensurePhysical(s: Snapshot, executionTs: Long, upstreams: Batch => Map[String, String],
                      dev: Boolean = false): Unit = {
     val t = physicalTable(s, dev)
+    lazy val mapping = upstreams(Batch(s.model, Interval(0L, 0L), executionTs))
     s.model.kind match {
       case ModelKind.View =>
         if (!materializer.tableExists(t))
-          createView(s, Interval(0L, 0L), executionTs, tableMapping)
+          createView(s, Interval(0L, 0L), executionTs, mapping)
       case k if k.isMaterialized =>
         if (materializer.currentDataDir(t).isEmpty) {
-          val df = query(s, 0L, 0L, executionTs, tableMapping, t.qualified)
+          val df = query(s, 0L, 0L, executionTs, mapping, t.qualified)
           materializer.replaceQuery(t, withManagedCols(df, s.model).limit(0))
         }
       case _ => ()
@@ -239,11 +265,10 @@ class SnapshotEvaluator(
       s: Snapshot,
       interval: Interval,
       executionTs: Long,
-      tableMapping: Map[String, String],
+      mapping: Map[String, String],
       isFirstInsert: Boolean,
       dev: Boolean): Unit = {
     val t = physicalTable(s, dev)
-    val mapping = tableMapping
     val thisName = t.qualified
 
     s.model.preStatements.foreach(st =>
@@ -382,7 +407,7 @@ class SnapshotEvaluator(
       case _: ModelKind.Seed =>
         if (materializer.currentDataDir(t).isEmpty) materializer.replaceQuery(t, rendered)
       case k: ModelKind.Custom =>
-        customStrategies.getOrElse(k.strategyName,
+        customStrategies(k.strategyName).getOrElse(
           throw new IllegalArgumentException(s"unregistered custom strategy ${k.strategyName}"))(
           materializer, t, rendered)
       case ModelKind.Embedded | ModelKind.External => ()
@@ -428,12 +453,13 @@ class SnapshotEvaluator(
     * a forward-only snapshot to the new query's output schema — analyzed, not
     * executed, so migration costs one table rewrite, never a recompute. */
   def migrate(s: Snapshot, start: Long, end: Long, executionTs: Long,
-              mapping: Map[String, String]): Unit = {
+              upstreams: Batch => Map[String, String]): Unit = {
     val t = physicalTable(s)
     if (materializer.currentDataDir(t).isEmpty) return
     // full render context — a model using variables or custom macros must
     // migrate the same way it evaluates
-    val target = query(s, start, end, executionTs, mapping, t.qualified).schema
+    val target = query(s, start, end, executionTs,
+      upstreams(Batch(s.model, Interval(start, end), executionTs)), t.qualified).schema
     // on_destructive_change guard (reference model attr): forward-only
     // migrations that would drop/narrow columns abort (or warn) — history
     // destruction must be opted into, never accidental
