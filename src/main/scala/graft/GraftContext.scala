@@ -389,7 +389,7 @@ class GraftContext(
     * batch interval first — the built-in `freshness` signal (signal.py:46). */
   def addFreshnessSignal(modelName: String): this.type =
     addSignal(modelName,
-      Signals.freshness(state, models(modelName).references.toSeq.filter(models.contains)))
+      Signals.freshness(state, ModelDag(models.values).parents(modelName).toSeq))
 
   /** Render a model's SQL for an interval without executing (reference
     * `sqlmesh render`, cli/main.py:253). */
@@ -591,8 +591,8 @@ class GraftContext(
   }
 
   /** Which snapshots use their `__dev` preview table (DeployabilityIndex). */
-  private def devFlagsOf(env: String, snaps: Seq[Snapshot]): Map[String, Boolean] = {
-    val index = DeployabilityIndex.of(snaps, snaps.map(s => s.model.name -> s.model.references).toMap)
+  private def devFlagsOf(env: String, snaps: Seq[Snapshot], dag: ModelDag): Map[String, Boolean] = {
+    val index = DeployabilityIndex.of(snaps, dag)
     snaps.map(s => s.model.name -> (env != "prod" && !index.isDeployable(s))).toMap
   }
 
@@ -607,7 +607,7 @@ class GraftContext(
       if (select.isEmpty) _ => true
       else ModelSelector.expand(select, snaps.map(s => s.model.name -> s.model).toMap,
         changedFiles = gitChangedFiles)
-    val devFlags = devFlagsOf(env, snaps)
+    val devFlags = devFlagsOf(env, snaps, ModelDag(snaps.map(_.model)))
     val now = System.currentTimeMillis()
     snaps.collect { case s if s.model.kind.isMaterialized && chosen(s.model.name) =>
       s.model.name -> BatchPlanner.pending(s, start, math.min(end, now), now,
@@ -621,8 +621,8 @@ class GraftContext(
     * process ([[BatchPlanner]]), computed WITHOUT recording anything. */
   def exportSchedule(env: String, start: Long, end: Long): Seq[graft.plans.ScheduleExport.ModelSchedule] = {
     val snaps = envSnapshots(env)
-    val names = snaps.map(_.model.name).toSet
-    val devFlags = devFlagsOf(env, snaps)
+    val dag = ModelDag(snaps.map(_.model))
+    val devFlags = devFlagsOf(env, snaps, dag)
     val now = System.currentTimeMillis()
     snaps.collect { case s if s.model.kind.isMaterialized =>
       val m = s.model
@@ -638,7 +638,7 @@ class GraftContext(
         },
         owner = m.owner,
         // within-project dependencies only: externals are inputs, not tasks
-        dependsOn = m.references.filter(names.contains).toSeq.sorted,
+        dependsOn = dag.parents(m.name).toSeq.sorted,
         hasSignal = signals.contains(m.name),
         batches = BatchPlanner.pending(s, start, end, now, devFlags(m.name)).batches)
     }.sortBy(_.name)
@@ -675,10 +675,10 @@ class GraftContext(
     models.values.foreach { m =>
       sb.append(s"  ${q(m.name)} [label=${q(s"${m.name}\\n${m.kind.name}")}];\n")
     }
-    val ext = models.values.flatMap(_.references).toSet.diff(models.keySet)
-    ext.toSeq.sorted.foreach(e => sb.append(s"  ${q(e)} [style=dashed];\n"))
+    val dag = ModelDag.withExternals(models.values)
+    (dag.names -- models.keySet).toSeq.sorted.foreach(e => sb.append(s"  ${q(e)} [style=dashed];\n"))
     models.values.foreach { m =>
-      m.references.toSeq.sorted.foreach(r => sb.append(s"  ${q(r)} -> ${q(m.name)};\n"))
+      dag.parents(m.name).toSeq.sorted.foreach(r => sb.append(s"  ${q(r)} -> ${q(m.name)};\n"))
     }
     sb.append("}\n").toString
   }
@@ -816,19 +816,9 @@ class GraftContext(
     val unchanged = Seq.newBuilder[Snapshot]
     val categories = scala.collection.mutable.Map[String, ChangeCategory]()
 
-    // parents-first order (Kahn over in-repo references)
-    val names = models.keys.toSeq
-    val order = {
-      val out = Seq.newBuilder[String]
-      var remaining = names.toSet
-      while (remaining.nonEmpty) {
-        val ready = remaining.filter(n =>
-          !models(n).references.exists(r => remaining.contains(r) && r != n)).toSeq.sorted
-        require(ready.nonEmpty, s"cycle among models: $remaining")
-        out ++= ready; remaining --= ready
-      }
-      out.result()
-    }
+    // one graph over the snapshots' models: walked parents-first here, then
+    // the restatement cascade and the deployability index read it
+    val dag = ModelDag(snaps.values.map(_.model))
 
     def kindForwardOnly(m: Model): Boolean = m.kind match {
       case k: ModelKind.IncrementalByTimeRange => k.forwardOnly
@@ -848,7 +838,7 @@ class GraftContext(
           .flatMap(id => state.getSnapshotById(name, id)))
         .orElse(state.latestSnapshot(name))
 
-    order.map(snaps).foreach { s =>
+    dag.levels.flatten.map(snaps).foreach { s =>
       val name = s.model.name
       baseline(name) match {
         case None => added += s.copy(category = Some(ChangeCategory.Breaking))
@@ -861,7 +851,7 @@ class GraftContext(
             forcedVersion = Some(old.version), intervals = old.intervals)
         case Some(old) if old.fingerprint.dataHash == s.fingerprint.dataHash =>
           // own query unchanged; version moved through a parent
-          val parentCats = s.model.references.flatMap(categories.get)
+          val parentCats = dag.parents(name).flatMap(categories.get)
           val nonBreakingAncestors = parentCats.nonEmpty && parentCats.forall {
             case ChangeCategory.NonBreaking | ChangeCategory.IndirectNonBreaking |
                  ChangeCategory.Metadata => true
@@ -896,27 +886,18 @@ class GraftContext(
       .map(_.snapshots.keySet.filterNot(snaps.contains).toSeq).getOrElse(Nil)
 
     // restatements cascade to transitive dependents (reference
-    // plan/builder.py:369 _build_restatements): a child rebuilt from restated
-    // parent data must re-run the same interval
-    val cascaded = {
-      var acc = restate
-      var frontier = restate.keySet
-      while (frontier.nonEmpty) {
-        val children = models.values
-          .filter(m => m.references.exists(frontier)).map(_.name).toSet -- acc.keySet
-        children.foreach { c =>
-          val parentIvs = models(c).references.flatMap(acc.get)
-          if (parentIvs.nonEmpty)
-            acc += c -> Interval(parentIvs.map(_.start).min, parentIvs.map(_.end).max)
-        }
-        frontier = children
-      }
-      acc
+    // plan/builder.py:369 _build_restatements): walked parents-first, a
+    // model re-runs the smallest interval covering its own requested window
+    // and the windows of ALL its restated parents — a child rebuilt from
+    // restated parent data must re-run every interval that data feeds
+    val cascaded = dag.levels.flatten.foldLeft(restate) { (acc, n) =>
+      val ivs = restate.get(n).toSeq ++ dag.parents(n).toSeq.flatMap(acc.get)
+      if (ivs.isEmpty) acc
+      else acc + (n -> Interval(ivs.map(_.start).min, ivs.map(_.end).max))
     }
 
     val allSnaps = added.result() ++ modified.result().map(_._2) ++
       metadataOnly.result() ++ unchanged.result()
-    val dag = allSnaps.map(s => s.model.name -> s.model.references).toMap
     Plan(env, start, end, added.result(), modified.result(), removed,
       metadataOnly.result(), unchanged.result(), cascaded,
       DeployabilityIndex.of(allSnaps, dag), skipBackfill = skipBackfill,
@@ -1125,23 +1106,16 @@ class GraftContext(
     // Backfill. `--skip-backfill`/`--empty-backfill` plans build just the
     // physical layer (empty tables/views created parents-first so the env
     // views resolve); `--backfill-model` does the same for UNSELECTED models.
-    locally {
-      val byName = p.snapshots.filter(_.model.kind.isMaterialized)
-        .map(s => s.model.name -> s).toMap
-      var remaining = byName.keySet
-      while (remaining.nonEmpty) {
-        val ready = remaining.filter(n =>
-          !byName(n).model.references.exists(r => remaining.contains(r) && r != n))
-        require(ready.nonEmpty, s"cycle among models: $remaining")
-        ready.toSeq.sorted.filterNot(steps.backfillable).foreach(n => evaluator.ensurePhysical(
-          byName(n), executionTs, upstreams, devFlags.getOrElse(n, false)))
-        remaining --= ready
-      }
-    }
+    val dag = ModelDag(p.snapshots.map(_.model))
+    val byName = p.snapshots.map(s => s.model.name -> s).toMap
+    dag.levels.flatten.map(byName)
+      .filter(s => s.model.kind.isMaterialized && !steps.backfillable(s.model.name))
+      .foreach(s => evaluator.ensurePhysical(
+        s, executionTs, upstreams, devFlags.getOrElse(s.model.name, false)))
     if (!p.skipBackfill) {
       val live = steps.backfill.map(s => state.getSnapshot(s.model.name, s.version).getOrElse(s))
-      scheduler.run(live, p.start, p.end, executionTs, upstreams, signals.toMap, devFlags,
-        recordOnly = p.emptyBackfill, minIntervals = p.minIntervals)
+      scheduler.runIn(dag, live, p.start, p.end, executionTs, upstreams, signals.toMap, devFlags,
+        recordOnly = p.emptyBackfill, ignoreCron = false, minIntervals = p.minIntervals)
     }
     // standalone audits gate promotion (audit/definition.py:559): they run
     // against the PHYSICAL tables, so a failing blocking audit aborts before
@@ -1240,31 +1214,23 @@ class GraftContext(
                        autoUpstream: Boolean = true): Unit = {
     runEnvStatements(beforeAll, start, end, executionTs)
     val allSnaps = envSnapshots(env)
+    val dag = ModelDag(allSnaps.map(_.model))
     val snaps =
       if (selectModels.isEmpty) allSnaps
       else {
-        val byName = allSnaps.map(s => s.model.name -> s).toMap
         val selected = ModelSelector.expand(selectModels,
           allSnaps.map(s => s.model.name -> s.model).toMap,
           changedFiles = gitChangedFiles)
         // `--select-model` always includes upstream dependencies so the
         // selected models read fresh inputs; --no-auto-upstream opts out
-        var wanted = selected
-        if (autoUpstream) {
-          var frontier = selected
-          while (frontier.nonEmpty) {
-            val next = frontier.flatMap(n => byName.get(n).toSeq
-              .flatMap(_.model.references.filter(byName.contains))) -- wanted
-            wanted ++= next; frontier = next
-          }
-        }
+        val wanted = if (autoUpstream) dag.upstream(selected) else selected
         allSnaps.filter(s => wanted(s.model.name))
       }
     // references resolve against the whole environment, selected or not
-    val devFlags = devFlagsOf(env, allSnaps)
+    val devFlags = devFlagsOf(env, allSnaps, dag)
     val upstreams = evaluator.upstreams(allSnaps, devFlags, externals.toMap)
-    scheduler.run(snaps, start, end, executionTs, upstreams, signals.toMap, devFlags,
-      ignoreCron = ignoreCron)
+    scheduler.runIn(dag, snaps, start, end, executionTs, upstreams, signals.toMap, devFlags,
+      recordOnly = false, ignoreCron = ignoreCron, minIntervals = 0)
     runStandaloneAudits(upstreams, start, end, executionTs)
     runEnvStatements(afterAll, start, end, executionTs)
   }

@@ -117,20 +117,7 @@ object ModelSelector {
     val byTag: Map[String, Set[String]] = models.values
       .flatMap(m => m.tags.map(t => t.toLowerCase -> m.name)).toSeq
       .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).toSet }
-    val parents: Map[String, Set[String]] =
-      models.map { case (n, m) => n -> m.references.filter(models.contains) }
-    val children: Map[String, Set[String]] = parents.toSeq
-      .flatMap { case (n, ps) => ps.map(_ -> n) }
-      .groupBy(_._1).map { case (p, xs) => p -> xs.map(_._2).toSet }
-
-    def closure(start: Set[String], edges: Map[String, Set[String]]): Set[String] = {
-      var seen = start; var frontier = start
-      while (frontier.nonEmpty) {
-        val next = frontier.flatMap(n => edges.getOrElse(n, Set.empty)) -- seen
-        seen ++= next; frontier = next
-      }
-      seen
-    }
+    lazy val dag = ModelDag(models.values)
 
     def nameMatches(pattern: String, fqn: String): Boolean =
       matches(pattern, fqn) ||
@@ -158,10 +145,7 @@ object ModelSelector {
       case Or(l, r)  => eval(l) | eval(r)
       case Direction(x, up, down) =>
         val base = eval(x)
-        var out = base
-        if (up) out ++= closure(base, parents)
-        if (down) out ++= closure(base, children)
-        out
+        (if (up) dag.upstream(base) else base) ++ (if (down) dag.downstream(base) else base)
     }
     eval(node)
   }

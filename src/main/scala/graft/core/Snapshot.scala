@@ -159,16 +159,7 @@ final case class DeployabilityIndex(nonDeployable: Set[String]) {
 }
 object DeployabilityIndex {
   val allDeployable: DeployabilityIndex = DeployabilityIndex(Set.empty)
-  def of(snapshots: Seq[Snapshot], dag: Map[String, Set[String]]): DeployabilityIndex = {
-    val forwardOnly = snapshots.filter(_.category.contains(ChangeCategory.ForwardOnly))
-      .map(_.model.name).toSet
-    // propagate downstream
-    var frontier = forwardOnly
-    var all = forwardOnly
-    while (frontier.nonEmpty) {
-      val next = dag.collect { case (m, deps) if deps.exists(frontier) && !all(m) => m }.toSet
-      all ++= next; frontier = next
-    }
-    DeployabilityIndex(all)
-  }
+  def of(snapshots: Seq[Snapshot], dag: ModelDag): DeployabilityIndex =
+    DeployabilityIndex(dag.downstream(snapshots
+      .filter(_.category.contains(ChangeCategory.ForwardOnly)).map(_.model.name).toSet))
 }

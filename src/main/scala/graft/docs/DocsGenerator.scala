@@ -1,7 +1,7 @@
 package graft.docs
 
 import graft.GraftContext
-import graft.core.{ScalaBody, SeedBody, SqlBody}
+import graft.core.{ModelDag, ScalaBody, SeedBody, SqlBody}
 
 /** Static project documentation — the offline stand-in for the reference's
   * web UI (reference `web/`, `sqlmesh ui`; same role as `dbt docs generate`).
@@ -16,26 +16,11 @@ object DocsGenerator {
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
       .replace("\"", "&quot;")
 
-  /** Longest-path layering: externals at layer 0, each model one past its
-    * deepest upstream. Cycles are impossible (the DAG is validated at load). */
-  private def layers(ctx: GraftContext): Map[String, Int] = {
-    val models = ctx.allModels
-    val memo = scala.collection.mutable.Map[String, Int]()
-    def layerOf(name: String): Int = memo.getOrElseUpdate(name,
-      models.get(name) match {
-        case None => 0 // external / unresolved reference
-        case Some(m) =>
-          val ups = m.references.filter(_ != name)
-          if (ups.isEmpty) 0 else 1 + ups.map(layerOf).max
-      })
-    (models.keySet ++ models.values.flatMap(_.references)).map(n => n -> layerOf(n)).toMap
-  }
-
-  /** The lineage DAG as inline SVG: nodes as boxes in topological columns,
+  /** The lineage DAG as inline SVG: nodes as boxes in topological columns
+    * (externals in column 0, each model one past its deepest upstream),
     * edges as cubic curves. Externals are dashed. */
-  private def dagSvg(ctx: GraftContext): String = {
-    val models = ctx.allModels
-    val layer = layers(ctx)
+  private def dagSvg(models: Map[String, graft.core.Model], dag: ModelDag): String = {
+    val layer = dag.levels.zipWithIndex.flatMap { case (ns, l) => ns.map(_ -> l) }.toMap
     val nodes = layer.keys.toSeq.sorted
     val byLayer = nodes.groupBy(layer).view.mapValues(_.sorted).toMap
     val boxW = 200; val boxH = 44; val gapX = 70; val gapY = 22
@@ -50,7 +35,7 @@ object DocsGenerator {
       s"""<svg viewBox="0 0 $width $height" width="$width" height="$height" xmlns="http://www.w3.org/2000/svg">""")
     // edges first (under the boxes)
     models.values.toSeq.sortBy(_.name).foreach { m =>
-      m.references.toSeq.sorted.filter(_ != m.name).foreach { up =>
+      dag.parents(m.name).toSeq.sorted.foreach { up =>
         val (x1, y1) = pos(up); val (x2, y2) = pos(m.name)
         val sx = x1 + boxW; val sy = y1 + boxH / 2
         val tx = x2; val ty = y2 + boxH / 2
@@ -82,6 +67,7 @@ object DocsGenerator {
   /** The full standalone page. */
   def html(ctx: GraftContext): String = {
     val models = ctx.allModels
+    val dag = ModelDag.withExternals(models.values)
     val downstream: Map[String, Seq[String]] = models.values.toSeq
       .flatMap(m => m.references.map(_ -> m.name)).groupBy(_._1)
       .view.mapValues(_.map(_._2).sorted).toMap
@@ -119,7 +105,7 @@ object DocsGenerator {
             .mkString(" (", ", ", ")")
           s"<li>${esc(n + a)}</li>"
         }.mkString + "</ul>"
-      val ups = m.references.toSeq.sorted.filter(_ != m.name)
+      val ups = dag.parents(m.name).toSeq.sorted
       val downs = downstream.getOrElse(m.name, Nil)
       s"""<details id="m-${esc(m.name)}"><summary><code>${esc(m.name)}</code>
          | — ${esc(m.kind.name)}${m.description.map(d => ": " + esc(d)).getOrElse("")}</summary>
@@ -153,7 +139,7 @@ object DocsGenerator {
        |<p>${models.size} models · ${ctx.externalRelations.size} externals ·
        |${ctx.standaloneAuditNames.size} standalone audits ·
        |${ctx.environments.size} environments</p>
-       |<h2>Lineage</h2><div class="dag">${dagSvg(ctx)}</div>
+       |<h2>Lineage</h2><div class="dag">${dagSvg(models, dag)}</div>
        |<h2>Models</h2>
        |<input id="q" placeholder="filter by name / kind / owner / tag" oninput="
        |  var q=this.value.toLowerCase();

@@ -38,26 +38,6 @@ class Scheduler(
     report.add((model, interval, (System.nanoTime() - t0) / 1000000L)); ()
   }
 
-  /** Topological levels of the snapshot DAG (Kahn). */
-  private def topoLevels(snapshots: Seq[Snapshot]): Seq[Seq[Snapshot]] = {
-    val byName = snapshots.map(s => s.model.name -> s).toMap
-    var indeg = snapshots.map(s =>
-      s.model.name -> s.model.references.count(byName.contains)).toMap
-    val out = Seq.newBuilder[Seq[Snapshot]]
-    var remaining = snapshots.map(_.model.name).toSet
-    while (remaining.nonEmpty) {
-      val ready = remaining.filter(n => indeg(n) == 0).toSeq.sorted
-      require(ready.nonEmpty, s"cycle among models: $remaining")
-      out += ready.map(byName)
-      remaining --= ready
-      for (n <- remaining) {
-        val deps = byName(n).model.references
-        indeg += n -> deps.count(d => remaining.contains(d) && byName.contains(d))
-      }
-    }
-    out.result()
-  }
-
   /** Backfill all missing intervals in [start, end) for the given snapshots,
     * honoring per-model batch_size and cross-model DAG order. `tableMapping`
     * resolves one [[Batch]]'s upstream references, as [[SnapshotEvaluator.upstreams]]
@@ -81,8 +61,17 @@ class Scheduler(
       /** `--min-intervals` (reference context.py:1345): per model, pull the
         * effective start back so at least this many intervals are covered
         * (model.start still floors it, via missingIntervals). */
-      minIntervals: Int = 0): Unit = {
+      minIntervals: Int = 0): Unit =
+    runIn(ModelDag(snapshots.map(_.model)), snapshots, start, end, executionTs, tableMapping,
+      signals, devFlags, recordOnly, ignoreCron, minIntervals)
 
+  /** [[run]] in the levels of `dag`, a graph the caller already built over
+    * these snapshots' models or a superset of them. */
+  private[graft] def runIn(dag: ModelDag, snapshots: Seq[Snapshot], start: Long, end: Long,
+      executionTs: Long, tableMapping: Batch => Map[String, String],
+      signals: Map[String, Interval => Boolean], devFlags: Map[String, Boolean],
+      recordOnly: Boolean, ignoreCron: Boolean, minIntervals: Int): Unit = {
+    val byName = snapshots.map(s => s.model.name -> s).toMap
     report.clear()
     val pool = Executors.newFixedThreadPool(concurrency)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
@@ -92,7 +81,7 @@ class Scheduler(
       // times (quadratic at 1000-model scale). Crash mid-wave loses only
       // bookkeeping — the batches themselves are idempotent overwrites/
       // merges, so the re-run redoes at most one wave.
-      topoLevels(snapshots).foreach { level => state.deferPersist {
+      dag.levels.map(_.flatMap(byName.get)).foreach { level => state.deferPersist {
         val fs = level.filter(_.model.kind.isMaterialized).map { snap =>
           Future {
             // a due auto-restatement drops its window so the batches below

@@ -994,7 +994,11 @@ object FileStateStore {
     }
 
     /** The whole check-then-write runs in one DB transaction under a row
-      * lock — the database IS the mutex, across hosts. */
+      * lock — the database IS the mutex, across hosts. A lock the database
+      * gives up on (Derby `40XL1` wait timeout, `40001` deadlock) means
+      * another writer holds the state: it surfaces as the same
+      * [[java.util.ConcurrentModificationException]] as a stale txn, so the
+      * caller's reload-and-retry covers both. */
     override def withLock[A](f: => A): A = {
       val c = connect()
       try {
@@ -1007,6 +1011,10 @@ object FileStateStore {
         try { val r = f; c.commit(); r }
         catch { case e: Throwable => c.rollback(); throw e }
         finally lockConn.remove()
+      } catch {
+        case e: java.sql.SQLTransactionRollbackException =>
+          throw new java.util.ConcurrentModificationException(
+            s"state row is locked by another writer: ${e.getMessage}", e)
       } finally c.close()
     }
   }

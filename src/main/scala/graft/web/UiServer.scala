@@ -168,7 +168,7 @@ final class UiServer(ctx: GraftContext, host: String = "127.0.0.1",
 
   private def modelsJson: ArrayNode = {
     val arr = mapper.createArrayNode()
-    val names = ctx.allModels.keySet
+    val dag = graft.core.ModelDag(ctx.allModels.values)
     ctx.allModels.toSeq.sortBy(_._1).foreach { case (name, m) =>
       val o = arr.addObject()
       o.put("name", name)
@@ -177,7 +177,7 @@ final class UiServer(ctx: GraftContext, host: String = "127.0.0.1",
       m.owner.foreach(o.put("owner", _))
       val tags = o.putArray("tags"); m.tags.foreach(tags.add)
       val deps = o.putArray("depends_on")
-      m.references.filter(names.contains).toSeq.sorted.foreach(deps.add)
+      dag.parents(name).toSeq.sorted.foreach(deps.add)
     }
     arr
   }
@@ -218,11 +218,12 @@ final class UiServer(ctx: GraftContext, host: String = "127.0.0.1",
   private def dagJson: ObjectNode = {
     val o = mapper.createObjectNode()
     val nodes = o.putArray("models")
-    val names = ctx.allModels.keySet
-    names.toSeq.sorted.foreach(nodes.add)
+    val dag = graft.core.ModelDag(ctx.allModels.values)
+    val names = dag.names.toSeq.sorted
+    names.foreach(nodes.add)
     val edges = o.putArray("edges")
-    ctx.allModels.toSeq.sortBy(_._1).foreach { case (name, m) =>
-      m.references.filter(names.contains).toSeq.sorted.foreach { up =>
+    names.foreach { name =>
+      dag.parents(name).toSeq.sorted.foreach { up =>
         val e = edges.addArray(); e.add(up); e.add(name)
       }
     }

@@ -506,4 +506,31 @@ class JdbcStateStoreSpec extends StateStoreContractSpec {
   protected def backend: String = "jdbc"
   protected def stateDir(tag: String): String =
     s"jdbc:derby:${SparkTestSession.tmpDir(tag)}/db;create=true"
+
+  test("[jdbc] a row lock held by another writer surfaces as ConcurrentModificationException") {
+    val url = stateDir("state_lock")
+    val m = Model("mart.lk", SqlBody("SELECT 1 AS id"), kind = ModelKind.Full)
+    val snap = Snapshot(m, Fingerprint.of(m, "SELECT 1 AS id", Nil))
+    val store = new FileStateStore(url)
+    store.pushSnapshot(snap)
+    val holder = java.sql.DriverManager.getConnection(url)
+    val cfg = holder.createStatement()
+    cfg.execute("CALL SYSCS_UTIL.SYSCS_SET_DATABASE_PROPERTY('derby.locks.waitTimeout', '1')")
+    cfg.close()
+    holder.setAutoCommit(false)
+    try {
+      val st = holder.createStatement()
+      st.executeQuery("SELECT ID FROM GRAFT_STATE WHERE ID = 1 FOR UPDATE").close()
+      st.executeUpdate("UPDATE GRAFT_STATE SET TXN = TXN WHERE ID = 1")
+      st.close()
+      val e = intercept[java.util.ConcurrentModificationException](
+        store.addInterval("mart.lk", snap.version, Interval(0L, 10L)))
+      assert(e.getCause.isInstanceOf[java.sql.SQLTransactionRollbackException], e.getCause)
+    } finally { holder.rollback(); holder.close() }
+    // the documented recovery: reload, re-apply
+    val reloaded = new FileStateStore(url)
+    reloaded.addInterval("mart.lk", snap.version, Interval(0L, 10L))
+    assert(new FileStateStore(url).getSnapshot("mart.lk", snap.version).get.intervals ==
+      Vector(Interval(0L, 10L)))
+  }
 }
