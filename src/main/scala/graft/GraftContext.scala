@@ -4,7 +4,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core._
 import graft.adapter.{PhysicalTable, SparkMaterializer}
-import graft.plans.{Batch, BatchPlanner, Renderer, Scheduler, Signals, SnapshotEvaluator}
+import graft.plans.{Batch, BatchPlanner, EnvironmentView, Renderer, Scheduler, Signals,
+  SnapshotEvaluator}
 import graft.state.{EnvironmentRecord, InMemoryStateStore, StateStore}
 
 /** A plan: what changes and what gets backfilled (reference:
@@ -579,22 +580,9 @@ class GraftContext(
   /** Names of loaded standalone AUDIT files. */
   def standaloneAuditNames: Seq[String] = standaloneAudits.keys.toSeq
 
-  /** An environment's snapshots as `run` resolves them — by identifier
-    * first, then by version. */
-  private def envSnapshots(env: String): Seq[Snapshot] = {
-    val envRec = state.getEnvironment(env).getOrElse(
-      throw new IllegalStateException(s"environment $env not planned"))
-    envRec.snapshots.flatMap { case (n, v) =>
-      envRec.identifiers.get(n).flatMap(id => state.getSnapshotById(n, id))
-        .orElse(state.getSnapshot(n, v))
-    }.toSeq
-  }
-
-  /** Which snapshots use their `__dev` preview table (DeployabilityIndex). */
-  private def devFlagsOf(env: String, snaps: Seq[Snapshot], dag: ModelDag): Map[String, Boolean] = {
-    val index = DeployabilityIndex.of(snaps, dag)
-    snaps.map(s => s.model.name -> (env != "prod" && !index.isDeployable(s))).toMap
-  }
+  /** `env` as an [[EnvironmentView]] under this context's configured naming. */
+  private def envView(env: String, fallback: Option[String] = None): EnvironmentView =
+    new EnvironmentView(state, env, envSuffixTarget, envCatalogMapping, fallback)
 
   /** Per-model missing interval gaps in an environment's window (reference
     * `sqlmesh check_intervals`, cli/main.py): what `run --ignore-cron`
@@ -602,16 +590,15 @@ class GraftContext(
     * whether or not the model's cron has fired for them yet. */
   def checkIntervals(env: String, start: Long, end: Long,
                      select: Seq[String] = Nil): Map[String, Seq[Interval]] = {
-    val snaps = envSnapshots(env)
+    val view = envView(env)
     val chosen: String => Boolean =
       if (select.isEmpty) _ => true
-      else ModelSelector.expand(select, snaps.map(s => s.model.name -> s.model).toMap,
+      else ModelSelector.expand(select, view.snapshots.map(s => s.model.name -> s.model).toMap,
         changedFiles = gitChangedFiles)
-    val devFlags = devFlagsOf(env, snaps, ModelDag(snaps.map(_.model)))
     val now = System.currentTimeMillis()
-    snaps.collect { case s if s.model.kind.isMaterialized && chosen(s.model.name) =>
+    view.snapshots.collect { case s if s.model.kind.isMaterialized && chosen(s.model.name) =>
       s.model.name -> BatchPlanner.pending(s, start, math.min(end, now), now,
-        devFlags(s.model.name), ignoreCron = true).gaps
+        view.devFlags(s.model.name), ignoreCron = true).gaps
     }.toMap
   }
 
@@ -620,11 +607,9 @@ class GraftContext(
     * metadata, dependency edges, and the batches a `run` started now would
     * process ([[BatchPlanner]]), computed WITHOUT recording anything. */
   def exportSchedule(env: String, start: Long, end: Long): Seq[graft.plans.ScheduleExport.ModelSchedule] = {
-    val snaps = envSnapshots(env)
-    val dag = ModelDag(snaps.map(_.model))
-    val devFlags = devFlagsOf(env, snaps, dag)
+    val view = envView(env)
     val now = System.currentTimeMillis()
-    snaps.collect { case s if s.model.kind.isMaterialized =>
+    view.snapshots.collect { case s if s.model.kind.isMaterialized =>
       val m = s.model
       graft.plans.ScheduleExport.ModelSchedule(
         name = m.name,
@@ -638,9 +623,9 @@ class GraftContext(
         },
         owner = m.owner,
         // within-project dependencies only: externals are inputs, not tasks
-        dependsOn = dag.parents(m.name).toSeq.sorted,
+        dependsOn = view.dag.parents(m.name).toSeq.sorted,
         hasSignal = signals.contains(m.name),
-        batches = BatchPlanner.pending(s, start, end, now, devFlags(m.name)).batches)
+        batches = BatchPlanner.pending(s, start, end, now, view.devFlags(m.name)).batches)
     }.sortBy(_.name)
   }
 
@@ -713,32 +698,36 @@ class GraftContext(
 
   // ------------------------------------------------------------ snapshots
 
-  /** Fingerprint DAG-recursively (snapshot/definition.py:1861). `overrides`
+  /** Fingerprint parents-first (snapshot/definition.py:1861). `overrides`
     * substitutes model definitions before fingerprinting — used by plan
     * selectors so unselected models diff (and cascade to children) with
     * their promoted definition, not the local edit. */
   def snapshotsOf(names: Seq[String],
-                  overrides: Map[String, Model] = Map.empty): Map[String, Snapshot] = {
-    def modelOf(name: String): Model = overrides.getOrElse(name, models(name))
-    val memo = scala.collection.mutable.Map[String, SnapshotFingerprint]()
-    def fp(name: String): SnapshotFingerprint = memo.getOrElseUpdate(name, {
-      val m = modelOf(name)
-      val parentFps = m.references.toSeq.sorted.collect {
-        case r if models.contains(r) => fp(r)
-      }
+                  overrides: Map[String, Model] = Map.empty): Map[String, Snapshot] =
+    fingerprinted(names, overrides)._1
+
+  /** [[snapshotsOf]] plus the graph it walked: `names` and their upstream
+    * models, a parent's fingerprint feeding its children's. */
+  private def fingerprinted(names: Seq[String], overrides: Map[String, Model])
+      : (Map[String, Snapshot], ModelDag) = {
+    def modelOf(name: String): Option[Model] = overrides.get(name).orElse(models.get(name))
+    val dag = ModelDag.upstreamOf(names, modelOf)
+    val fps = scala.collection.mutable.Map[String, SnapshotFingerprint]()
+    def parents(name: String): Seq[String] = dag.parents(name).toSeq.sorted
+    dag.levels.flatten.foreach { name =>
+      val m = modelOf(name).get
       val bodyText = m.body match {
         case SqlBody(sql)  => sql
         case ScalaBody(fn) => s"scala:${fn.getClass.getName}"
         case SeedBody(p)   => s"seed:$p"
       }
-      Fingerprint.of(m, bodyText, parentFps)
-    })
-    names.map { n =>
-      val m = modelOf(n)
-      val parents = m.references.toSeq.sorted.filter(models.contains)
-        .map(p => SnapshotId(p, fp(p).full))
-      n -> Snapshot(m, fp(n), parents, createdTs = System.currentTimeMillis())
-    }.toMap
+      fps(name) = Fingerprint.of(m, bodyText, parents(name).map(fps))
+    }
+    val now = System.currentTimeMillis()
+    (names.map { n =>
+      n -> Snapshot(modelOf(n).getOrElse(models(n)), fps(n),
+        parents(n).map(p => SnapshotId(p, fps(p).full)), createdTs = now)
+    }.toMap, dag)
   }
 
   // ------------------------------------------------------------------ plan
@@ -798,27 +787,28 @@ class GraftContext(
       if (select.isEmpty) models.keySet.toSet
       else ModelSelector.expand(select, models.toMap, changedFiles = gitChangedFiles)
     def selected(name: String): Boolean = selectedSet.contains(name)
+    // diff baseline: the snapshot the TARGET environment (or, for a new env,
+    // the --create-from environment) currently points at — reference
+    // ContextDiff diffs env snapshot ids, which is what keeps a dev preview
+    // from masking a pending prod change; a name neither record holds falls
+    // back to its latest snapshot
+    val base = envView(env, fallback = Some(createFrom))
+    def baseline(name: String): Option[Snapshot] =
+      base.snapshot(name).orElse(state.latestSnapshot(name))
     // selectors: unselected models fingerprint (and cascade to dependents)
-    // with their promoted definition, not the local edit; unselected NEW
+    // with their baseline definition, not the local edit; unselected NEW
     // models still enter the plan (dependents need them)
     val overrides: Map[String, Model] =
       if (select.isEmpty) Map.empty
-      else models.keys.filterNot(selected).flatMap { n =>
-        state.getEnvironment(env).orElse(state.getEnvironment(createFrom))
-          .flatMap(e => e.identifiers.get(n).flatMap(id => state.getSnapshotById(n, id)))
-          .orElse(state.latestSnapshot(n))
-          .map(old => n -> old.model)
-      }.toMap
-    val snaps = snapshotsOf(models.keys.toSeq, overrides)
+      else models.keys.filterNot(selected).flatMap(n => baseline(n).map(n -> _.model)).toMap
+    // one graph over the snapshots' models: walked parents-first here, then
+    // the restatement cascade and the deployability index read it
+    val (snaps, dag) = fingerprinted(models.keys.toSeq, overrides)
     val added = Seq.newBuilder[Snapshot]
     val modified = Seq.newBuilder[(Snapshot, Snapshot)]
     val metadataOnly = Seq.newBuilder[Snapshot]
     val unchanged = Seq.newBuilder[Snapshot]
     val categories = scala.collection.mutable.Map[String, ChangeCategory]()
-
-    // one graph over the snapshots' models: walked parents-first here, then
-    // the restatement cascade and the deployability index read it
-    val dag = ModelDag(snaps.values.map(_.model))
 
     def kindForwardOnly(m: Model): Boolean = m.kind match {
       case k: ModelKind.IncrementalByTimeRange => k.forwardOnly
@@ -827,16 +817,6 @@ class GraftContext(
     def bodySql(m: Model): Option[String] = m.body match {
       case SqlBody(sql) => Some(sql); case _ => None
     }
-
-    // diff baseline: the snapshot the TARGET environment (or, for a new env,
-    // the --create-from environment) currently points at — reference
-    // ContextDiff diffs env snapshot ids, which is what keeps a dev preview
-    // from masking a pending prod change
-    val baseRec = state.getEnvironment(env).orElse(state.getEnvironment(createFrom))
-    def baseline(name: String): Option[Snapshot] =
-      baseRec.flatMap(e => e.identifiers.get(name)
-          .flatMap(id => state.getSnapshotById(name, id)))
-        .orElse(state.latestSnapshot(name))
 
     dag.levels.flatten.map(snaps).foreach { s =>
       val name = s.model.name
@@ -882,8 +862,7 @@ class GraftContext(
           }
       }
     }
-    val removed = state.environments.find(_.name == env)
-      .map(_.snapshots.keySet.filterNot(snaps.contains).toSeq).getOrElse(Nil)
+    val removed = base.record.map(_.snapshots.keySet.filterNot(snaps.contains).toSeq).getOrElse(Nil)
 
     // restatements cascade to transitive dependents (reference
     // plan/builder.py:369 _build_restatements): walked parents-first, a
@@ -936,12 +915,13 @@ class GraftContext(
       case (_, nw) if nw.category.contains(ChangeCategory.ForwardOnly) &&
         !p.isDevPreview(nw) => nw
     }
-    // restatement against the PLAN's snapshot version (_build_restatements);
-    // effective_from keeps inherited intervals only BEFORE the floored
-    // effective date (snapshot/definition.py:970-977, :1425)
+    // restatement against the PLAN's snapshot version (_build_restatements),
+    // else the environment's; effective_from keeps inherited intervals only
+    // BEFORE the floored effective date (snapshot/definition.py:970-977, :1425)
+    val byName = p.snapshots.map(s => s.model.name -> s).toMap
+    lazy val current = envView(p.env)
     val drops = p.restatements.toSeq.flatMap { case (name, ivl) =>
-      p.snapshots.find(_.model.name == name).orElse(state.latestSnapshot(name))
-        .map(s => (name, s.version, ivl))
+      byName.get(name).orElse(current.snapshot(name)).map(s => (name, s.version, ivl))
     } ++ p.effectiveFrom.toSeq.flatMap(ef => migrating.map(nw =>
       (nw.model.name, nw.version, Interval(nw.model.intervalUnit.floor(ef), Long.MaxValue / 2))))
     val backfillable: Set[String] =
@@ -1041,20 +1021,17 @@ class GraftContext(
     if (p.noGaps)
       L += "├─ no_gaps: verify re-versioned incremental models cover their predecessors' intervals"
     L += "├─ virtual layer: repoint environment views"
-    val descCat = SparkMaterializer.envCatalog(p.env, envSuffixTarget, envCatalogMapping)
-      .map(_ + ".").getOrElse("")
+    // views repoint where the configured naming puts them; removed models'
+    // views drop where the record put them, as apply does
+    val current = envView(p.env)
+    def described(loc: (Option[String], String, String)) = loc match {
+      case (cat, db, view) => cat.fold("")(_ + ".") + s"$db.$view"
+    }
     steps.promoted.foreach { s =>
-      val (db, view) = SparkMaterializer.envLocation(
-        s.model.schemaName, s.model.tableName, p.env, envSuffixTarget)
-      L += s"│    $descCat$db.$view → ${evaluator.physicalTable(s, devFlags(s.model.name)).qualified}"
+      L += s"│    ${described(current.targetLocation(s.model.name))} → " +
+        evaluator.physicalTable(s, devFlags(s.model.name)).qualified
     }
-    p.removed.foreach { n =>
-      state.latestSnapshot(n).foreach { s =>
-        val (db, view) = SparkMaterializer.envLocation(
-          s.model.schemaName, s.model.tableName, p.env, envSuffixTarget)
-        L += s"│    - drop $descCat$db.$view  (removed from env)"
-      }
-    }
+    p.removed.foreach(n => L += s"│    - drop ${described(current.location(n))}  (removed from env)")
     val ttl = if (p.env == "prod") "never expires"
       else s"expires ${iso(executionTs + envTtlMs)}"
     L += s"├─ environment record: promote + finalize '${p.env}'  ($ttl)"
@@ -1142,31 +1119,20 @@ class GraftContext(
     }
     // EnvironmentRecordUpdate + VirtualLayerUpdate (materialized kinds only —
     // EMBEDDED/EXTERNAL have no physical object to point a view at)
-    val envCat = SparkMaterializer.envCatalog(p.env, envSuffixTarget, envCatalogMapping)
+    val current = envView(p.env)
+    val envCat = current.targetCatalog
     // an EXISTING record remembers where the env's views actually landed
-    // (environment.py stores catalog_name_override for the same reason):
-    // if the configured mapping moved this env to a DIFFERENT catalog since
-    // the last apply, drop the OLD location's whole virtual layer first —
-    // otherwise it keeps serving stale snapshots forever — and demote
-    // removed models where they were actually promoted.
-    val prevRec = state.getEnvironment(p.env)
-    val prevCat = prevRec.flatMap(_.catalog)
-    // the env MOVED location if the catalog OR the suffix target changed —
-    // both change every view's name, and the old names would keep serving
-    // stale snapshots forever if not dropped here
-    if (prevRec.exists(r => prevCat != envCat || r.suffixTarget != envSuffixTarget))
-      prevRec.get.snapshots.keys.foreach(name =>
-        demoteByName(p.env, name, prevRec.get.suffixTarget, prevCat))
+    // (environment.py stores catalog_name_override for the same reason): if
+    // the configured catalog or suffix target moved this env since the last
+    // apply, drop the OLD location's whole virtual layer first — otherwise it
+    // keeps serving stale snapshots forever — and demote removed models where
+    // they were actually promoted
+    if (current.record.exists(r => r.suffixTarget != envSuffixTarget || r.catalog != envCat))
+      demoteAll(current)
     steps.promoted.foreach(s =>
       evaluator.promote(s, p.env, devFlags(s.model.name), envSuffixTarget, executionTs,
         envCat))
-    p.removed.foreach { name =>
-      // removed models were promoted under the PREVIOUS record's naming
-      state.latestSnapshot(name).foreach(s =>
-        evaluator.demote(s, p.env,
-          prevRec.map(_.suffixTarget).getOrElse(envSuffixTarget),
-          if (prevRec.nonEmpty) prevCat else envCat))
-    }
+    p.removed.foreach(name => materializer.demote(current.location(name)))
     state.promoteEnvironment(EnvironmentRecord(
       p.env, p.envSnapshots.map(s => s.model.name -> s.version).toMap, finalized = false,
       identifiers = p.envSnapshots.map(s => s.model.name -> s.fingerprint.full).toMap,
@@ -1213,8 +1179,8 @@ class GraftContext(
                        selectModels: Seq[String] = Nil,
                        autoUpstream: Boolean = true): Unit = {
     runEnvStatements(beforeAll, start, end, executionTs)
-    val allSnaps = envSnapshots(env)
-    val dag = ModelDag(allSnaps.map(_.model))
+    val view = envView(env)
+    val (allSnaps, dag) = (view.snapshots, view.dag)
     val snaps =
       if (selectModels.isEmpty) allSnaps
       else {
@@ -1227,9 +1193,8 @@ class GraftContext(
         allSnaps.filter(s => wanted(s.model.name))
       }
     // references resolve against the whole environment, selected or not
-    val devFlags = devFlagsOf(env, allSnaps, dag)
-    val upstreams = evaluator.upstreams(allSnaps, devFlags, externals.toMap)
-    scheduler.runIn(dag, snaps, start, end, executionTs, upstreams, signals.toMap, devFlags,
+    val upstreams = evaluator.upstreams(allSnaps, view.devFlags, externals.toMap)
+    scheduler.runIn(dag, snaps, start, end, executionTs, upstreams, signals.toMap, view.devFlags,
       recordOnly = false, ignoreCron = ignoreCron, minIntervals = 0)
     runStandaloneAudits(upstreams, start, end, executionTs)
     runEnvStatements(afterAll, start, end, executionTs)
@@ -1262,20 +1227,20 @@ class GraftContext(
     * append/streaming-fed models whose scan cost has become
     * file-count-bound. Returns (filesBefore, filesAfter). */
   def optimizeTable(modelName: String,
-                    targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val snap = state.latestSnapshot(modelName).getOrElse(
-      throw new IllegalStateException(s"$modelName has no snapshot"))
-    materializer.compact(evaluator.physicalTable(snap), targetFileBytes)
-  }
+                    targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) =
+    materializer.compact(prodTable(modelName), targetFileBytes)
 
   /** Vacuum a model's physical table: expire all but the newest `keepLast`
     * snapshots and reclaim their storage (Delta VACUUM analog, via the
     * TableFormat seam). Time travel to expired versions stops working. */
-  def vacuumTable(modelName: String, keepLast: Int = 1): Int = {
-    val snap = state.latestSnapshot(modelName).getOrElse(
-      throw new IllegalStateException(s"$modelName has no snapshot"))
-    materializer.vacuum(evaluator.physicalTable(snap), keepLast)
-  }
+  def vacuumTable(modelName: String, keepLast: Int = 1): Int =
+    materializer.vacuum(prodTable(modelName), keepLast)
+
+  /** The physical table prod serves a model from — what optimize and vacuum
+    * act on, never a dev plan's version. */
+  private def prodTable(modelName: String): PhysicalTable =
+    evaluator.physicalTable(envView("prod").snapshot(modelName).getOrElse(
+      throw new IllegalStateException(s"$modelName has no snapshot in prod")))
 
   /** Ad-hoc audit run (reference `sqlmesh audit`, cli/main.py:783): execute a
     * model's attached audits against its environment table WITHOUT
@@ -1286,26 +1251,28 @@ class GraftContext(
     * driver-side row fetch. */
   def audit(modelName: String, env: String = "prod",
             start: Long = 0L, end: Long = Long.MaxValue): Map[String, Long] = {
-    val m = models(modelName)
-    val table = envTable(modelName, env)
+    import graft.audits.Audits
+    // audits are metadata: the project's current ones run against the
+    // standing table (reference Context.audit audits the project's own
+    // snapshots); a model the project no longer defines audits as applied
+    val view = envView(env)
+    val m = models.get(modelName).orElse(view.snapshot(modelName).map(_.model)).getOrElse(
+      throw new IllegalArgumentException(s"$modelName is not in environment $env"))
+    val table = EnvironmentView.quoted(view.location(modelName))
+    val timeCond = m.kind match {
+      case k: ModelKind.IncrementalByTimeRange if end < Long.MaxValue =>
+        Some(Audits.intervalCondition(k, start, end))
+      case _ => None
+    }
+    // audit args may reference OTHER models (relationships `to:`): they
+    // resolve over the SAME environment as `run` resolves them — a dev audit
+    // checks the dev parent, not prod's, and an EMBEDDED model inlines
+    val mapping = evaluator.upstreams(view.snapshots, view.devFlags, externals.toMap)(
+      Batch(m, Interval(start, end), System.currentTimeMillis()))
     m.audits.map { case (rawName, args) =>
-      val name = rawName.stripSuffix("_non_blocking")
-      val timeCond = m.kind match {
-        case k: ModelKind.IncrementalByTimeRange if end < Long.MaxValue =>
-          Map("condition" -> graft.audits.Audits.intervalCondition(k, start, end))
-        case _ => Map.empty[String, String]
-      }
-      // audit args may reference OTHER models (relationships `to:`) — resolve
-      // them against the SAME environment being audited, like the evaluator's
-      // resolvedArgs: a dev-env audit must check the dev parent, not prod's
-      // (checking a dev child against the prod parent reports phantom
-      // violations for any row the dev plan legitimately changed); externals resolve too
-      val mapping = externals.toMap ++ models.values
-        .filter(_.kind != ModelKind.External).map(m => m.name -> envTable(m.name, env))
-      val resolvedArgs = (args ++ timeCond).map { case (k, v) =>
-        k -> Renderer.resolveTables(v, mapping)
-      }
-      rawName -> graft.audits.Audits.run(spark, name, table, resolvedArgs).count()
+      val resolvedArgs = args.map { case (k, v) => k -> Renderer.resolveTables(v, mapping) }
+      rawName -> Audits.run(spark, rawName.stripSuffix("_non_blocking"), table,
+        Audits.withIntervalCondition(resolvedArgs, timeCond)).count()
     }.toMap
   }
 
@@ -1322,19 +1289,8 @@ class GraftContext(
 
   /** The environment view a model resolves to (reference `sqlmesh
     * table_name`): prod = bare name; other envs apply the suffix target. */
-  def envTable(modelName: String, env: String): String = {
-    val parts = modelName.split('.')
-    val schema = parts.dropRight(1).mkString(".") match { case "" => "default"; case x => x }
-    // an existing environment's views live where its RECORD says they were
-    // promoted — the configured mapping may have changed since; only an
-    // env with no record yet resolves from current config
-    val rec = state.getEnvironment(env)
-    val cat = rec.map(_.catalog).getOrElse(
-      SparkMaterializer.envCatalog(env, envSuffixTarget, envCatalogMapping))
-    val (db, view) = SparkMaterializer.envLocation(
-      schema, parts.last, env, rec.map(_.suffixTarget).getOrElse(envSuffixTarget))
-    cat.map(c => s"`$c`.").getOrElse("") + s"`$db`.`$view`"
-  }
+  def envTable(modelName: String, env: String): String =
+    EnvironmentView.quoted(envView(env).location(modelName))
 
   /** Models whose snapshot version differs between two environments —
     * `table_diff source:target` WITHOUT a model diffs exactly this set
@@ -1342,9 +1298,8 @@ class GraftContext(
     * the changed models, optionally narrowed by --select-model). */
   def changedModelsBetween(sourceEnv: String, targetEnv: String): Seq[String] = {
     // a typo'd env must fail loudly, not read as "no changes"
-    def snaps(e: String) = state.environments.find(_.name == e)
-      .getOrElse(throw new IllegalArgumentException(s"unknown environment '$e'"))
-      .snapshots
+    def snaps(e: String) = envView(e).record.getOrElse(
+      throw new IllegalArgumentException(s"unknown environment '$e'")).snapshots
     val s = snaps(sourceEnv); val t = snaps(targetEnv)
     (s.keySet intersect t.keySet).filter(m => s(m) != t(m)).toSeq.sorted
   }
@@ -1378,8 +1333,8 @@ class GraftContext(
   private def tableDiffSides(modelName: String, sourceEnv: String,
                              targetEnv: String, keys: Seq[String],
                              where: Option[String], skipColumns: Seq[String]) = {
-    val m = models(modelName)
-    val grain = if (keys.nonEmpty) keys else m.grains
+    val grain = if (keys.nonEmpty) keys
+      else envView(sourceEnv).snapshot(modelName).toSeq.flatMap(_.model.grains)
     require(grain.nonEmpty, s"$modelName: table_diff needs keys (model has no grain)")
     def side(env: String): DataFrame = {
       var df = spark.table(envTable(modelName, env))
@@ -1429,28 +1384,17 @@ class GraftContext(
     this
   }
 
-  /** Demote an environment view by the state-recorded model NAME — works for
-    * models no longer registered in this context (deleted from the project),
-    * which `models.get` would silently skip, leaking views. */
-  private def demoteByName(envName: String, modelName: String,
-                           suffixTarget: String = "schema",
-                           catalog: Option[String] = None): Unit = {
-    val parts = modelName.split('.')
-    val schema = parts.dropRight(1).mkString(".") match { case "" => "default"; case x => x }
-    val (db, view) = SparkMaterializer.envLocation(schema, parts.last, envName, suffixTarget)
-    catalog match {
-      case Some(c) => materializer.demoteCatalog(c, db, view)
-      case None    => materializer.demote(db, view)
-    }
-  }
+  /** Drop every view an environment's record placed, where the record placed
+    * it — by recorded model NAME, so models no longer defined in this context
+    * leak no views. */
+  private def demoteAll(view: EnvironmentView): Unit =
+    view.record.toSeq.flatMap(_.snapshots.keys).foreach(n => materializer.demote(view.location(n)))
 
   /** Invalidate an environment (reference `sqlmesh invalidate`): drop its
     * views and record, leaving physical cleanup to the janitor. */
   def invalidateEnvironment(env: String, sync: Boolean = false): Unit = {
     require(env != "prod", "refusing to invalidate prod")
-    state.getEnvironment(env).foreach { rec =>
-      rec.snapshots.keys.foreach(name => demoteByName(env, name, rec.suffixTarget, rec.catalog))
-    }
+    demoteAll(envView(env))
     if (sync) {
       // `--sync` (cli/main.py:830): tear down NOW — record deleted and the
       // janitor pass reclaims any physical tables nothing references
@@ -1464,7 +1408,7 @@ class GraftContext(
     * no environment references. */
   def janitor(now: Long = System.currentTimeMillis()): Unit = {
     state.expiredEnvironments(now).foreach { rec =>
-      rec.snapshots.keys.foreach(name => demoteByName(rec.name, name, rec.suffixTarget, rec.catalog))
+      demoteAll(envView(rec.name))
       state.deleteEnvironment(rec.name)
     }
     state.expiredSnapshots.foreach { s =>
@@ -1479,7 +1423,7 @@ class GraftContext(
     * and all state records. Irreversible; refuses nothing. */
   def destroy(): Unit = {
     state.environments.foreach { rec =>
-      rec.snapshots.keys.foreach(name => demoteByName(rec.name, name, rec.suffixTarget, rec.catalog))
+      demoteAll(envView(rec.name))
       state.deleteEnvironment(rec.name)
     }
     state.allSnapshots.foreach { s =>

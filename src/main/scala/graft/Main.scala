@@ -999,6 +999,7 @@ object Main {
       |       ui [--host H] [--port N]   browser UI + HTTP API
       |       lsp [--project DIR]        language server (JSON-RPC on stdio)
       |       optimize <model> [--target-file-mb N]   vacuum <model> [--keep N]
+      |         (optimize and vacuum act on prod's table)
       |       dbt run|list|compile|test|seed|build|snapshot|show|source freshness
       |         (dbt-CLI facade over a
       |          dbt_project.yml project; --select/--models/--exclude,

@@ -485,6 +485,13 @@ class SparkMaterializer(val spark: SparkSession,
   def demote(envDb: String, viewName: String): Unit =
     spark.sql(s"DROP VIEW IF EXISTS `$envDb`.`$viewName`")
 
+  /** Drop an environment's view at its `(catalog, db, view)` location: an
+    * environment-catalog entry, or a session-catalog view. */
+  def demote(location: (Option[String], String, String)): Unit = location match {
+    case (Some(c), db, view) => demoteCatalog(c, db, view)
+    case (None, db, view)    => demote(db, view)
+  }
+
   /** [[promote]] into an environment CATALOG (suffix target `catalog` /
     * `environment_catalog_mapping`, reference config/common.py:33,
     * root.py:120): the virtual-layer entry lands in a registered
@@ -537,46 +544,27 @@ class SparkMaterializer(val spark: SparkSession,
 }
 
 object SparkMaterializer {
-  /** Environment database name: prod = bare schema; dev = `<schema>__<env>`
-    * (reference EnvironmentSuffixTarget.SCHEMA, core/environment.py:41). */
-  def envDb(schema: String, env: String): String =
-    if (env == "prod") schema else s"${schema}__$env"
-
-  /** Environment (database, view) for a model under a suffix target
-    * (EnvironmentSuffixTarget, reference config/common.py:22-53): SCHEMA
-    * (default) isolates dev views in `<schema>__<env>`; TABLE keeps the prod
-    * schema and suffixes the view name `<table>__<env>`. The CATALOG target
-    * and catalog mappings add a catalog dimension — [[envTarget]] is the
-    * full form; this 2-tuple form stays for the session-catalog targets.
-    * Prod is always the bare name under every target. */
-  def envLocation(schema: String, table: String, env: String,
-                  suffixTarget: String = "schema"): (String, String) =
-    if (env == "prod") (schema, table)
-    else suffixTarget.toLowerCase match {
-      case "table"   => (schema, s"${table}__$env")
-      case "catalog" => (schema, table) // isolation carried by the catalog
-      case _         => (s"${schema}__$env", table)
-    }
-
-  /** Full environment target: (catalog override, database, view).
-    *
-    *  - `suffixTarget = "catalog"` (reference config/common.py:33): dev
-    *    envs land in catalog `<baseCatalog>__<env>` with BARE schema/table
-    *    names (the whole point — the model keeps its prod name); prod
-    *    stays in the session catalog.
-    *  - `catalogMapping` (reference config/root.py:120
-    *    `environment_catalog_mapping`, environment.py:87): ordered
-    *    (regex → catalog) pairs, first PREFIX match on the env name wins
-    *    (Python `re.match` anchors at the start only); the matched catalog
-    *    applies to prod and dev alike, composing with the schema/table
-    *    suffix rules. Mutually exclusive with the catalog suffix target
-    *    (root.py:254).
-    */
+  /** Full environment target: (catalog override, database, view) of a model's
+    * view in `env` (EnvironmentSuffixTarget, reference config/common.py:22-53);
+    * prod is always the bare name.
+    *  - `suffixTarget` "schema" (default): dev views in `<schema>__<env>`;
+    *    "table": the prod schema, view `<table>__<env>`; "catalog"
+    *    (common.py:33): BARE names in catalog `<baseCatalog>__<env>`.
+    *  - `catalogMapping` (root.py:120 `environment_catalog_mapping`,
+    *    environment.py:87): ordered (regex → catalog) pairs, the first PREFIX
+    *    match on the env name wins (Python `re.match`), for prod and dev alike.
+    *    Mutually exclusive with the catalog suffix target (root.py:254). */
   def envTarget(schema: String, table: String, env: String,
                 suffixTarget: String = "schema",
                 catalogMapping: Seq[(String, String)] = Nil,
                 baseCatalog: String = "spark_catalog"): (Option[String], String, String) = {
-    val (db, view) = envLocation(schema, table, env, suffixTarget)
+    val (db, view) =
+      if (env == "prod") (schema, table)
+      else suffixTarget.toLowerCase match {
+        case "table"   => (schema, s"${table}__$env")
+        case "catalog" => (schema, table) // isolation carried by the catalog
+        case _         => (s"${schema}__$env", table)
+      }
     (envCatalog(env, suffixTarget, catalogMapping, baseCatalog), db, view)
   }
 

@@ -38,6 +38,12 @@ object Audits {
     s"${k.timeColumn} >= $lo AND ${k.timeColumn} < $hi"
   }
 
+  /** Audit args scoped to an interval: the interval predicate ANDed with (never
+    * replacing) a user `condition`. */
+  def withIntervalCondition(args: Args, timeCond: Option[String]): Args =
+    timeCond.fold(args)(tc =>
+      args + ("condition" -> args.get("condition").fold(tc)(u => s"($u) AND ($tc)")))
+
   /** The row-predicate audit family: a violation IS a row satisfying this
     * predicate. Shared by the query templates below AND by
     * [[ObservedAudits]], which folds these checks into the write pass as

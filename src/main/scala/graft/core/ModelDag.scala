@@ -65,6 +65,18 @@ object ModelDag {
     of(refs.values.flatten.map(_ -> Set.empty[String]).toMap ++ refs)
   }
 
+  /** The graph over `seeds` and every model they read from, transitively
+    * (`model` finds a name's model; a name it lacks is no node). */
+  def upstreamOf(seeds: Iterable[String], model: String => Option[Model]): ModelDag = {
+    val refs = scala.collection.mutable.Map[String, Set[String]]()
+    val todo = scala.collection.mutable.Stack[String]() ++= seeds
+    while (todo.nonEmpty) {
+      val n = todo.pop()
+      if (!refs.contains(n)) model(n).foreach { m => refs(n) = m.references; todo ++= refs(n) }
+    }
+    of(refs.toMap)
+  }
+
   private def of(refs: Map[String, Set[String]]): ModelDag =
     new ModelDag(refs.map { case (n, rs) => n -> rs.filter(r => r != n && refs.contains(r)) })
 }

@@ -114,12 +114,6 @@ final case class Snapshot(
   def id: SnapshotId = SnapshotId(model.name, fingerprint.full)
   def version: String = forcedVersion.getOrElse(fingerprint.version)
 
-  /** Physical table name: `sqlmesh__<schema>.<schema>__<table>__<version>`
-    * (definition.py:1761 table_name, :266 schema prefix). We keep the same
-    * layout, flattened for a path-based parquet catalog. */
-  def physicalName: String =
-    s"graft__${model.schemaName}.${model.schemaName}__${model.tableName}__$version"
-
   def addInterval(i: Interval): Snapshot =
     copy(intervals = IntervalAlgebra.merge(intervals :+ i))
   def removeInterval(i: Interval): Snapshot =

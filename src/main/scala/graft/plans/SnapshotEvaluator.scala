@@ -311,13 +311,7 @@ class SnapshotEvaluator(
       val userArgs = args.map { case (k, v) =>
         k -> Renderer.resolveTables(v, mapping)
       }
-      // interval predicate ANDed with (not clobbering) a user condition
-      val combinedCond = (userArgs.get("condition"), timeCondStr) match {
-        case (Some(u), Some(tc)) => Some(s"($u) AND ($tc)")
-        case (u, tc)             => u.orElse(tc)
-      }
-      AuditSpec(name, blocking, userArgs,
-        userArgs ++ combinedCond.map("condition" -> _))
+      AuditSpec(name, blocking, userArgs, Audits.withIntervalCondition(userArgs, timeCondStr))
     }
     // one-pass eligibility: the strategy must consume the rendered frame in
     // exactly one write action whose rows (within timeCondStr) ARE the
@@ -508,32 +502,22 @@ class SnapshotEvaluator(
   def promote(s: Snapshot, env: String, dev: Boolean = false,
               suffixTarget: String = "schema", executionTs: Long = 0L,
               catalog: Option[String] = None): Unit = {
-    val (db, view) = SparkMaterializer.envLocation(
-      s.model.schemaName, s.model.tableName, env, suffixTarget)
+    val location @ (_, db, view) =
+      EnvironmentView.location(s.model.name, env, suffixTarget, catalog)
     catalog match {
       case Some(c) =>
-        materializer.promoteCatalog(c, db, view, physicalTable(s, dev),
-          s.model.virtualProperties)
-        s.model.onVirtualUpdate.foreach(st =>
-          spark.sql(renderer.statement(st, Interval(0L, executionTs), executionTs,
-            Map.empty, Some(s"`$c`.`$db`.`$view`"))))
+        materializer.promoteCatalog(c, db, view, physicalTable(s, dev), s.model.virtualProperties)
       case None =>
         materializer.promote(db, view, physicalTable(s, dev), s.model.virtualProperties)
-        s.model.onVirtualUpdate.foreach(st =>
-          spark.sql(renderer.statement(st, Interval(0L, executionTs), executionTs,
-            Map.empty, Some(s"`$db`.`$view`"))))
     }
+    s.model.onVirtualUpdate.foreach(st =>
+      spark.sql(renderer.statement(st, Interval(0L, executionTs), executionTs,
+        Map.empty, Some(EnvironmentView.quoted(location)))))
   }
 
   def demote(s: Snapshot, env: String, suffixTarget: String = "schema",
-             catalog: Option[String] = None): Unit = {
-    val (db, view) = SparkMaterializer.envLocation(
-      s.model.schemaName, s.model.tableName, env, suffixTarget)
-    catalog match {
-      case Some(c) => materializer.demoteCatalog(c, db, view)
-      case None    => materializer.demote(db, view)
-    }
-  }
+             catalog: Option[String] = None): Unit =
+    materializer.demote(EnvironmentView.location(s.model.name, env, suffixTarget, catalog))
 }
 
 object SnapshotEvaluator {

@@ -48,4 +48,22 @@ class ModelDagPlanSpec extends AnyFunSuite {
       "dd.deep" -> 3,
       "dd.sink" -> 4))
   }
+
+  test("a model that reads its own table plans, lints and traces lineage") {
+    // `SELECT … FROM sr.a` inside sr.a (a self-reading incremental model, say):
+    // the self-reference is no parent edge, so fingerprinting terminates
+    val ctx = new GraftContext(spark, SparkTestSession.tmpDir("dag-self"))
+    ctx.addModel(sqlModel("sr.src", "SELECT 1 AS id"))
+    ctx.addModel(sqlModel("sr.a", "SELECT id FROM sr.src UNION ALL SELECT id FROM sr.a WHERE id > 1"))
+    val p = ctx.plan("prod", 0L, D)
+    assert(p.added.map(_.model.name).toSet == Set("sr.src", "sr.a"))
+    assert(p.added.find(_.model.name == "sr.a").get.parents.map(_.name) == Seq("sr.src"))
+    assert(!ctx.lint().exists(_.rule == "nomissingexternalmodels"))
+    // lineage analyzes against the physical objects; stand them up by hand
+    val snaps = ctx.snapshotsOf(Seq("sr.src", "sr.a"))
+    spark.sql("CREATE SCHEMA IF NOT EXISTS graft__sr")
+    snaps.values.foreach(s => spark.sql(
+      s"CREATE OR REPLACE VIEW ${ctx.evaluator.physicalTable(s).qualified} AS SELECT 1 AS id"))
+    assert(ctx.columnLineage("sr.a") == Map("id" -> Set("sr.src.id", "sr.a.id")))
+  }
 }

@@ -42,4 +42,21 @@ class AdhocAuditEnvSpec extends AnyFunSuite {
     assert(ctx.audit("mart.aud_child", "prod") == Map("relationships" -> 0L))
     assert(spark.table("mart.aud_parent").count() == 2)
   }
+
+  test("bounds AND the interval onto an audit's own condition") {
+    val ctx = new GraftContext(spark, SparkTestSession.tmpDir("ws-audit-cond"))
+    val day0 = 788918400000L // 1995-01-01
+    // (id, d, v): a NULL v on day 0 the user condition excludes, one on day 1 it keeps
+    ctx.addModel(Model("mart.aud_cond", SqlBody(
+      """SELECT id, CAST(d AS DATE) AS d, v FROM VALUES
+        |  (1, '1995-01-01', NULL), (2, '1995-01-01', 5), (3, '1995-01-02', NULL)
+        |  AS t(id, d, v) WHERE CAST(d AS DATE) BETWEEN @start_dt AND @end_dt""".stripMargin),
+      kind = ModelKind.IncrementalByTimeRange("d"),
+      audits = Seq("not_null_non_blocking" -> Map("columns" -> "v", "condition" -> "id > 1"))))
+    ctx.apply(ctx.plan("prod", day0, day0 + 2 * D))
+    val audit = "not_null_non_blocking"
+    assert(ctx.audit("mart.aud_cond") == Map(audit -> 1L))
+    assert(ctx.audit("mart.aud_cond", start = day0, end = day0 + D) == Map(audit -> 0L))
+    assert(ctx.audit("mart.aud_cond", start = day0, end = day0 + 2 * D) == Map(audit -> 1L))
+  }
 }
