@@ -166,7 +166,10 @@ class GraftContext(
 
   private val models = scala.collection.mutable.LinkedHashMap[String, Model]()
   private val externals = scala.collection.mutable.Map[String, String]()
-  private val signals = scala.collection.mutable.Map[String, Interval => Boolean]()
+  /** Each signal-gated model's gate, built per run or apply from the graph
+    * and the snapshots (by name) that call reads. */
+  private val signals = scala.collection.mutable.Map[
+    String, (ModelDag, String => Option[Snapshot]) => Interval => Boolean]()
   private val standaloneAudits =
     scala.collection.mutable.LinkedHashMap[String, graft.audits.StandaloneAudit]()
 
@@ -387,10 +390,19 @@ class GraftContext(
     }
 
   /** Gate `modelName`'s batches on all its upstreams having processed the
-    * batch interval first — the built-in `freshness` signal (signal.py:46). */
-  def addFreshnessSignal(modelName: String): this.type =
-    addSignal(modelName,
-      Signals.freshness(state, ModelDag(models.values).parents(modelName).toSeq))
+    * batch interval first — the built-in `freshness` signal (signal.py:46).
+    * The upstreams are the model's parents in the graph of the run or apply
+    * being gated, each the snapshot that run reads. */
+  def addFreshnessSignal(modelName: String): this.type = {
+    signals(modelName) = (dag, snapshotOf) =>
+      Signals.freshness(state, snapshotOf, dag.parents(modelName).toSeq)
+    this
+  }
+
+  /** The gates of a run or apply over `dag`, reading `snapshotOf`'s snapshots. */
+  private def gates(dag: ModelDag, snapshotOf: String => Option[Snapshot])
+      : Map[String, Interval => Boolean] =
+    signals.map { case (name, gate) => name -> gate(dag, snapshotOf) }.toMap
 
   /** Render a model's SQL for an interval without executing (reference
     * `sqlmesh render`, cli/main.py:253). */
@@ -636,7 +648,8 @@ class GraftContext(
   def signalReady(env: String, model: String, start: Long, end: Long): Boolean = {
     val sched = exportSchedule(env, start, end).find(_.name == model).getOrElse(
       throw new IllegalArgumentException(s"model $model not in environment $env"))
-    signals.get(model).forall(g => sched.batches.forall(g))
+    val view = envView(env)
+    gates(view.dag, view.snapshot).get(model).forall(g => sched.batches.forall(g))
   }
 
   /** Project summary (reference `sqlmesh info`): model counts by kind,
@@ -681,7 +694,7 @@ class GraftContext(
 
   /** Signals gate interval readiness (reference core/signal.py:14). */
   def addSignal(modelName: String, signal: Interval => Boolean): this.type = {
-    signals(modelName) = signal; this
+    signals(modelName) = (_, _) => signal; this
   }
 
   /** User macro (the reference's Python `@macro()` registry, macros.py:592):
@@ -706,6 +719,17 @@ class GraftContext(
                   overrides: Map[String, Model] = Map.empty): Map[String, Snapshot] =
     fingerprinted(names, overrides)._1
 
+  /** Each model name's last fingerprint with the model and the parent
+    * fingerprints it was computed from (fingerprint_from_node's shared
+    * `cache`, snapshot/definition.py:1861). An entry is reused only for an
+    * equal model over equal parent fingerprints, so an edit, a reload with
+    * other content or a selector override recomputes the model, and a new
+    * parent fingerprint recomputes its whole downstream cone. Concurrent:
+    * a server may plan from several threads; entries are immutable, so two
+    * threads computing the same miss store equal values. */
+  private val fingerprintIndex = new java.util.concurrent.ConcurrentHashMap[
+    String, (Model, Seq[SnapshotFingerprint], SnapshotFingerprint)]()
+
   /** [[snapshotsOf]] plus the graph it walked: `names` and their upstream
     * models, a parent's fingerprint feeding its children's. */
   private def fingerprinted(names: Seq[String], overrides: Map[String, Model])
@@ -716,12 +740,20 @@ class GraftContext(
     def parents(name: String): Seq[String] = dag.parents(name).toSeq.sorted
     dag.levels.flatten.foreach { name =>
       val m = modelOf(name).get
-      val bodyText = m.body match {
-        case SqlBody(sql)  => sql
-        case ScalaBody(fn) => s"scala:${fn.getClass.getName}"
-        case SeedBody(p)   => s"seed:$p"
+      val parentFps = parents(name).map(fps)
+      // `==` on a case class tests `eq` first, so an unreloaded model is cheap
+      fps(name) = Option(fingerprintIndex.get(name)).collect {
+        case (known, knownParents, fp) if known == m && knownParents == parentFps => fp
+      }.getOrElse {
+        val bodyText = m.body match {
+          case SqlBody(sql)  => sql
+          case ScalaBody(fn) => s"scala:${fn.getClass.getName}"
+          case SeedBody(p)   => s"seed:$p"
+        }
+        val fp = Fingerprint.of(m, bodyText, parentFps)
+        fingerprintIndex.put(name, (m, parentFps, fp))
+        fp
       }
-      fps(name) = Fingerprint.of(m, bodyText, parents(name).map(fps))
     }
     val now = System.currentTimeMillis()
     (names.map { n =>
@@ -1091,8 +1123,8 @@ class GraftContext(
         s, executionTs, upstreams, devFlags.getOrElse(s.model.name, false)))
     if (!p.skipBackfill) {
       val live = steps.backfill.map(s => state.getSnapshot(s.model.name, s.version).getOrElse(s))
-      scheduler.runIn(dag, live, p.start, p.end, executionTs, upstreams, signals.toMap, devFlags,
-        recordOnly = p.emptyBackfill, ignoreCron = false, minIntervals = p.minIntervals)
+      scheduler.runIn(dag, live, p.start, p.end, executionTs, upstreams, gates(dag, byName.get),
+        devFlags, recordOnly = p.emptyBackfill, ignoreCron = false, minIntervals = p.minIntervals)
     }
     // standalone audits gate promotion (audit/definition.py:559): they run
     // against the PHYSICAL tables, so a failing blocking audit aborts before
@@ -1194,8 +1226,8 @@ class GraftContext(
       }
     // references resolve against the whole environment, selected or not
     val upstreams = evaluator.upstreams(allSnaps, view.devFlags, externals.toMap)
-    scheduler.runIn(dag, snaps, start, end, executionTs, upstreams, signals.toMap, view.devFlags,
-      recordOnly = false, ignoreCron = ignoreCron, minIntervals = 0)
+    scheduler.runIn(dag, snaps, start, end, executionTs, upstreams, gates(dag, view.snapshot),
+      view.devFlags, recordOnly = false, ignoreCron = ignoreCron, minIntervals = 0)
     runStandaloneAudits(upstreams, start, end, executionTs)
     runEnvStatements(afterAll, start, end, executionTs)
   }

@@ -118,7 +118,7 @@ final case class Model(
   /** Upstream model/table references: declared, plus extracted from SQL bodies.
     * Extraction mirrors `d.find_tables` (renderer.py:607) at the level we need:
     * FROM/JOIN identifiers that look like qualified names. */
-  def references: Set[String] = {
+  lazy val references: Set[String] = {
     val fromBody = body match {
       case SqlBody(sql) => dependsOn ++ Model.extractTables(sql)
       case _            => dependsOn
@@ -146,18 +146,21 @@ object Model {
 
   private val tableRef =
     """(?is)\b(?:from|join)\s+([a-zA-Z_][\w]*(?:\.[a-zA-Z_][\w]*)*)""".r
+  private val dbtRef = java.util.regex.Pattern.compile(
+    "(?is)\\{\\{\\s*ref\\(\\s*['\"]([^'\"]+)['\"]\\s*\\)\\s*\\}\\}")
+  private val dbtSource = java.util.regex.Pattern.compile(
+    "(?is)\\{\\{\\s*source\\(\\s*['\"]([^'\"]+)['\"]\\s*,\\s*['\"]([^'\"]+)['\"]\\s*\\)\\s*\\}\\}")
+  private val stringLiteral = java.util.regex.Pattern.compile("'[^']*'")
+  private val cteName = """(?is)(?:with|,)\s*([a-zA-Z_]\w*)\s+as\s*\(""".r
 
   /** Cheap dependency extraction from SQL text; CTE names are excluded. */
   def extractTables(sql: String): Set[String] = {
     // dbt relation calls resolve textually BEFORE string-blanking (their
     // arguments are string literals): {{ ref('a.b') }} -> a.b,
     // {{ source('s','t') }} -> s.t — so FROM {{ ref(...) }} extracts normally
-    val deJinjaed = sql
-      .replaceAll("(?is)\\{\\{\\s*ref\\(\\s*['\"]([^'\"]+)['\"]\\s*\\)\\s*\\}\\}", "$1")
-      .replaceAll("(?is)\\{\\{\\s*source\\(\\s*['\"]([^'\"]+)['\"]\\s*,\\s*['\"]([^'\"]+)['\"]\\s*\\)\\s*\\}\\}", "$1.$2")
-    val noStrings = deJinjaed.replaceAll("'[^']*'", "''")
-    val ctes = """(?is)(?:with|,)\s*([a-zA-Z_]\w*)\s+as\s*\(""".r
-      .findAllMatchIn(noStrings).map(_.group(1).toLowerCase).toSet
+    val deJinjaed = dbtSource.matcher(dbtRef.matcher(sql).replaceAll("$1")).replaceAll("$1.$2")
+    val noStrings = stringLiteral.matcher(deJinjaed).replaceAll("''")
+    val ctes = cteName.findAllMatchIn(noStrings).map(_.group(1).toLowerCase).toSet
     tableRef.findAllMatchIn(noStrings)
       .map(_.group(1))
       .filterNot(t => ctes.contains(t.toLowerCase))

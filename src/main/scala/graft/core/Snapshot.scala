@@ -25,25 +25,40 @@ final case class SnapshotFingerprint(
     parentDataHash: String,
     parentMetadataHash: String) {
   /** version identity: data-affecting parts only (definition.py `to_version`) */
-  def version: String = Fingerprint.md5Short(s"$dataHash;$parentDataHash")
-  def full: String =
+  lazy val version: String = Fingerprint.md5Short(s"$dataHash;$parentDataHash")
+  lazy val full: String =
     Fingerprint.md5Short(s"$dataHash;$metadataHash;$parentDataHash;$parentMetadataHash")
 }
 
 object Fingerprint {
-  /** Total fingerprints computed (a spec pins lint's per-model cost). */
+  /** Total fingerprints computed (specs pin lint's and re-plans' cost). */
   val computed = new java.util.concurrent.atomic.AtomicLong
 
-  def md5Short(s: String): String =
-    MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
+  private val hexDigits = "0123456789abcdef".toCharArray
+
+  /** The first 8 bytes of the MD5 of `s`, as 16 lowercase hex digits. */
+  def md5Short(s: String): String = {
+    val digest = MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+    val out = new Array[Char](16)
+    var i = 0
+    while (i < 8) {
+      out(2 * i) = hexDigits((digest(i) >> 4) & 0xf)
+      out(2 * i + 1) = hexDigits(digest(i) & 0xf)
+      i += 1
+    }
+    new String(out)
+  }
+
+  private val lineComment  = java.util.regex.Pattern.compile("--[^\n]*")
+  private val blockComment = java.util.regex.Pattern.compile("(?s)/\\*.*?\\*/")
+  private val whitespace   = java.util.regex.Pattern.compile("\\s+")
 
   /** Canonicalize SQL text for hashing: strip comments, collapse whitespace,
     * lowercase outside string literals. A stable canonical printer is fingerprint
     * correctness (SURVEY §7 hard part b). */
   def canonicalSql(sql: String): String = {
-    val noLine  = sql.replaceAll("--[^\n]*", " ")
-    val noBlock = noLine.replaceAll("(?s)/\\*.*?\\*/", " ")
+    val noLine  = lineComment.matcher(sql).replaceAll(" ")
+    val noBlock = blockComment.matcher(noLine).replaceAll(" ")
     val sb = new StringBuilder
     var inStr = false
     for (c <- noBlock) {
@@ -51,7 +66,7 @@ object Fingerprint {
       else if (inStr) sb.append(c)
       else sb.append(c.toLower)
     }
-    sb.toString.replaceAll("\\s+", " ").trim
+    whitespace.matcher(sb.toString).replaceAll(" ").trim
   }
 
   /** Mirrors fingerprint_from_node: data hash from rendered body + kind data
@@ -79,16 +94,13 @@ object Fingerprint {
     // Hashing only the parents' own dataHash (the pre-r13 bug, caught by
     // the 10k-model probe's 1-edit cascade check) stopped the cascade at
     // depth 1: grandchildren kept their versions and never migrated.
-    // version is a def that allocates a digest per call — compute it once
-    // per parent, not once per sort comparison (this runs per model per
-    // plan; at 10k models the redundant MD5s were measurable)
-    val parentVersions = parents.map(p => (p.version, p)).sortBy(_._1)
+    val sortedParents = parents.sortBy(_.version)
     SnapshotFingerprint(
       dataHash = md5Short(dataParts.mkString("\u0000")),
       metadataHash = md5Short(metaParts.mkString("\u0000")),
-      parentDataHash = md5Short(parentVersions.map(_._1).mkString(",")),
-      parentMetadataHash = md5Short(parentVersions
-        .flatMap { case (_, p) => Seq(p.metadataHash, p.parentMetadataHash) }
+      parentDataHash = md5Short(sortedParents.map(_.version).mkString(",")),
+      parentMetadataHash = md5Short(sortedParents
+        .flatMap(p => Seq(p.metadataHash, p.parentMetadataHash))
         .sorted.mkString(",")))
   }
 }

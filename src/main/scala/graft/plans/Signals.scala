@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.core.{Interval, IntervalAlgebra}
+import graft.core.{Interval, IntervalAlgebra, Snapshot}
 import graft.state.StateStore
 
 /** Built-in signals (reference: sqlmesh/core/signal.py:14 `signal` registry;
@@ -14,10 +14,13 @@ object Signals {
     * upstream has already processed data covering it. The reference compares
     * the engine's `last_altered_ts` for the upstream table; our state-store
     * analog — upstream processed intervals cover the batch — is the same
-    * readiness statement with exact interval granularity. Pure driver-side
-    * metadata, no data scan. */
-  def freshness(state: StateStore, upstreams: Seq[String]): Interval => Boolean = batch =>
-    upstreams.forall(u => state.latestSnapshot(u).exists(up =>
+    * readiness statement with exact interval granularity. `snapshotOf` names
+    * the upstream snapshot the gated run reads (its environment's); its
+    * intervals are read from `state` at each check, so an upstream processed
+    * earlier in the same run counts. Pure driver-side metadata, no data scan. */
+  def freshness(state: StateStore, snapshotOf: String => Option[Snapshot],
+                upstreams: Seq[String]): Interval => Boolean = batch =>
+    upstreams.forall(u => snapshotOf(u).flatMap(s => state.getSnapshot(u, s.version)).exists(up =>
       // dev-preview upstreams record progress in devIntervals; either
       // representation covering the batch means the data exists to read
       IntervalAlgebra.missing(batch.start, batch.end,

@@ -103,20 +103,37 @@ class EnvironmentViewSpec extends AnyFunSuite {
     assert(spark.catalog.tableExists("eve.kept__dev") && !spark.catalog.tableExists("eve__dev.kept"))
   }
 
+  test("a prod run's freshness gate reads prod's upstream, not a dev version's") {
+    val ctx = new GraftContext(spark, SparkTestSession.tmpDir("ev-fresh"))
+    ctx.addExternal("raw.evf_src", source())
+    def inc(name: String, from: String, id: String = "id") = Model(name, SqlBody(
+      s"SELECT $id AS id, d FROM $from WHERE d BETWEEN @start_dt AND @end_dt"),
+      kind = ModelKind.IncrementalByTimeRange("d", batchSize = Some(1)), start = Some(day0))
+    ctx.addModel(inc("evf.up", "raw.evf_src")).addModel(inc("evf.child", "evf.up"))
+    ctx.addFreshnessSignal("evf.child")
+    // prod: days 1–2; dev: a breaking upstream edit backfilled over days 1–3
+    ctx.apply(ctx.plan("prod", day0, day0 + 2 * D))
+    ctx.addModel(inc("evf.up", "raw.evf_src", id = "id * 10"))
+    ctx.apply(ctx.plan("dev", day0, day0 + 3 * D))
+    def intervals(env: String, name: String) = ctx.state.getSnapshot(name,
+      ctx.state.getEnvironment(env).get.snapshots(name)).get.intervals
+    assert(intervals("dev", "evf.up") == Vector(Interval(day0, day0 + 3 * D)))
+    // prod's upstream still ends at day 2, so prod's child defers day 3
+    ctx.run("prod", day0, day0 + 3 * D, selectModels = Seq("evf.child"), autoUpstream = false)
+    assert(intervals("prod", "evf.child") == Vector(Interval(day0, day0 + 2 * D)))
+  }
+
   test("only the environment resolver reads an environment record") {
     // which snapshot a name means in an environment (identifier, version,
     // latest) and where its view lives (the suffix target and catalog naming
     // rule) are EnvironmentView's; state/ stores the records and
     // SparkMaterializer defines the naming rule. Allowed elsewhere: plan's
-    // fallback to the latest snapshot for a name no record holds;
-    // Signals.freshness, whose Interval => Boolean API carries no environment
-    // (CHANGES.md FOUND: it gates a prod run on a dev upstream's intervals);
-    // and Main's `partitions`, which lists the latest snapshot's table
+    // fallback to the latest snapshot for a name no record holds; and
+    // Main's `partitions`, which lists the latest snapshot's table
     // (CHANGES.md FOUND: MainCliSpec pins a dev version's listing)
     val root = Paths.get("src/main/scala/graft")
     val reads = """getSnapshotById\(|latestSnapshot\(|\.identifiers\b|envLocation\(|envCatalog\(|envTarget\(""".r
-    val allowed = Seq("plans/EnvironmentView.scala", "state/", "adapter/SparkMaterializer.scala",
-      "plans/Signals.scala")
+    val allowed = Seq("plans/EnvironmentView.scala", "state/", "adapter/SparkMaterializer.scala")
     val exempt = Map(
       "GraftContext.scala" -> "base.snapshot(name).orElse(state.latestSnapshot(name))",
       "Main.scala" -> "val snap = ctx.state.latestSnapshot(model).getOrElse(")
