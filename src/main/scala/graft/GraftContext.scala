@@ -3,7 +3,7 @@ package graft
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core._
-import graft.adapter.{PhysicalTable, SparkMaterializer}
+import graft.adapter.{PhysicalTable, SparkMaterializer, UtcInterval}
 import graft.plans.{Batch, BatchPlanner, EnvironmentView, Renderer, Scheduler, Signals,
   SnapshotEvaluator}
 import graft.state.{EnvironmentRecord, InMemoryStateStore, StateStore}
@@ -1260,19 +1260,19 @@ class GraftContext(
     * file-count-bound. Returns (filesBefore, filesAfter). */
   def optimizeTable(modelName: String,
                     targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) =
-    materializer.compact(prodTable(modelName), targetFileBytes)
+    materializer.compact(envPhysicalTable(modelName), targetFileBytes)
 
   /** Vacuum a model's physical table: expire all but the newest `keepLast`
     * snapshots and reclaim their storage (Delta VACUUM analog, via the
     * TableFormat seam). Time travel to expired versions stops working. */
   def vacuumTable(modelName: String, keepLast: Int = 1): Int =
-    materializer.vacuum(prodTable(modelName), keepLast)
+    materializer.vacuum(envPhysicalTable(modelName), keepLast)
 
-  /** The physical table prod serves a model from — what optimize and vacuum
-    * act on, never a dev plan's version. */
-  private def prodTable(modelName: String): PhysicalTable =
-    evaluator.physicalTable(envView("prod").snapshot(modelName).getOrElse(
-      throw new IllegalStateException(s"$modelName has no snapshot in prod")))
+  /** The physical table an environment serves a model from — prod's for
+    * optimize and vacuum, never a dev plan's version. */
+  private[graft] def envPhysicalTable(modelName: String, env: String = "prod"): PhysicalTable =
+    evaluator.physicalTable(envView(env).snapshot(modelName).getOrElse(
+      throw new IllegalStateException(s"$modelName has no snapshot in $env")))
 
   /** Ad-hoc audit run (reference `sqlmesh audit`, cli/main.py:783): execute a
     * model's attached audits against its environment table WITHOUT
@@ -1293,7 +1293,7 @@ class GraftContext(
     val table = EnvironmentView.quoted(view.location(modelName))
     val timeCond = m.kind match {
       case k: ModelKind.IncrementalByTimeRange if end < Long.MaxValue =>
-        Some(Audits.intervalCondition(k, start, end))
+        Some(UtcInterval.condition(k.timeColumn, k.timeFormat, start, end))
       case _ => None
     }
     // audit args may reference OTHER models (relationships `to:`): they
@@ -1427,7 +1427,7 @@ class GraftContext(
   def invalidateEnvironment(env: String, sync: Boolean = false): Unit = {
     require(env != "prod", "refusing to invalidate prod")
     demoteAll(envView(env))
-    if (sync) {
+    if (sync) state.deferPersist {
       // `--sync` (cli/main.py:830): tear down NOW — record deleted and the
       // janitor pass reclaims any physical tables nothing references
       state.deleteEnvironment(env)
@@ -1437,31 +1437,29 @@ class GraftContext(
 
   /** TTL janitor (core/janitor.py): expire dev environments past their TTL
     * (views demoted, record deleted), then drop physical tables of snapshots
-    * no environment references. */
-  def janitor(now: Long = System.currentTimeMillis()): Unit = {
+    * no environment references — one durable write (`graft run` runs it). */
+  def janitor(now: Long = System.currentTimeMillis()): Unit = state.deferPersist {
     state.expiredEnvironments(now).foreach { rec =>
       demoteAll(envView(rec.name))
       state.deleteEnvironment(rec.name)
     }
-    state.expiredSnapshots.foreach { s =>
-      materializer.dropTable(evaluator.physicalTable(s))
-      materializer.dropTable(evaluator.physicalTable(s, dev = true))
-      state.deleteSnapshot(s.model.name, s.version)
-    }
+    dropSnapshots(state.expiredSnapshots)
+  }
+
+  private def dropSnapshots(snapshots: Seq[Snapshot]): Unit = snapshots.foreach { s =>
+    materializer.dropTable(evaluator.physicalTable(s))
+    materializer.dropTable(evaluator.physicalTable(s, dev = true))
+    state.deleteSnapshot(s.model.name, s.version)
   }
 
   /** `sqlmesh destroy` (context.py destroy): remove EVERYTHING this context
     * manages — environment views, physical snapshot tables (prod included),
-    * and all state records. Irreversible; refuses nothing. */
-  def destroy(): Unit = {
+    * and all state records in one durable write. Irreversible; refuses nothing. */
+  def destroy(): Unit = state.deferPersist {
     state.environments.foreach { rec =>
       demoteAll(envView(rec.name))
       state.deleteEnvironment(rec.name)
     }
-    state.allSnapshots.foreach { s =>
-      materializer.dropTable(evaluator.physicalTable(s))
-      materializer.dropTable(evaluator.physicalTable(s, dev = true))
-      state.deleteSnapshot(s.model.name, s.version)
-    }
+    dropSnapshots(state.allSnapshots)
   }
 }

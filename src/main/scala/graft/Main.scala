@@ -26,7 +26,7 @@ import graft.core.{Interval, IntervalUnit}
   *   check-intervals [env] per-model elapsed intervals still missing
   *   fetch <sql>           query through the virtual layer, print rows
   *   table-name <model> [env]   the env view a model resolves to
-  *   partitions <model>    committed partition values (metadata only)
+  *   partitions <model> [env]  committed partition values (metadata only)
   *   invalidate <env>      demote an environment's views immediately
   *   create-external-models     write external_models.yaml for unknown refs
   *   create-test <model>   generate a YAML unit test from live data
@@ -443,10 +443,8 @@ object Main {
         case "partitions" =>
           // SHOW PARTITIONS analog over the TableFormat metadata (partition
           // dir names — never a data scan)
-          val model = positionalRequired(positional, "partitions <model>")
-          val snap = ctx.state.latestSnapshot(model).getOrElse(
-            throw new IllegalArgumentException(s"$model has no snapshot"))
-          val t = ctx.evaluator.physicalTable(snap)
+          val model = positionalRequired(positional, "partitions <model> [env]")
+          val t = ctx.envPhysicalTable(model, positional.drop(1).headOption.getOrElse("prod"))
           ctx.materializer.partitionValues(t) match {
             case Nil => out.println("(unpartitioned or empty)"); 0
             case pvs =>

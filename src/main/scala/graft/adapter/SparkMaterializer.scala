@@ -106,31 +106,17 @@ class SparkMaterializer(val spark: SparkSession,
   /** insert_append (base.py:1500) — append into the current snapshot. */
   def insertAppend(t: PhysicalTable, df: DataFrame): Unit = format.append(t, df)
 
-  /** Render half-open `[startMs, endMs)` bounds as literals matching the time
-    * column's representation (reference base.py:1580 renders per time_format;
-    * a Timestamp literal against a DATE or epoch column is a wrong/failing
-    * predicate). Supported formats: "timestamp" (default), "date",
-    * "epoch" (seconds), "epoch_millis". */
-  private def timeBounds(timeFormat: String, startMs: Long, endMs: Long): (Column, Column) =
-    timeFormat match {
-      case "date" =>
-        (lit(java.time.LocalDate.ofEpochDay(Math.floorDiv(startMs, 86400000L))),
-          lit(java.time.LocalDate.ofEpochDay(Math.floorDiv(endMs + 86399999L, 86400000L))))
-      case "epoch"        => (lit(startMs / 1000), lit(endMs / 1000))
-      case "epoch_millis" => (lit(startMs), lit(endMs))
-      case _ => (lit(new java.sql.Timestamp(startMs)), lit(new java.sql.Timestamp(endMs)))
-    }
-
-  /** insert_overwrite_by_time_partition (base.py:1580): enforce the inclusive
-    * `[start, end]` predicate on the data (idempotent-restatement correctness,
-    * not just perf), then dynamically overwrite only the touched partitions.
+  /** insert_overwrite_by_time_partition (base.py:1580): enforce the
+    * half-open `[start, end)` predicate ([[UtcInterval.condition]]) on the
+    * data (idempotent-restatement correctness, not just perf), then
+    * dynamically overwrite only the touched partitions.
     * At 100 TB this is the core incremental op — cost ∝ interval size, never
     * table size, and untouched partitions are never rewritten. */
   def insertOverwriteByTimePartition(
       t: PhysicalTable, df: DataFrame, timeCol: String,
       startMs: Long, endMs: Long, timeFormat: String = "timestamp"): Unit = {
-    val (lo, hi) = timeBounds(timeFormat, startMs, endMs) // half-open [start, end)
-    val guarded = df.filter(col(timeCol) >= lo && col(timeCol) < hi)
+    val inInterval = expr(UtcInterval.condition(timeCol, timeFormat, startMs, endMs))
+    val guarded = df.filter(inInterval)
     currentDataDir(t) match {
       case None => replaceQuery(t, guarded)
       case Some(_) =>
@@ -139,7 +125,7 @@ class SparkMaterializer(val spark: SparkSession,
         } else {
           // DELETE_INSERT strategy fallback (shared.py:235) on unpartitioned
           // tables: rewrite = keep-outside-range ∪ new-rows, copy-on-write.
-          val old = read(t).filter(!(col(timeCol) >= lo && col(timeCol) < hi))
+          val old = read(t).filter(!inInterval)
           replaceQuery(t, old.unionByName(guarded))
         }
     }

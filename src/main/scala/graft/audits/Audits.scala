@@ -18,26 +18,6 @@ object Audits {
 
   type Args = Map[String, String]
 
-  /** The `condition` scoping a time-range model's audits to `[start, end)`,
-    * in the COLUMN's representation like the write guard (SparkMaterializer.
-    * timeBounds) — a TIMESTAMP literal against an epoch/date column is wrong —
-    * and in UTC, so a JVM zone unlike the session zone can't shift it. */
-  def intervalCondition(k: graft.core.ModelKind.IncrementalByTimeRange,
-                        start: Long, end: Long): String = {
-    def utc(ms: Long) = java.time.format.DateTimeFormatter
-      .ofPattern("yyyy-MM-dd HH:mm:ss.SSS").withZone(java.time.ZoneOffset.UTC)
-      .format(java.time.Instant.ofEpochMilli(ms))
-    val (lo, hi) = k.timeFormat match {
-      case "date" =>
-        (s"DATE '${java.time.LocalDate.ofEpochDay(Math.floorDiv(start, 86400000L))}'",
-          s"DATE '${java.time.LocalDate.ofEpochDay(Math.floorDiv(end + 86399999L, 86400000L))}'")
-      case "epoch"        => ((start / 1000).toString, (end / 1000).toString)
-      case "epoch_millis" => (start.toString, end.toString)
-      case _ => (s"TIMESTAMP '${utc(start)}'", s"TIMESTAMP '${utc(end)}'")
-    }
-    s"${k.timeColumn} >= $lo AND ${k.timeColumn} < $hi"
-  }
-
   /** Audit args scoped to an interval: the interval predicate ANDed with (never
     * replacing) a user `condition`. */
   def withIntervalCondition(args: Args, timeCond: Option[String]): Args =

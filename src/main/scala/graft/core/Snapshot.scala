@@ -49,24 +49,28 @@ object Fingerprint {
     new String(out)
   }
 
-  private val lineComment  = java.util.regex.Pattern.compile("--[^\n]*")
-  private val blockComment = java.util.regex.Pattern.compile("(?s)/\\*.*?\\*/")
-  private val whitespace   = java.util.regex.Pattern.compile("\\s+")
+  private val whitespace = java.util.regex.Pattern.compile("\\s+")
 
   /** Canonicalize SQL text for hashing: strip comments, collapse whitespace,
     * lowercase outside string literals. A stable canonical printer is fingerprint
-    * correctness (SURVEY §7 hard part b). */
+    * correctness (SURVEY §7 hard part b). One scan: a comment opener inside
+    * a string literal is text, and so is an unclosed block comment. */
   def canonicalSql(sql: String): String = {
-    val noLine  = lineComment.matcher(sql).replaceAll(" ")
-    val noBlock = blockComment.matcher(noLine).replaceAll(" ")
-    val sb = new StringBuilder
+    val sb = new java.lang.StringBuilder(sql.length)
     var inStr = false
-    for (c <- noBlock) {
-      if (c == '\'') { inStr = !inStr; sb.append(c) }
-      else if (inStr) sb.append(c)
-      else sb.append(c.toLower)
+    var i = 0
+    while (i < sql.length) {
+      val c = sql.charAt(i)
+      val blockEnd = if (!inStr && sql.startsWith("/*", i)) sql.indexOf("*/", i + 2) else -1
+      if (c == '\'') { inStr = !inStr; sb.append(c); i += 1 }
+      else if (inStr) { sb.append(c); i += 1 }
+      else if (sql.startsWith("--", i)) {
+        val nl = sql.indexOf('\n', i)
+        sb.append(' '); i = if (nl < 0) sql.length else nl
+      } else if (blockEnd >= 0) { sb.append(' '); i = blockEnd + 2 }
+      else { sb.append(c.toLower); i += 1 }
     }
-    whitespace.matcher(sb.toString).replaceAll(" ").trim
+    whitespace.matcher(sb).replaceAll(" ").trim
   }
 
   /** Mirrors fingerprint_from_node: data hash from rendered body + kind data

@@ -13,22 +13,24 @@ import org.apache.spark.sql.execution.LogicalRDD
   *    frame. Any `persist()` whose unpersist isn't guaranteed on every path
   *    is a permanent leak in a long-lived driver (the steady-state ingest
   *    loop this engine targets). CacheHygieneSpec pins this class for every
-  *    SparkEntry entry.
-  *  - `Dataset.localCheckpoint(true)` caches at the RDD level (no
+  *    SparkEntry entry; [[releaseOnDrop]] is the release for these.
+  *  - A checkpoint ([[iterCheckpoint]]) caches at the RDD level (no
   *    CacheManager entry): the ContextCleaner reclaims the blocks once the
-  *    frame becomes unreachable. Correct for RETURNED results — but inside
-  *    an iteration loop, waiting for GC leaves every superseded round's
-  *    vector in the block manager until a collection happens to run
-  *    (the memory cliff in a long-lived session). [[release]] drops a
+  *    RDD itself becomes unreachable. Correct for RETURNED results — but
+  *    inside an iteration loop, waiting for GC leaves every superseded
+  *    round's vector in the block manager until a collection happens to
+  *    run (the memory cliff in a long-lived session). [[release]] drops a
   *    superseded checkpoint's blocks deterministically instead.
   */
 object Barrier {
 
-  /** Deterministically drop the cached blocks of a `localCheckpoint`ed
-    * frame (its plan is a [[LogicalRDD]] over the checkpointed RDD). Call
-    * ONLY on frames this code created and no longer needs — typically the
-    * superseded iterate after the next round's eager checkpoint
-    * materializes. No-op on any other plan shape. */
+  /** Deterministically drop the cached blocks of a checkpointed frame (its
+    * plan is a [[LogicalRDD]] over the checkpointed RDD): a local
+    * checkpoint's only copy, a reliable checkpoint's in-memory copy (its
+    * files stay and later reads go to them). Call ONLY on frames this code
+    * created and no longer needs — typically the superseded iterate after
+    * the next round's eager checkpoint materializes. No-op on any other
+    * plan shape. */
   def release(df: DataFrame): Unit = df.queryExecution.logical match {
     case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
     case _              => ()
@@ -36,57 +38,35 @@ object Barrier {
 
   /** Iteration checkpoint for the rank/label-propagation loops: truncates
     * lineage per round (else plan size and recovery cost grow with the
-    * iteration count). Two modes, same semantics:
+    * iteration count).
     *
-    *  - DEFAULT: `localCheckpoint` — blocks live in executor block
-    *    managers, no DFS round-trip. The right call on a healthy cluster
-    *    and in local mode, but NOT fault-tolerant: localCheckpoint
-    *    truncates the lineage, so losing an executor mid-loop loses blocks
-    *    that can no longer be recomputed and fails the job (Spark's own
-    *    documented caveat).
-    *  - `spark.graft.reliableCheckpoints=true` (+
-    *    `sc.setCheckpointDir(...)`): a RELIABLE `checkpoint` — each round's
-    *    vector is written to the checkpoint dir, so executor loss costs a
-    *    re-read, not the job. This is the mode a 1000-executor, hours-long
-    *    ranking run wants: iteration vectors are |V|-sized (the SMALL side
-    *    — node set, not edges), so the per-round DFS write is cheap
-    *    insurance. Superseded checkpoint FILES are reclaimed by the
-    *    ContextCleaner when `spark.cleaner.referenceTracking
-    *    .cleanCheckpoints=true` (set it in production); [[release]] on a
-    *    reliable checkpoint is a harmless no-op.
+    * ONE MODE RULE: the checkpoint is RELIABLE exactly when the session has
+    * a checkpoint dir (`sc.setCheckpointDir(...)`), local otherwise; there
+    * is nothing else to set.
+    *  - local (no dir): blocks live in executor block managers, no DFS
+    *    round-trip. The right call on a healthy cluster and in local mode,
+    *    but NOT fault-tolerant: the lineage is truncated, so losing an
+    *    executor mid-loop loses blocks that can no longer be recomputed and
+    *    fails the job (Spark's own documented caveat).
+    *  - reliable (dir set): each round's vector is also written to the
+    *    checkpoint dir, so executor loss costs a re-read, not the job — the
+    *    mode an hours-long 1000-executor ranking run wants. Iteration
+    *    vectors are |V|-sized (the node set, not the edges), so the
+    *    per-round DFS write is cheap insurance. Superseded checkpoint FILES
+    *    are reclaimed by the ContextCleaner when `spark.cleaner
+    *    .referenceTracking.cleanCheckpoints=true` (set it in production).
     *
-    * MODE PRECEDENCE (r17 verdict #5): an explicit
-    * `spark.graft.reliableCheckpoints` wins (true forces reliable — and
-    * fails fast without a checkpoint dir; false forces local even when a
-    * checkpoint dir exists — the explicit local-mode fast path). UNSET,
-    * reliable mode auto-enables exactly when `sc.setCheckpointDir(...)` has
-    * been called: a production session that configured durable checkpoint
-    * storage gets fault-tolerant iteration vectors without also having to
-    * know about a graft conf flag, while local/bench sessions (no
-    * checkpoint dir) keep the localCheckpoint fast path. The conf is read
-    * per call, so a long-lived driver can flip modes between runs.
-    *
-    * Both modes go through [[org.apache.spark.sql.graft.PlanCheckpoint]]
-    * (r18): same materialization as `Dataset.checkpoint`/`localCheckpoint`,
-    * but the resulting LogicalRDD DECLARES the final plan's hash
-    * partitioning and ordering instead of `UnknownPartitioning(0)` (what
-    * the stock checkpoint records under AQE). The iterated vectors
-    * (PageRank ranks, label-propagation labels) come out of each round
-    * partitioned by the very key the next round joins on — declaring it
-    * lets EnsureRequirements reuse the layout, cutting the per-iteration
-    * Exchange(+Sort) that re-shuffled the vector every round. `eager =
-    * false` defers only the final write: under AQE the call still runs
-    * every upstream query stage, even if the result is never acted on. */
-  def iterCheckpoint(df: DataFrame, eager: Boolean = true): DataFrame = {
-    val spark = df.sparkSession
-    val reliable = spark.conf.getOption("spark.graft.reliableCheckpoints")
-      .map(_.toBoolean)
-      .getOrElse(spark.sparkContext.getCheckpointDir.isDefined)
-    if (reliable)
-      require(spark.sparkContext.getCheckpointDir.isDefined,
-        "spark.graft.reliableCheckpoints=true needs sc.setCheckpointDir(...)")
-    org.apache.spark.sql.graft.PlanCheckpoint.checkpoint(df, eager, reliable)
-  }
+    * Both modes go through [[org.apache.spark.sql.graft.PlanCheckpoint]]:
+    * the frame is computed ONCE, [[release]] frees its cached blocks, and
+    * the resulting LogicalRDD DECLARES the final plan's hash partitioning
+    * and ordering, so the next round's join on the same key reuses the
+    * layout instead of re-shuffling the vector every round (r18). `eager =
+    * false` defers only the final stage: under AQE the call itself runs
+    * every upstream query stage, even if the result is never acted on —
+    * exactly as stock `Dataset.checkpoint(false)` does. */
+  def iterCheckpoint(df: DataFrame, eager: Boolean = true): DataFrame =
+    org.apache.spark.sql.graft.PlanCheckpoint.checkpoint(df, eager,
+      reliable = df.sparkSession.sparkContext.getCheckpointDir.isDefined)
 
   private val cleaner = java.lang.ref.Cleaner.create()
 
@@ -107,13 +87,13 @@ object Barrier {
     * plan tree by reference, so the action cannot fire while any
     * downstream consumer — a derived Dataset, a temp view, a running
     * action — can still reach the cache; once the caller drops the last
-    * reference, the next GC cycle releases the helpers. On a false-early
-    * drop (a caller holding only a physical plan or RDD) the outcome
-    * depends on the helper's kind: a PERSISTED helper's consumer
-    * recomputes it (slow, still correct), but a CHECKPOINTED helper's
-    * blocks are the only copy of its data — the truncated lineage cannot
-    * rebuild them — so that surviving consumer FAILS with missing
-    * checkpoint blocks. Returns `result` for chaining.
+    * reference, the next GC cycle releases the helpers. Returns `result`
+    * for chaining.
+    *
+    * ONE RELEASE RULE: this releases CacheManager persists only. A
+    * checkpointed helper is never passed here: its blocks are left to the
+    * ContextCleaner, which follows the checkpointed RDD's own reachability,
+    * so a consumer that kept only a physical plan or RDD still finds them.
     *
     * RETENTION CONTRACT for callers (the two edges of tying release to
     * reachability):
@@ -121,9 +101,8 @@ object Barrier {
     *    as long as you want the helper caches warm. A caller that extracts
     *    and retains only `result.queryExecution.executedPlan` or the
     *    underlying RDD has dropped the logical tree — the helpers may
-    *    release early, and later actions then recompute persisted helpers
-    *    (corpus-priced) or fail on checkpointed ones. Hold the Dataset,
-    *    not its internals.
+    *    release early, and later actions then recompute them
+    *    (corpus-priced, still correct). Hold the Dataset, not its internals.
     *  - Conversely, parking the result in a long-lived reference (a REPL
     *    val, a registered temp view, a driver-side registry) pins the
     *    helper caches for that lifetime BY DESIGN — that is what keeps a
@@ -137,13 +116,8 @@ object Barrier {
   def releaseOnDrop(result: DataFrame, cached: DataFrame*): DataFrame = {
     val helpers = cached.toArray
     cleaner.register(result.queryExecution.commandExecuted, () =>
-      helpers.foreach { df =>
-        // persisted helper → CacheManager unpersist; checkpointed helper
-        // (LogicalRDD) → drop its RDD blocks; both no-op on the other kind.
-        // Separate trys: a failed unpersist must not skip the block release.
-        try df.unpersist(blocking = false) catch { case _: Throwable => () }
-        try release(df) catch { case _: Throwable => () }
-      })
+      helpers.foreach(df =>
+        try df.unpersist(blocking = false) catch { case _: Throwable => () }))
     result
   }
 }

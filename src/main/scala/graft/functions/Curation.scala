@@ -313,7 +313,15 @@ object Curation {
     * steady-state ingest run the INCREMENTAL screens instead
     * ([[Dedup.incrementalExactKeys]] on url keys,
     * [[Dedup.incrementalParagraphDedup]]) — this call is the batch
-    * (bootstrap / full-recompute) form. */
+    * (bootstrap / full-recompute) form.
+    *
+    * Materialization: the extracted survivors are a LOCAL checkpoint
+    * whatever the checkpoint dir (corpus-sized, unlike the iteration
+    * vectors [[Barrier.iterCheckpoint]] makes reliable), computed once; the
+    * CALL runs their upstream AQE stages (key scan, winner aggregate,
+    * semi-joins), as a stock lazy checkpoint does. Their blocks are left to
+    * the ContextCleaner, so a consumer holding only the result's RDD keeps
+    * them. */
   def crawlIngest(pages: DataFrame, htmlCol: String = "html",
                   urlCol: String = "url", idCol: String = "doc_id",
                   domainCap: Int = 1000, minQuality: Double = 0.0,
@@ -350,10 +358,6 @@ object Curation {
     // lesson, r17 change 4). The checkpoint truncates to a LogicalRDD. The
     // two-pass plan shape is pinned on [[crawlKeptPlan]]'s own plan
     // (BenchPlanSpec), since the materialized seam is opaque from outside.
-    // Always LOCAL, checkpoint dir or not: a lazy reliable checkpoint of
-    // this corpus-sized frame re-runs the extraction to write it to DFS.
-    // Under AQE even this lazy checkpoint runs the upstream stages (key
-    // scan, winner aggregate, semi-joins) when crawlIngest is called.
     val kept = org.apache.spark.sql.graft.PlanCheckpoint.checkpoint(
       crawlKeptPlan(pages, screened, htmlCol, urlCol, idCol), eager = false,
       reliable = false)
@@ -376,12 +380,8 @@ object Curation {
       .filter(col("quality") >= minQuality)
       .withColumn("domain", Web.registeredDomain(Web.urlHost(col(urlCol))))
       .drop(urlCol)
-    // kept's checkpoint blocks release once the caller drops the result
-    // ([[Barrier.releaseOnDrop]] handles both persisted and checkpointed
-    // helpers); the ContextCleaner is the GC-paced fallback either way
-    Barrier.releaseOnDrop(
-      Web.domainQuota(scored, domainCap, scoreCol = "quality", idCol = idCol,
-        salts = quotaSalts), kept)
+    Web.domainQuota(scored, domainCap, scoreCol = "quality", idCol = idCol,
+      salts = quotaSalts)
   }
 
   /** The two-pass survivor extraction [[crawlIngest]] materializes — the

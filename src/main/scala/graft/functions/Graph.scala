@@ -86,10 +86,11 @@ object Graph {
     * The out-share table (`weight / Σ out-weight`) is computed ONCE and
     * persisted — the iterated join reuses its partitioning; `|V|` is the
     * single driver-side scalar. [[Barrier.iterCheckpoint]] truncates the
-    * per-round lineage exactly like [[Dedup.clusters]] — local blocks by
-    * default, a RELIABLE checkpoint under
-    * `spark.graft.reliableCheckpoints=true` (the fault-tolerance mode an
-    * hours-long cluster ranking run wants). Deterministic: no sampling,
+    * per-round lineage exactly like [[Dedup.clusters]] — RELIABLE exactly
+    * when the session has a checkpoint dir, local blocks otherwise; each
+    * round computes once, a superseded round's blocks go by
+    * [[Barrier.release]], and a lazy round runs its upstream stages when
+    * the loop builds it, as stock Spark does. Deterministic: no sampling,
     * no rand(), so re-runs (and the DuckDB oracle's unrolled replay)
     * reproduce ranks bit-for-bit modulo float summation order. */
   def pageRank(edges: DataFrame, iterations: Int, damping: Double = 0.85,

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core._
-import graft.adapter.{PhysicalTable, SparkMaterializer}
+import graft.adapter.{PhysicalTable, SparkMaterializer, UtcInterval}
 import graft.audits.Audits
 
 /** One evaluation of a model: the consumer, its interval and execution time. */
@@ -96,26 +96,10 @@ class SnapshotEvaluator(
       case k: ModelKind.IncrementalByTimeRange
           if autoTimePartitioned(m) &&
             !df.columns.contains(SnapshotEvaluator.TimePartitionCol) =>
-        import org.apache.spark.sql.functions._
-        val ts = k.timeFormat match {
-          case "epoch"        => timestamp_seconds(col(k.timeColumn))
-          case "epoch_millis" => timestamp_millis(col(k.timeColumn))
-          case _              => col(k.timeColumn).cast("timestamp")
-        }
         df.withColumn(SnapshotEvaluator.TimePartitionCol,
-          date_format(ts, timePartPattern(m)))
+          UtcInterval.partitionKey(k.timeColumn, k.timeFormat, m.intervalUnit))
       case _ => df
     }
-
-  /** Interval-unit-granular partition-key pattern (shared by the managed
-    * column writer and the observed-audit freshness check). */
-  private def timePartPattern(m: Model): String = m.intervalUnit match {
-    case IntervalUnit.Year  => "yyyy"
-    case IntervalUnit.Month => "yyyy-MM"
-    case IntervalUnit.Day   => "yyyy-MM-dd"
-    case IntervalUnit.Hour  => "yyyy-MM-dd-HH"
-    case _                  => "yyyy-MM-dd-HH-mm"
-  }
 
   /** buckets>0 on a unique-key kind: hash-of-key bucket directories. A key's
     * bucket is a pure function of the key — it can never move — so the merge
@@ -297,7 +281,7 @@ class SnapshotEvaluator(
     // write + N audit scans; see ObservedAudits) ------------------------
     val timeCondStr: Option[String] = s.model.kind match {
       case k: ModelKind.IncrementalByTimeRange =>
-        Some(Audits.intervalCondition(k, interval.start, interval.end))
+        Some(UtcInterval.condition(k.timeColumn, k.timeFormat, interval.start, interval.end))
       case _ => None
     }
     final case class AuditSpec(name: String, blocking: Boolean,
@@ -333,10 +317,8 @@ class SnapshotEvaluator(
         if (t.partitionedBy.isEmpty) true
         else if (!autoTimePartitioned(s.model)) false
         else {
-          val fmtr = java.time.format.DateTimeFormatter
-            .ofPattern(timePartPattern(s.model)).withZone(java.time.ZoneOffset.UTC)
-          val loS = fmtr.format(java.time.Instant.ofEpochMilli(interval.start))
-          val hiS = fmtr.format(java.time.Instant.ofEpochMilli(interval.end - 1))
+          val loS = UtcInterval.partitionValue(interval.start, s.model.intervalUnit)
+          val hiS = UtcInterval.partitionValue(interval.end - 1, s.model.intervalUnit)
           materializer.partitionValues(t).forall(pv =>
             pv.get(SnapshotEvaluator.TimePartitionCol)
               .forall(v => v < loS || v > hiS))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partition
 import org.apache.spark.sql.classic.Dataset
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.storage.StorageLevel
 
 /** `Dataset.checkpoint`/`localCheckpoint` that keeps the physical layout
   * VISIBLE to the planner.
@@ -21,14 +22,17 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * label vector) that is one to two avoidable |V|-row shuffles PER
   * ITERATION at 100 TB — the r17 verdict's top "next round" item.
   *
-  * This variant materializes exactly like the stock checkpoint (same
-  * `execute().map(_.copy())`, same local/reliable modes, same eager
-  * semantics) but then recovers the FINAL adaptive plan via
-  * `finalPhysicalPlan` — safe here because `execute()` has already forced
-  * stage planning — and declares its hash partitioning and output ordering
-  * on the LogicalRDD. The claims are true by construction: the wrapped RDD
-  * IS that plan's output, row for row, partition for partition (the
-  * per-row `copy()` preserves both). Expressions that reference anything
+  * This variant materializes as Spark 4.1's own checkpoint does (the same
+  * `execute().map(_.copy())`; eager means `doCheckpoint()`), except that a
+  * RELIABLE checkpoint is persisted before it is marked, so its file write
+  * reads the cached rows: every checkpoint computes its frame ONCE, and
+  * `Barrier.release` frees the cached copy in either mode. Under AQE,
+  * `execute()` runs every upstream query stage at call time, eager or not,
+  * as stock Spark does. It then recovers the FINAL adaptive plan via
+  * `finalPhysicalPlan` and declares its hash partitioning and output
+  * ordering on the LogicalRDD. The claims are true by construction: the
+  * wrapped RDD IS that plan's output, row for row, partition for partition
+  * (the per-row `copy()` preserves both). Expressions that reference anything
   * but the plan's own output attributes are dropped (falls back to
   * UnknownPartitioning — never wrong, only less informed).
   */
@@ -42,8 +46,9 @@ object PlanCheckpoint {
     // same materialization as classic Dataset.checkpoint: execute the plan
     // once, defensive-copy the reused UnsafeRow buffers, mark the RDD
     val internalRdd = physical.execute().map(_.copy())
-    if (reliable) internalRdd.checkpoint() else internalRdd.localCheckpoint()
-    if (eager) internalRdd.count()
+    if (reliable) internalRdd.persist(StorageLevel.MEMORY_AND_DISK).checkpoint()
+    else internalRdd.localCheckpoint()
+    if (eager) internalRdd.doCheckpoint()
     // recover the post-AQE plan; execute() above already forced stage
     // planning, so this does not trigger any further work
     val finalPlan = physical match {

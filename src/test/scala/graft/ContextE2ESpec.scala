@@ -1221,6 +1221,25 @@ class ContextE2ESpec extends AnyFunSuite {
     assert(applyWrites(2) == applyWrites(8))
   }
 
+  test("a janitor pass deletes its expired records in one durable write") {
+    val ctx = new GraftContext(spark, SparkTestSession.tmpDir("jw-ws"), concurrency = 2,
+      durableState = true)
+    ctx.addExternal("raw.orders", s"$sf/orders.parquet")
+    def define(v: Int): Unit = (1 to 2).foreach(i => ctx.addModel(Model(s"jw.m$i",
+      SqlBody(s"SELECT ${v * i} AS v, count(*) AS n FROM raw.orders"))))
+    val t0 = 1000000L
+    define(1)
+    ctx.apply(ctx.plan("prod", 0L, D, skipBackfill = true), executionTs = t0)
+    define(2) // a breaking edit of both: dev holds two versions prod does not
+    ctx.apply(ctx.plan("dev", 0L, D, skipBackfill = true), executionTs = t0)
+    assert(ctx.state.allSnapshots.size == 4)
+    val store = ctx.state.asInstanceOf[graft.state.FileStateStore]
+    val before = store.durableWrites
+    ctx.janitor(now = t0 + ctx.envTtlMs + 1)
+    assert(ctx.state.getEnvironment("dev").isEmpty && ctx.state.allSnapshots.size == 2)
+    assert(store.durableWrites - before == 1)
+  }
+
   test("ad-hoc audit scopes an epoch_millis model's window like the evaluator") {
     val ctx = newCtx()
     val (d1, d2, d3) = (dayMs("1995-01-01"), dayMs("1995-01-02"), dayMs("1995-01-03"))

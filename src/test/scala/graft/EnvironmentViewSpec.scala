@@ -128,15 +128,12 @@ class EnvironmentViewSpec extends AnyFunSuite {
     // latest) and where its view lives (the suffix target and catalog naming
     // rule) are EnvironmentView's; state/ stores the records and
     // SparkMaterializer defines the naming rule. Allowed elsewhere: plan's
-    // fallback to the latest snapshot for a name no record holds; and
-    // Main's `partitions`, which lists the latest snapshot's table
-    // (CHANGES.md FOUND: MainCliSpec pins a dev version's listing)
+    // fallback to the latest snapshot for a name no record holds
     val root = Paths.get("src/main/scala/graft")
     val reads = """getSnapshotById\(|latestSnapshot\(|\.identifiers\b|envLocation\(|envCatalog\(|envTarget\(""".r
     val allowed = Seq("plans/EnvironmentView.scala", "state/", "adapter/SparkMaterializer.scala")
     val exempt = Map(
-      "GraftContext.scala" -> "base.snapshot(name).orElse(state.latestSnapshot(name))",
-      "Main.scala" -> "val snap = ctx.state.latestSnapshot(model).getOrElse(")
+      "GraftContext.scala" -> "base.snapshot(name).orElse(state.latestSnapshot(name))")
     val stream = Files.walk(root)
     val files = try {
       import scala.jdk.CollectionConverters._

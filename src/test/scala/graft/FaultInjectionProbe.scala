@@ -35,10 +35,12 @@ import java.util.concurrent.atomic.AtomicLong
   * unrecoverable BY DESIGN (Spark's own caveat). The probe materializes a
   * checkpointed vector, wipes every persistent RDD (the local-mode stand-in
   * for losing the executors that held the blocks), and asserts the
-  * local-mode arm FAILS the next action while the reliable-mode arm
-  * (`spark.graft.reliableCheckpoints=true`) recomputes from the checkpoint
-  * files and returns the same count. That is exactly the insurance an
-  * hours-long 1000-executor ranking run buys with the reliable flag.
+  * local-mode arm FAILS the next action while the reliable-mode arm (a
+  * checkpoint dir is set, which alone selects reliable mode) recomputes
+  * from the checkpoint files and returns the same count. The local arms run
+  * before the dir is set: SparkContext cannot unset it. That is exactly the
+  * insurance an hours-long 1000-executor ranking run buys with a checkpoint
+  * dir.
   *
   * Run: `scripts/runprobe.sh graft.FaultInjectionProbe [sfDir]`.
   * Output: one JSON line per scenario + a `PASS`/`FAIL` summary line.
@@ -155,28 +157,15 @@ object FaultInjectionProbe {
         checkpointEvery = 2, srcCol = "src_domain", dstCol = "dst_domain")
     }
 
-    // -- A5: same loop, RELIABLE checkpoint mode --------------------------
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_fault_ckpt")
-    spark.sparkContext.setCheckpointDir(ckptDir.toString)
-    spark.conf.set("spark.graft.reliableCheckpoints", "true")
-    try {
-      scenario("pagerank_reliable_ckpt_faults") {
-        Graph.pageRank(edges(docs), iterations = 6, checkpointEvery = 2,
-          srcCol = "src_domain", dstCol = "dst_domain")
-      } {
-        Graph.pageRank(edges(docs.filter(inject())), iterations = 6,
-          checkpointEvery = 2, srcCol = "src_domain", dstCol = "dst_domain")
-      }
-    } finally spark.conf.set("spark.graft.reliableCheckpoints", "false")
-
     // -- PART B: block loss vs the two checkpoint modes -------------------
     def wipeBlocks(): Unit = {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     }
     val base = docs.select(col("doc_id"), (col("doc_id") % 7).as("g"))
 
-    // B1: local mode — blocks ARE the data; losing them after lineage
-    // truncation must fail the next action (the documented caveat)
+    // B1: local mode (no checkpoint dir is set yet) — blocks ARE the data;
+    // losing them after lineage truncation must fail the next action (the
+    // documented caveat)
     val vLocal = graft.functions.Barrier.iterCheckpoint(base)
     val nLocal = vLocal.count()
     wipeBlocks()
@@ -185,18 +174,28 @@ object FaultInjectionProbe {
       s""""action_after_loss_failed":$localDied,"pass":$localDied}""")
     if (!localDied) allPass = false
 
+    // from here on a checkpoint dir is set: reliable mode
+    val ckptDir = java.nio.file.Files.createTempDirectory("graft_fault_ckpt")
+    spark.sparkContext.setCheckpointDir(ckptDir.toString)
+
+    // -- A5: the iterative loop in RELIABLE checkpoint mode ---------------
+    scenario("pagerank_reliable_ckpt_faults") {
+      Graph.pageRank(edges(docs), iterations = 6, checkpointEvery = 2,
+        srcCol = "src_domain", dstCol = "dst_domain")
+    } {
+      Graph.pageRank(edges(docs.filter(inject())), iterations = 6,
+        checkpointEvery = 2, srcCol = "src_domain", dstCol = "dst_domain")
+    }
+
     // B2: reliable mode — the vector lives in checkpoint FILES; the same
     // block wipe costs a re-read, not the job
-    spark.conf.set("spark.graft.reliableCheckpoints", "true")
-    try {
-      val vRel = graft.functions.Barrier.iterCheckpoint(base)
-      val nRel = vRel.count()
-      wipeBlocks()
-      val survived = scala.util.Try(vRel.count()).toOption.contains(nRel)
-      println(s"""{"scenario":"block_loss_reliable_ckpt","rows":$nRel,""" +
-        s""""action_after_loss_failed":${!survived},"pass":$survived}""")
-      if (!survived) allPass = false
-    } finally spark.conf.set("spark.graft.reliableCheckpoints", "false")
+    val vRel = graft.functions.Barrier.iterCheckpoint(base)
+    val nRel = vRel.count()
+    wipeBlocks()
+    val survived = scala.util.Try(vRel.count()).toOption.contains(nRel)
+    println(s"""{"scenario":"block_loss_reliable_ckpt","rows":$nRel,""" +
+      s""""action_after_loss_failed":${!survived},"pass":$survived}""")
+    if (!survived) allPass = false
 
     println(if (allPass) "FAULT-INJECTION PROBE: PASS" else
       "FAULT-INJECTION PROBE: FAIL")

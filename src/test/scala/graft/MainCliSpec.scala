@@ -1129,10 +1129,15 @@ class MainCliSpec extends AnyFunSuite {
     val (t2, diffSkip) = cli(Seq("table-diff", "cli6.late", "prod:dev",
       "--skip-columns", "n", "--show-sample") ++ base: _*)
     assert(t2 == 0 && !diffSkip.contains("match_n"), diffSkip)
-    // partitions verb: metadata-only listing of committed partition dirs
-    val (pc, parts) = cli(Seq("partitions", "cli6.late") ++ base: _*)
+    // partitions verb: metadata-only listing of committed partition dirs,
+    // of the named environment's table (dev's edit is daily-partitioned)
+    val (pc, parts) = cli(Seq("partitions", "cli6.late", "dev") ++ base: _*)
     assert(pc == 0 && parts.contains("__graft_pt=1995-01-1") &&
       parts.contains("partition(s)"), parts)
+    // without an env it lists prod's table, not the dev version's
+    val (ppc, prodParts) = cli(Seq("partitions", "cli6.late") ++ base: _*)
+    assert(ppc == 0 && prodParts.contains("partition(s)") &&
+      !prodParts.contains("__graft_pt=1995-01-1"), prodParts)
     // env-pair-only invocation (reference: model optional) diffs exactly
     // the models changed between the envs — cli6.other is unchanged
     val (t3, diffEnvs) = cli(Seq("table-diff", "prod:dev") ++ base: _*)

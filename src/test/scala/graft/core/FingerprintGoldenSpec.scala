@@ -20,12 +20,22 @@ class FingerprintGoldenSpec extends AnyFunSuite {
       "SELECT  A, 'Mixed CASE' AS S -- Trailing Comment\n" +
         "FROM  Sch.Tbl /* Block\n Comment */ WHERE X = 'O''Brien'\n\tAND Y > 1  ") ==
       "select a, 'Mixed CASE' as s from sch.tbl where x = 'O''Brien' and y > 1")
-    // `--` inside a literal starts a comment today; pinned so a fix is a
-    // deliberate re-versioning, not a side effect
+    // `--` inside a literal is text, not a comment (restated when the strip
+    // became literal-aware: it used to eat the rest of the line)
     assert(Fingerprint.canonicalSql(
       "SELECT  A, 'Mixed CASE -- Kept' AS S -- Trailing Comment\n" +
         "FROM  Sch.Tbl /* Block\n Comment */ WHERE X = 'O''Brien'\n\tAND Y > 1  ") ==
-      "select a, 'Mixed CASE FROM Sch.Tbl WHERE X = 'o''brien' AND Y > 1")
+      "select a, 'Mixed CASE -- Kept' as s from sch.tbl where x = 'O''Brien' and y > 1")
+  }
+
+  test("an edit after `--` inside a string literal changes the fingerprint") {
+    def fp(body: String) =
+      Fingerprint.of(Model("gold.lit", SqlBody(body)), body, Nil)
+    val b = "SELECT u FROM gold.src WHERE u = 'a--b'"
+    val c = "SELECT u FROM gold.src WHERE u = 'a--c'"
+    assert(Fingerprint.canonicalSql(b) != Fingerprint.canonicalSql(c))
+    assert(fp(b).dataHash != fp(c).dataHash)
+    assert(fp(b).version != fp(c).version)
   }
 
   test("Fingerprint.of keeps a model's fingerprint over two parents") {

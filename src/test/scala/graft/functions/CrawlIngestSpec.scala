@@ -2,6 +2,7 @@ package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.graft.CheckpointDirScope
 import graft.SparkTestSession
 
 /** End-to-end drive of [[Curation.crawlIngest]] — each stage of the
@@ -169,5 +170,57 @@ class CrawlIngestSpec extends AnyFunSuite {
     assert(viaBytes == viaText)
     assert(viaText.exists(_(1).asInstanceOf[String].contains(cp1251Word)),
       "the cp1251 page must survive with its non-ASCII content intact")
+  }
+
+  test("crawlIngest survivors stay a local checkpoint when a checkpoint dir is set") {
+    val sc = spark.sparkContext
+    val root = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    def files(): Set[String] = {
+      val dir = new org.apache.hadoop.fs.Path(root)
+      val it = dir.getFileSystem(sc.hadoopConfiguration).listFiles(dir, true)
+      val b = Set.newBuilder[String]
+      while (it.hasNext) b += it.next().getPath.toString
+      b.result()
+    }
+    val twoPages = Seq(
+      (1L, "https://a.com/x", "<html><head><title>A</title></head><body><p>alpha words here</p></body></html>"),
+      (2L, "https://b.com/y", "<html><head><title>B</title></head><body><p>beta words here</p></body></html>"))
+      .toDF("doc_id", "url", "html")
+    CheckpointDirScope(sc, Some(root)) {
+      val before = files()
+      val out = Curation.crawlIngest(twoPages, domainCap = 3)
+      assert(out.count() == 2)
+      assert(files() == before, "crawlIngest wrote reliable checkpoint files")
+    }
+  }
+
+  test("a consumer holding only crawlIngest's executed RDD outlives the dropped Dataset") {
+    // the survivors' checkpoint blocks are the only copy of that data: no
+    // release may drop them while a consumer can still reach the RDD. AQE
+    // off: an adaptive plan runs its shuffle stages when the RDD is taken,
+    // so a later action would read shuffle files, never the blocks
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    // in a method, so the Dataset and every frame derived from it are
+    // unreachable once it returns
+    def consumer(): (org.apache.spark.rdd.RDD[Long], Seq[Long]) = {
+      val result = Curation.crawlIngest(pages, domainCap = 3, minQuality = 0.05)
+      val i = result.schema.fieldIndex("doc_id")
+      val ids = result.queryExecution.executedPlan.execute().map(_.getLong(i))
+      (ids, result.select("doc_id").as[Long].collect().toSeq.sorted)
+    }
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val (ids, expected) = consumer()
+      assert(expected.nonEmpty)
+      // wait until the dropped result's persisted helpers are released:
+      // the release that once dropped the survivors' blocks fires then too
+      val created = sc.getPersistentRDDs.keySet.toSet -- before
+      def released = created.exists(id => !sc.getPersistentRDDs.contains(id))
+      val deadline = System.nanoTime() + 20000000000L
+      while (!released && System.nanoTime() < deadline) { System.gc(); Thread.sleep(200) }
+      assert(released, s"nothing of $created was released after the result was dropped")
+      assert(ids.collect().toSeq.sorted == expected)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 }

@@ -265,4 +265,50 @@ class DedupSpec extends AnyFunSuite {
     assert(!plan.contains("Window"), plan.linesIterator.take(25).mkString("\n"))
     assert(plan.contains("HashAggregate"), plan.linesIterator.take(25).mkString("\n"))
   }
+
+  test("pairStruct ≡ pair: bound-digest double hash matches the twin-md5 form") {
+    val vals = Seq("", "a", "the quick brown fox", "ünïcode ✓", "x" * 500,
+      "line\nbreak\ttab") ++ (0 until 200).map(i => s"shingle $i words here")
+    val df = vals.toDF("s")
+    val (h1, h2) = PortableHash.pair(col("s"))
+    val got = df.select(PortableHash.pairStruct(col("s")).as("p"),
+        h1.as("h1"), h2.as("h2"))
+      .collect()
+    got.foreach { r =>
+      val p = r.getStruct(0)
+      assert(p.getLong(0) == r.getLong(1) && p.getLong(1) == r.getLong(2))
+    }
+  }
+
+  test("ngramJaccardPairs length filter is value-invisible (differential vs unfiltered)") {
+    // mixed lengths: long docs, short docs, exact dups, a short-vs-long
+    // pair sharing every short shingle (high overlap, impossible ratio)
+    val long1 = ((1 to 60).map(i => s"w$i") :+ "tail").mkString(" ")
+    val docs = Seq(
+      (1L, long1), (2L, long1), // exact dup pair
+      (3L, (1 to 12).map(i => s"w$i").mkString(" ")), // prefix of long1
+      (4L, (1 to 12).map(i => s"w$i").mkString(" ")), // dup of 3
+      (5L, "w1 w2 w3 w4"), // tiny subset
+      (6L, (30 to 90).map(i => s"w$i").mkString(" "))
+    ).toDF("doc_id", "text")
+    // unfiltered reference: the r17 join (no size bound), same hash keys
+    val arr = Dedup.shingleArray(docs, "text", "doc_id", 3)
+    val sizes = arr.select(col("doc_id"), size(col("shingles")).as("n_sh"))
+    val sh = arr.select(col("doc_id"), explode(col("shingles")).as("__s"))
+      .select(col("doc_id"), xxhash64(col("__s")).as("shingle"))
+    val ref = sh.as("a").join(sh.as("b"),
+        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      .agg(count(lit(1)).as("inter"))
+      .join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
+      .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
+      .withColumn("jaccard", round(col("inter") / (col("n_a") + col("n_b") - col("inter")), 4))
+      .filter(col("jaccard") >= 0.35)
+      .select("id_a", "id_b", "jaccard")
+      .orderBy("id_a", "id_b").collect().toSeq
+    val got = Dedup.ngramJaccardPairs(docs, n = 3, threshold = 0.35)
+      .orderBy("id_a", "id_b").collect().toSeq
+    assert(got == ref, s"length filter changed the result:\nref=$ref\ngot=$got")
+    assert(got.nonEmpty, "fixture must produce pairs or the test pins nothing")
+  }
 }

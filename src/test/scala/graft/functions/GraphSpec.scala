@@ -2,7 +2,8 @@ package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, LogicalRDD}
+import org.apache.spark.graft.{CheckpointDirScope, JobsDuring}
 import graft.SparkTestSession
 
 class GraphSpec extends AnyFunSuite {
@@ -330,17 +331,14 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("reliable-checkpoint mode: same ranks, vectors written to the checkpoint dir") {
-    // spark.graft.reliableCheckpoints=true swaps the per-round
-    // localCheckpoint for a reliable checkpoint (executor loss costs a
-    // re-read, not the job — the 1000-executor mode). Semantics must be
-    // identical; the checkpoint dir must actually receive the vectors.
+    // a checkpoint dir swaps the per-round localCheckpoint for a reliable
+    // checkpoint (executor loss costs a re-read, not the job — the
+    // 1000-executor mode). Semantics must be identical; the checkpoint dir
+    // must actually receive the vectors.
     val e = Seq(("A", "B", 1.0), ("B", "A", 1.0), ("B", "C", 1.0))
-    val local = ranksOf(e, 3)
+    val local = CheckpointDirScope(spark.sparkContext, None)(ranksOf(e, 3))
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val hadDir = spark.sparkContext.getCheckpointDir
-    spark.sparkContext.setCheckpointDir(dir)
-    spark.conf.set("spark.graft.reliableCheckpoints", "true")
-    try {
+    CheckpointDirScope(spark.sparkContext, Some(dir)) {
       val reliable = ranksOf(e, 3)
       assert(reliable == local, "reliable mode changed rank values")
       def files(p: java.io.File): Seq[java.io.File] =
@@ -352,26 +350,95 @@ class GraphSpec extends AnyFunSuite {
       val cl = Dedup.clusters(pairs).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(cl == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-    } finally {
-      spark.conf.set("spark.graft.reliableCheckpoints", "false")
-      // leave the dir set (no unset API); the flag alone gates the mode
-      hadDir.foreach(spark.sparkContext.setCheckpointDir)
     }
   }
 
-  test("iterCheckpoint fails loudly when reliable mode has no checkpoint dir") {
-    val fresh = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
-    // NOTE: getOrCreate returns the shared session in this JVM — guard the
-    // assertion on an actually-unset dir instead of assuming freshness
-    if (fresh.sparkContext.getCheckpointDir.isEmpty) {
-      fresh.conf.set("spark.graft.reliableCheckpoints", "true")
-      try {
-        import fresh.implicits._
-        intercept[IllegalArgumentException] {
-          Barrier.iterCheckpoint(Seq(1).toDF("x"))
-        }
-      } finally fresh.conf.set("spark.graft.reliableCheckpoints", "false")
+  private def lrOf(df: org.apache.spark.sql.DataFrame): LogicalRDD =
+    df.queryExecution.logical.asInstanceOf[LogicalRDD]
+
+  test("iterCheckpoint is reliable exactly when a checkpoint dir is set") {
+    // each case sets (or clears) the dir for its own body and restores the
+    // ambient setting, so the order suites run in cannot matter
+    val sc = spark.sparkContext
+    val ambient = sc.getCheckpointDir
+    val base = spark.range(0, 100).toDF("id")
+    // reliable checkpoints write files; localCheckpoint leaves no file
+    def mode(df: org.apache.spark.sql.DataFrame): String =
+      if (lrOf(df).rdd.getCheckpointFile.isDefined) "reliable" else "local"
+    def persisted(df: org.apache.spark.sql.DataFrame): Boolean =
+      sc.getPersistentRDDs.contains(lrOf(df).rdd.id)
+    CheckpointDirScope(sc, None) {
+      val ck = Barrier.iterCheckpoint(base)
+      assert(mode(ck) == "local" && persisted(ck))
+      Barrier.release(ck)
+      assert(!persisted(ck), "release left a local checkpoint's blocks")
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    CheckpointDirScope(sc, Some(dir)) {
+      val ck = Barrier.iterCheckpoint(base)
+      assert(mode(ck) == "reliable" && persisted(ck))
+      // release frees the cached copy; the files still serve the rows
+      Barrier.release(ck)
+      assert(!persisted(ck), "release left a reliable checkpoint's cached copy")
+      assert(ck.count() == 100)
+    }
+    assert(sc.getCheckpointDir == ambient)
+  }
+
+  test("iterCheckpoint computes a reliable checkpoint once, eager or lazy") {
+    val sc = spark.sparkContext
+    // counts evaluations; nondeterministic so no rule folds, moves or
+    // dedupes it, and no exchange follows it (its stage is the final one)
+    val counting = udf { (x: Long) => GraphSpec.evals.incrementAndGet(); x }
+      .asNondeterministic()
+    def frame = spark.range(0, 200, 1, 4).select(col("id"), counting(col("id")).as("v"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    CheckpointDirScope(sc, Some(dir)) {
+      GraphSpec.evals.set(0)
+      val eager = Barrier.iterCheckpoint(frame)
+      assert(eager.count() == 200)
+      assert(GraphSpec.evals.get == 200, "eager reliable checkpoint computed its rows twice")
+      GraphSpec.evals.set(0)
+      val lazyCk = Barrier.iterCheckpoint(frame, eager = false)
+      assert(lazyCk.collect().length == 200)
+      assert(lrOf(lazyCk).rdd.getCheckpointFile.isDefined, "the lazy checkpoint was never written")
+      assert(GraphSpec.evals.get == 200, "lazy reliable checkpoint computed its rows twice")
     }
   }
+
+  test("a lazy iterCheckpoint runs the upstream AQE stages at call time, as stock Spark does") {
+    val sc = spark.sparkContext
+    assert(spark.conf.get("spark.sql.adaptive.enabled").toBoolean)
+    def frame = spark.range(0, 1000, 1, 4).groupBy((col("id") % 10).as("k")).count()
+    CheckpointDirScope(sc, None) {
+      val ours = JobsDuring(sc)(Barrier.iterCheckpoint(frame, eager = false))
+      val stock = JobsDuring(sc)(frame.localCheckpoint(eager = false))
+      assert(ours > 0, "the aggregate's shuffle stage did not run at call time")
+      assert(ours == stock, s"iterCheckpoint ran $ours jobs at call time, stock Spark $stock")
+    }
+  }
+
+  test("checkpoint declares the final plan's hash partitioning (and only a truthful one)") {
+    val n = spark.sessionState.conf.numShufflePartitions
+    // explicit-N repartition: AQE never coalesces REPARTITION_BY_NUM, so
+    // the declared layout must be the plain hash(id, n)
+    val ck = Barrier.iterCheckpoint(
+      spark.range(0, 10000).toDF("id").repartition(n, col("id")))
+    val part = lrOf(ck).outputPartitioning
+    assert(part.toString.contains(s"hashpartitioning(id#") &&
+      part.numPartitions == n, s"declared $part")
+    // a co-partitioned self-aggregate over the declared layout plans with
+    // NO fresh exchange under the declared frame
+    val agg = ck.groupBy("id").count()
+    val plan = agg.queryExecution.executedPlan.toString
+    assert(!plan.contains("ENSURE_REQUIREMENTS"),
+      s"declared partitioning not reused:\n$plan")
+    // round-trip values intact
+    assert(ck.agg(sum("id")).as[Long].head() == (0L until 10000L).sum)
+  }
+}
+
+object GraphSpec {
+  /** Row evaluations of the counting UDF (local mode: one JVM). */
+  val evals = new java.util.concurrent.atomic.AtomicLong
 }

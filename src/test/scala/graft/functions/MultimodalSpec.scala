@@ -435,4 +435,40 @@ class MultimodalSpec extends AnyFunSuite {
     assert(out(2L) == ((true, 2L, true)) && out(7L) == ((true, 2L, false)))
     assert(out(9L) == ((true, 4L, false)))
   }
+
+  test("PartitionImageDecoder parity: PNG, corrupt, and unknown payloads " +
+    "decode exactly as ImageIO.read (dhash + failure verdicts)") {
+    val media = spark.range(0, 60).select(col("id").as("media_id"))
+    val good = Multimodal.imageDHash(spark,
+      Multimodal.synthesizeDhashImages(spark, media))
+      .select(col("media_id"), col("dhash"), col("dhash_ok")).collect()
+    // every synthetic PNG decodes through the cached reader to the exact
+    // fixture pattern ImageIO.read recovered in every prior round
+    good.foreach { r =>
+      assert(r.getBoolean(2), s"decode failed for ${r.getLong(0)}")
+      assert(r.getLong(1) == Multimodal.dhashPattern(r.getLong(0), 12),
+        s"dhash mismatch for ${r.getLong(0)}")
+    }
+    // corrupt PNG-magic payload and unknown-format payload both yield the
+    // old path's verdict: dhash_ok = false, no task failure
+    val pngMagic = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a, 1, 2, 3)
+    val junk = Array[Byte](1, 2, 3, 4, 5, 6, 7, 8, 9)
+    val bad = spark.createDataFrame(Seq((1L, pngMagic), (2L, junk), (3L, null)))
+      .toDF("media_id", "payload")
+    val badOut = Multimodal.imageDHash(spark, bad)
+      .select(col("media_id"), col("dhash_ok")).collect()
+    assert(badOut.forall(!_.getBoolean(1)), "corrupt payloads must fail soft")
+    // and a good row AFTER a corrupt row on the same partition still
+    // decodes (the reader is disposed and re-created after an error)
+    val mixed = spark.createDataFrame(Seq(
+        (1L, pngMagic),
+        (2L, Multimodal.syntheticDhashPng(Multimodal.dhashPattern(2L, 12)))))
+      .toDF("media_id", "payload").repartition(1)
+    val mixedOut = Multimodal.imageDHash(spark, mixed)
+      .select(col("media_id"), col("dhash"), col("dhash_ok"))
+      .collect().sortBy(_.getLong(0))
+    assert(!mixedOut(0).getBoolean(2))
+    assert(mixedOut(1).getBoolean(2) &&
+      mixedOut(1).getLong(1) == Multimodal.dhashPattern(2L, 12))
+  }
 }

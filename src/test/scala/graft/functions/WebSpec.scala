@@ -572,4 +572,20 @@ class WebSpec extends AnyFunSuite {
       .collect().map(_.getString(0)).toSeq.sorted
     assert(bc == expected && sh == expected, s"bc=$bc sh=$sh")
   }
+
+  test("registeredDomain: bound-labels form handles nulls, IPs, PSL tiers (spot set)") {
+    // the binding refactor must not change a single verdict — spot-check
+    // the tier boundary cases next to WebSpec's full table
+    val cases = Seq(
+      ("news.bbc.co.uk", "bbc.co.uk"),
+      ("a.b.example.com", "example.com"),
+      ("localhost", "localhost"),
+      ("127.0.0.1", "127.0.0.1"),
+      ("[2001:db8::1]", "[2001:db8::1]"),
+      (null, null))
+    val got = cases.map(_._1).toDF("h")
+      .select(Web.registeredDomain(col("h")).as("d"))
+      .collect().map(r => Option(r.getString(0)).orNull).toSeq
+    assert(got == cases.map(_._2), got.toString)
+  }
 }
