@@ -1293,7 +1293,12 @@ class GraftContext(
     val table = EnvironmentView.quoted(view.location(modelName))
     val timeCond = m.kind match {
       case k: ModelKind.IncrementalByTimeRange if end < Long.MaxValue =>
-        Some(UtcInterval.condition(k.timeColumn, k.timeFormat, start, end))
+        // the time column's type from the table's commit record, as the
+        // evaluator takes it from the frame it wrote
+        val recorded = view.snapshot(modelName).flatMap(s => materializer.format.schema(
+          evaluator.physicalTable(s, view.devFlags.getOrElse(modelName, false))))
+        Some(UtcInterval.condition(k.timeColumn, k.timeFormat, start, end,
+          recorded.flatMap(UtcInterval.typeOf(_, k.timeColumn))))
       case _ => None
     }
     // audit args may reference OTHER models (relationships `to:`): they

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchT
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScanBuilder, ParquetTable}
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -44,8 +44,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * dirs directly, with no session-side view in between.
   *
   * Managed physical columns (`__graft_*` partition keys) are hidden from
-  * the catalog schema exactly like the session-catalog view's
-  * `* EXCEPT (...)` projection — see [[EnvCatalog.PrunedParquetTable]]. */
+  * the catalog schema exactly like the session-catalog view's projection —
+  * see [[EnvCatalog.VersionDirTable]]. */
 final class EnvCatalog extends TableCatalog with SupportsNamespaces {
   private var catalogName: String = _
   private var warehouse: Path = _
@@ -121,12 +121,10 @@ final class EnvCatalog extends TableCatalog with SupportsNamespaces {
     fs(entryPath(ident)).exists(entryPath(ident))
 
   /** Current-snapshot resolutions memoize the constructed [[Table]] behind
-    * an mtime fingerprint. The construction cost is NOT the JSON read (µs)
-    * but the DSv2 plumbing behind it — InMemoryFileIndex listing + parquet
-    * footer schema inference per [[ParquetTable]] — measured at ~58 ms per
-    * resolution at 10k entries (EnvCatalogScaleProbe, r16 verdict task 7):
-    * driver-side FS metadata in the analyzer path, per table reference per
-    * query. The fingerprint re-checks everything that can change what the
+    * an mtime fingerprint: a load reads the entry JSON, lists the root's
+    * versions and reads the chosen snapshot's commit record, driver-side FS
+    * metadata in the analyzer path, per table reference per query. The
+    * fingerprint re-checks everything that can change what the
     * load would return — entry JSON status (repoint/re-promote), the root's
     * version listing (new snapshot commit), and the chosen dir's mtime
     * (immutable under rename-publish, guarded anyway) — so a hit costs ~3
@@ -230,33 +228,17 @@ final class EnvCatalog extends TableCatalog with SupportsNamespaces {
       if (!rf.exists(root)) Nil
       else rf.listStatus(root).map(_.getPath.getName)
         .filter(_.matches("v\\d+")).map(_.drop(1).toInt).sorted.toSeq
-    val chosen = pick(versions).map(v => new Path(root, s"v$v"))
-    val hasParquet = chosen.exists { dir =>
-      val it = rf.listFiles(dir, true)
-      var found = false
-      while (!found && it.hasNext)
-        if (it.next().getPath.getName.endsWith(".parquet")) found = true
-      found
-    }
+    val chosen = pick(versions).map(v => new Path(root, s"v$v").toString)
     val fullName = s"$catalogName.${(ident.namespace() :+ ident.name()).mkString(".")}"
-    val inner =
-      if (hasParquet)
-        ParquetTable(fullName, spark, CaseInsensitiveStringMap.empty(),
-          Seq(chosen.get.toString), None,
-          classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat])
-      else {
-        // no data yet (or schema-marker-only snapshot): an empty table with
-        // the schema captured at promote time
-        val st = schemaDdl.map(StructType.fromDDL).getOrElse(
-          throw new IllegalStateException(
-            s"$fullName has no parquet data and no stored schema"))
-        ParquetTable(fullName, spark, CaseInsensitiveStringMap.empty(),
-          Nil, Some(st),
-          classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat])
-      }
-    val hidden = inner.schema.fieldNames.filter(_.startsWith("__graft_")).toSet
-    if (hidden.isEmpty) inner
-    else new EnvCatalog.PrunedParquetTable(inner, hidden)
+    // the snapshot's commit record (a dir written before records were kept
+    // is inferred as it always was), else the schema captured at promote
+    // time for a root with no snapshot or an empty one
+    val rec = chosen.flatMap(d => VersionDir.readRecord(spark, d)
+        .orElse(VersionDir.inferRecord(spark, d, Nil)))
+      .orElse(schemaDdl.map(d => CommitRecord(StructType.fromDDL(d), Nil, hasFiles = false)))
+      .getOrElse(throw new IllegalStateException(
+        s"$fullName has no parquet data and no stored schema"))
+    new EnvCatalog.VersionDirTable(fullName, spark, chosen.getOrElse(root.toString), rec)
   }
 
   override def createTable(ident: Identifier, schema: StructType,
@@ -284,32 +266,27 @@ final class EnvCatalog extends TableCatalog with SupportsNamespaces {
 
 object EnvCatalog {
 
-  /** [[ParquetTable]] with the engine's managed `__graft_*` physical
-    * columns hidden — the DSv2 equivalent of the session-catalog view's
-    * `SELECT * EXCEPT (__graft_*)`. Only `schema()` lies: the scan builder
-    * keeps the REAL file/partition schemas, and because Spark's
-    * V2ScanRelationPushDown prunes required columns from the relation
-    * output (which this schema defines), a hidden column can never be
-    * requested — it simply never leaves the directory layout. */
-  private[adapter] final class PrunedParquetTable(inner: ParquetTable,
-                                                  hidden: Set[String])
+  /** A version dir read by its commit record, with the engine's managed
+    * `__graft_*` columns hidden — the DSv2 equivalent of the session-catalog
+    * view's projection. Only `schema()` hides them: the scan keeps the real
+    * file and partition schemas, and because V2ScanRelationPushDown prunes
+    * required columns from the relation output (which this schema defines),
+    * a hidden column is never requested. Loading it reads no file; the
+    * [[VersionDirIndex]] lists the dir when a scan is planned. */
+  private[adapter] final class VersionDirTable(fullName: String, spark: SparkSession,
+                                               dir: String, rec: CommitRecord)
       extends Table with SupportsRead {
-    override def name(): String = inner.name
-    override def schema(): StructType =
-      StructType(inner.schema.filterNot(f => hidden(f.name)))
-    override def partitioning(): Array[Transform] = inner.partitioning().filter {
-      t => !hidden.exists(h => t.references().exists(_.fieldNames().contains(h)))
-    }
+    override def name(): String = fullName
+    override def schema(): StructType = rec.visible
+    override def partitioning(): Array[Transform] = rec.partitionedBy
+      .filterNot(_.startsWith("__graft_"))
+      .map(c => org.apache.spark.sql.connector.expressions.Expressions.identity(c): Transform)
+      .toArray
     override def capabilities(): util.Set[TableCapability] =
       util.EnumSet.of(TableCapability.BATCH_READ)
-    override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-      // inline FileTable.mergedOptions (protected): table-creation options
-      // under the scan options
-      val merged = new util.HashMap[String, String](inner.options)
-      merged.putAll(options)
-      ParquetScanBuilder(inner.sparkSession, inner.fileIndex, schema(),
-        inner.dataSchema, new CaseInsensitiveStringMap(merged))
-    }
+    override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+      ParquetScanBuilder(spark, new VersionDirIndex(spark, new Path(dir), rec), schema(),
+        rec.dataSchema, options)
   }
 
   /** Register `catalog` as an [[EnvCatalog]] in the session conf if nothing
@@ -347,8 +324,8 @@ object EnvCatalog {
     new Path(spark.conf.get(s"spark.sql.catalog.$catalog.warehouse"))
   }
 
-  /** Write (promote) an entry — atomic tmp+rename, the same publish
-    * discipline as the bloom shard cache. */
+  /** Write (promote) an entry — atomic tmp+rename, as a commit record is
+    * published. */
   def writeEntry(spark: SparkSession, catalog: String, db: String,
                  table: String, physicalRoot: String,
                  schemaDdl: Option[String]): Unit = {
@@ -360,24 +337,10 @@ object EnvCatalog {
     val node = mapper.createObjectNode()
     node.put("root", physicalRoot)
     schemaDdl.foreach(node.put("schema_ddl", _))
-    val target = new Path(dir, s"$table.json")
-    val tmp = new Path(dir, s"$table.json.tmp${System.nanoTime()}")
-    val out = f.create(tmp, true)
-    try out.write(mapper.writeValueAsBytes(node)) finally out.close()
-    // OVERWRITE rename (FileContext — the old FileSystem.rename has no
-    // overwrite mode): a delete-then-rename would open a window where a
+    // an atomic overwrite: a delete-then-write would open a window where a
     // continuously-promoted table resolves to NoSuchTable for concurrent
-    // readers, and two concurrent re-promotes would race each other's
-    // deletes — CREATE OR REPLACE VIEW never behaves that way
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      target.toUri, spark.sessionState.newHadoopConf())
-    try fc.rename(fc.makeQualified(tmp), fc.makeQualified(target),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    catch { case t: Throwable =>
-      // don't litter the db dir with uniquely-named orphans across retries
-      try f.delete(tmp, false) catch { case _: Throwable => () }
-      throw t
-    }
+    // readers — CREATE OR REPLACE VIEW never behaves that way
+    VersionDir.publish(spark, new Path(dir, s"$table.json"), mapper.writeValueAsBytes(node))
   }
 
   /** Remove (demote) an entry; harmless if absent. Returns whether an

@@ -115,7 +115,8 @@ class SparkMaterializer(val spark: SparkSession,
   def insertOverwriteByTimePartition(
       t: PhysicalTable, df: DataFrame, timeCol: String,
       startMs: Long, endMs: Long, timeFormat: String = "timestamp"): Unit = {
-    val inInterval = expr(UtcInterval.condition(timeCol, timeFormat, startMs, endMs))
+    val inInterval = expr(UtcInterval.condition(timeCol, timeFormat, startMs, endMs,
+      UtcInterval.typeOf(df.schema, timeCol)))
     val guarded = df.filter(inInterval)
     currentDataDir(t) match {
       case None => replaceQuery(t, guarded)
@@ -498,11 +499,9 @@ class SparkMaterializer(val spark: SparkSession,
         "are not applicable to environment-catalog entries and were not applied")
     EnvCatalog.ensureRegistered(spark, catalog)
     // capture the visible schema for the no-data-yet window (the catalog
-    // analog of the schema-marker empty view)
-    val ddl = format.currentDataDir(physical)
-      .map(_ => read(physical).schema
-        .filterNot(_.name.startsWith("__graft_")))
-      .map(fs => org.apache.spark.sql.types.StructType(fs.toArray).toDDL)
+    // analog of the empty view), from the commit record
+    val ddl = format.schema(physical).map(st =>
+      org.apache.spark.sql.types.StructType(st.filterNot(_.name.startsWith("__graft_"))).toDDL)
     EnvCatalog.writeEntry(spark, catalog, envDb, viewName, physical.root, ddl)
   }
 

@@ -3,6 +3,7 @@ package graft.adapter
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The storage/commit protocol behind [[PhysicalTable]]. Its one
   * implementation is [[DirVersionFormat]]'s copy-on-write version
@@ -95,6 +96,8 @@ trait TableFormat {
     * partition dirs (unpartitioned, or no data). Used by the one-pass audit
     * fast-path to prove an interval has no prior rows. */
   def partitionValues(t: PhysicalTable): Seq[Map[String, String]]
+  /** The current snapshot's schema, None before the first commit. */
+  def schema(t: PhysicalTable): Option[StructType] = currentDataDir(t).map(_ => read(t).schema)
 }
 
 /** Default [[TableFormat]]: plain parquet under copy-on-write version
@@ -145,64 +148,65 @@ final class DirVersionFormat(spark: SparkSession) extends TableFormat {
       found.toSeq
     }.getOrElse(Nil)
 
-  /** True when `dir` holds at least one parquet data file. A partitioned
-    * write of ZERO rows emits no files at all, so schema inference over the
-    * bare dir fails — the `_graft_schema` marker (underscore-prefixed: Spark
-    * readers ignore it) preserves the schema for that legitimate empty case. */
-  private def hasParquet(dir: String): Boolean = {
-    val p = new Path(dir); val f = fs(p)
-    f.exists(p) && {
-      val it = f.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext)
-        if (it.next().getPath.getName.endsWith(".parquet")) found = true
-      found
-    }
-  }
+  /** The current record of `dir`. A dir an older writer left without one
+    * is inferred once, as that writer read it, and then recorded. None for a
+    * dir with neither data files nor a schema. */
+  private def recordOf(t: PhysicalTable, dir: String): Option[CommitRecord] =
+    VersionDir.readRecord(spark, dir).orElse(
+      VersionDir.inferRecord(spark, dir, t.partitionedBy).map(VersionDir.writeRecord(spark, dir, _)))
 
-  private def schemaMarker(dir: String): Option[org.apache.spark.sql.types.StructType] = {
-    val p = new Path(dir, "_graft_schema"); val f = fs(p)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val ddl = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      Some(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-    }
-  }
+  /** The recorded schema of the current snapshot; reads no data file. */
+  override def schema(t: PhysicalTable): Option[StructType] =
+    currentDataDir(t).flatMap(recordOf(t, _)).map(_.schema)
 
+  /** The per-commit tables [[register]] bound for `t`. */
+  private def commitTables(t: PhysicalTable): Seq[String] =
+    if (!spark.catalog.databaseExists(t.database)) Nil
+    else spark.sessionState.catalog.listTables(t.database, s"${t.table}__graft_c*",
+      includeLocalTempViews = false).map(_.table)
+
+  private def dropCommitTables(t: PhysicalTable, keep: Set[String] = Set.empty): Unit =
+    commitTables(t).filterNot(keep)
+      .foreach(n => spark.sql(s"DROP TABLE IF EXISTS `${t.database}`.`$n`"))
+
+  /** Catalog writes only: a fresh per-commit table declaring the recorded
+    * schema over the current version dir (see [[VersionDirSource]]), and the
+    * table's view over it without the managed `__graft_*` columns. The fresh
+    * name keeps every session's per-table relation cache from serving an
+    * older commit. A commit that wrote no file binds an empty view. The
+    * previous commit's table stays until the next bind, so a reader that
+    * read the view's text just before the repoint still resolves it. */
   def register(t: PhysicalTable): Unit = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS `${t.database}`")
-    currentDataDir(t).foreach { dir =>
-      if (hasParquet(dir)) {
-        // managed columns (the derived __graft_* partition keys) live in the
-        // physical layout only — the catalog view hides them
-        val managed = spark.read.parquet(dir).schema.fieldNames
-          .filter(_.startsWith("__graft_"))
-        val proj =
-          if (managed.isEmpty) "*"
-          else "* EXCEPT (" + managed.map(c => s"`$c`").mkString(", ") + ")"
-        spark.sql(s"CREATE OR REPLACE VIEW ${t.qualified} AS SELECT $proj FROM parquet.`$dir`")
-      } else schemaMarker(dir).foreach { st =>
-        val proj = st.filterNot(_.name.startsWith("__graft_")).map(fd =>
-          s"CAST(NULL AS ${fd.dataType.sql}) AS `${fd.name}`").mkString(", ")
-        spark.sql(s"CREATE OR REPLACE VIEW ${t.qualified} AS SELECT $proj WHERE 1 = 0")
-      }
-    }
+    currentDataDir(t).foreach(dir => recordOf(t, dir).foreach { rec =>
+      val previous = commitTables(t).sortBy(DirVersionFormat.commitOf).lastOption
+      val (bound, body) =
+        if (rec.hasFiles) {
+          val name = s"${t.table}__graft_c${DirVersionFormat.nextCommit()}"
+          spark.sql(s"CREATE TABLE `${t.database}`.`$name` (${rec.schema.toDDL}) " +
+            s"USING ${classOf[VersionDirSource].getName} " +
+            s"OPTIONS (partition_columns '${rec.partitionedBy.size}') " +
+            s"LOCATION '${dir.replace("\\", "\\\\").replace("'", "\\'")}'")
+          (name, rec.visible.map(fd => quote(fd.name)).mkString("SELECT ", ", ",
+            s" FROM `${t.database}`.`$name`"))
+        } else ("", rec.visible.map(fd => s"CAST(NULL AS ${fd.dataType.sql}) AS ${quote(fd.name)}")
+          .mkString("SELECT ", ", ", " WHERE 1 = 0"))
+      spark.sql(s"CREATE OR REPLACE VIEW ${t.qualified} AS $body")
+      dropCommitTables(t, keep = Set(bound) ++ previous)
+    })
   }
+
+  private def quote(name: String) = "`" + name.replace("`", "``") + "`"
 
   def read(t: PhysicalTable): DataFrame = {
     val dir = currentDataDir(t).getOrElse(
       throw new IllegalStateException(s"table ${t.qualified} has no data"))
-    readDir(dir)
+    readDir(t, dir)
   }
 
-  private def readDir(dir: String): DataFrame =
-    if (hasParquet(dir)) spark.read.parquet(dir)
-    else schemaMarker(dir) match {
-      case Some(st) => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-      case None => spark.read.parquet(dir) // surface the original error
-    }
+  private def readDir(t: PhysicalTable, dir: String): DataFrame =
+    VersionDir.frame(spark, dir, recordOf(t, dir).getOrElse(
+      throw new IllegalStateException(s"${t.qualified}: $dir has no data files and no schema")))
 
   def versions(t: PhysicalTable): Seq[Int] = {
     val root = new Path(t.root)
@@ -215,11 +219,12 @@ final class DirVersionFormat(spark: SparkSession) extends TableFormat {
   def timeTravel(t: PhysicalTable, version: Int): DataFrame = {
     require(versions(t).contains(version),
       s"${t.qualified} has no version $version (have: ${versions(t).mkString(",")})")
-    readDir(new Path(new Path(t.root), s"v$version").toString)
+    readDir(t, new Path(new Path(t.root), s"v$version").toString)
   }
 
   def drop(t: PhysicalTable): Unit = {
     spark.sql(s"DROP VIEW IF EXISTS ${t.qualified}")
+    dropCommitTables(t)
     val root = new Path(t.root)
     val f = fs(root)
     if (f.exists(root)) f.delete(root, true)
@@ -235,13 +240,7 @@ final class DirVersionFormat(spark: SparkSession) extends TableFormat {
     if (partitionedBy.nonEmpty) w = w.partitionBy(partitionedBy: _*)
     if (dynamic) w = w.option("partitionOverwriteMode", "dynamic")
     w.parquet(dir)
-    if (partitionedBy.nonEmpty && !hasParquet(dir)) {
-      // zero-row partitioned write produced no files: persist the schema so
-      // the table stays readable (register/read resolve via the marker)
-      val p = new Path(dir, "_graft_schema")
-      val out = fs(p).create(p, true)
-      try out.write(df.schema.toDDL.getBytes("UTF-8")) finally out.close()
-    }
+    VersionDir.record(spark, dir, df.schema, partitionedBy)
   }
 
   def createOrReplace(t: PhysicalTable, df: DataFrame,
@@ -269,7 +268,7 @@ final class DirVersionFormat(spark: SparkSession) extends TableFormat {
       // can't dynamic-overwrite the dir being read — stage via a temp dir
       val tmp = new Path(new Path(t.root), s"tmp_${System.nanoTime()}").toString
       write(df, tmp, t.partitionedBy)
-      write(spark.read.parquet(tmp), dir, t.partitionedBy, SaveMode.Overwrite,
+      write(VersionDir.read(spark, tmp), dir, t.partitionedBy, SaveMode.Overwrite,
         dynamic = true, clusteredBy = t.clusteredBy, options = t.options)
       val p = new Path(tmp); fs(p).delete(p, true)
     } else
@@ -288,7 +287,7 @@ final class DirVersionFormat(spark: SparkSession) extends TableFormat {
         .foreach(p => f.delete(p, true))
     }
     if (keepVersion >= 0) register(t)
-    else spark.sql(s"DROP VIEW IF EXISTS ${t.qualified}")
+    else { spark.sql(s"DROP VIEW IF EXISTS ${t.qualified}"); dropCommitTables(t) }
   }
 
   def compact(t: PhysicalTable, targetFileBytes: Long): (Int, Int) = {
@@ -303,7 +302,7 @@ final class DirVersionFormat(spark: SparkSession) extends TableFormat {
     }
     val totalBytes = files.map(_.getLen).sum
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val cur = spark.read.parquet(dir)
+    val cur = readDir(t, dir)
     val compacted =
       if (t.partitionedBy.nonEmpty)
         // one file-group per partition dir: repartition on the partition key
@@ -371,6 +370,7 @@ final class DirVersionFormat(spark: SparkSession) extends TableFormat {
         spark.sql(s"CREATE DATABASE IF NOT EXISTS `${renamed.database}`")
         spark.sql(s"CREATE OR REPLACE VIEW ${renamed.qualified} AS SELECT * FROM parquet.`$dir`")
         spark.sql(s"DROP VIEW IF EXISTS ${t.qualified}")
+        dropCommitTables(t)
       case None if spark.catalog.tableExists(s"${t.database}.${t.table}") =>
         // view-only tables (zero-copy clones point at ANOTHER table's data
         // dir) have no version dirs of their own — a pure catalog move keeps
@@ -383,4 +383,15 @@ final class DirVersionFormat(spark: SparkSession) extends TableFormat {
     }
     renamed
   }
+}
+
+object DirVersionFormat {
+  private val commits = new java.util.concurrent.atomic.AtomicLong(System.currentTimeMillis())
+
+  /** A name suffix no earlier per-commit table in this JVM's catalog used. */
+  private def nextCommit(): String = java.lang.Long.toString(commits.incrementAndGet(), 36)
+
+  /** The commit order of a per-commit table name. */
+  private def commitOf(table: String): Long =
+    java.lang.Long.parseLong(table.substring(table.lastIndexOf("__graft_c") + 9), 36)
 }

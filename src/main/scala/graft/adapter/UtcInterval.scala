@@ -6,7 +6,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Cast, DateFormatClass, Literal, MillisToTimestamp, SecondsToTimestamp}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.types.{DataType, DateType, StructType, TimestampType}
 import graft.core.IntervalUnit
 
 /** The one rule for which rows a half-open interval `[start, end)` of epoch
@@ -21,11 +21,14 @@ object UtcInterval {
   /** `timeColumn >= lo AND timeColumn < hi` with literals in the column's
     * representation (reference base.py:1580 renders per time_format; a
     * TIMESTAMP literal against an epoch or DATE column is a wrong predicate):
-    * DATE literals for "date" (the end rounded up to a whole day), epoch
-    * seconds or millis for "epoch" / "epoch_millis", otherwise TIMESTAMP
-    * literals that name their zone, so the session zone cannot shift them. */
-  def condition(timeColumn: String, timeFormat: String, start: Long, end: Long): String = {
-    val (lo, hi) = timeFormat match {
+    * DATE literals for a DATE column or "date" (the end rounded up to a whole
+    * day), epoch seconds or millis for "epoch" / "epoch_millis", otherwise
+    * TIMESTAMP literals that name their zone, so the session zone cannot
+    * shift them. `columnType` is the column's analyzed type when known: a
+    * DATE compared with an instant would widen to its session-zone midnight. */
+  def condition(timeColumn: String, timeFormat: String, start: Long, end: Long,
+                columnType: Option[DataType] = None): String = {
+    val (lo, hi) = format(timeFormat, columnType) match {
       case "date" =>
         (s"DATE '${LocalDate.ofEpochDay(Math.floorDiv(start, 86400000L))}'",
           s"DATE '${LocalDate.ofEpochDay(Math.floorDiv(end + 86399999L, 86400000L))}'")
@@ -41,9 +44,10 @@ object UtcInterval {
     * DATE is its UTC midnight, as its DATE literals are), formatted at the
     * interval unit's granularity in UTC. Intervals are unit-floored, so every
     * partition a batch writes lies wholly inside the batch. */
-  def partitionKey(timeColumn: String, timeFormat: String, unit: IntervalUnit): Column = {
+  def partitionKey(timeColumn: String, timeFormat: String, unit: IntervalUnit,
+                   columnType: Option[DataType] = None): Column = {
     val c = ColumnBridge.expression(col(timeColumn))
-    val instant = timeFormat match {
+    val instant = format(timeFormat, columnType) match {
       case "epoch"        => SecondsToTimestamp(c)
       case "epoch_millis" => MillisToTimestamp(c)
       case "date"         => Cast(c, TimestampType, Some("UTC"))
@@ -51,6 +55,14 @@ object UtcInterval {
     }
     ColumnBridge.column(DateFormatClass(instant, Literal(pattern(unit)), Some("UTC")))
   }
+
+  /** The type of `column` in `schema`, matched case-insensitively. */
+  def typeOf(schema: StructType, column: String): Option[DataType] =
+    schema.find(_.name.equalsIgnoreCase(column)).map(_.dataType)
+
+  /** A DATE column is compared as a date whatever `time_format` says. */
+  private def format(timeFormat: String, columnType: Option[DataType]): String =
+    if (columnType.contains(DateType)) "date" else timeFormat
 
   /** The partition key of the instant `ms` (an interval bound). */
   def partitionValue(ms: Long, unit: IntervalUnit): String =

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core._
-import graft.adapter.{PhysicalTable, SparkMaterializer, UtcInterval}
+import graft.adapter.{PhysicalTable, SparkMaterializer, UtcInterval, VersionDir}
 import graft.audits.Audits
 
 /** One evaluation of a model: the consumer, its interval and execution time. */
@@ -97,7 +97,8 @@ class SnapshotEvaluator(
           if autoTimePartitioned(m) &&
             !df.columns.contains(SnapshotEvaluator.TimePartitionCol) =>
         df.withColumn(SnapshotEvaluator.TimePartitionCol,
-          UtcInterval.partitionKey(k.timeColumn, k.timeFormat, m.intervalUnit))
+          UtcInterval.partitionKey(k.timeColumn, k.timeFormat, m.intervalUnit,
+            UtcInterval.typeOf(df.schema, k.timeColumn)))
       case _ => df
     }
 
@@ -199,6 +200,7 @@ class SnapshotEvaluator(
     val df = query(s, interval.start, interval.end, executionTs, tableMapping,
       t.qualified, incrementalVars(s, t))
     df.write.mode("overwrite").parquet(dir)
+    VersionDir.record(spark, dir, df.schema, Nil)
     dir
   }
 
@@ -210,7 +212,7 @@ class SnapshotEvaluator(
                    tableMapping: Map[String, String], stagedDir: String,
                    dev: Boolean = false): Unit = {
     val swapped = s.copy(model = s.model.copy(body =
-      ScalaBody((sp, _, _, _) => sp.read.parquet(stagedDir))))
+      ScalaBody((sp, _, _, _) => VersionDir.read(sp, stagedDir))))
     try evaluate(swapped, interval, executionTs, tableMapping, isFirstInsert = false, dev)
     finally {
       val p = new org.apache.hadoop.fs.Path(stagedDir)
@@ -279,9 +281,13 @@ class SnapshotEvaluator(
     // ---- audit planning (before the write so aggregate-form audits can
     // ride the write action itself as observed metrics — one scan, not
     // write + N audit scans; see ObservedAudits) ------------------------
+    // the frame a time-range batch writes, built once: its time column's
+    // type picks the interval's literals (a DATE compares as a date)
+    lazy val written = rendered
     val timeCondStr: Option[String] = s.model.kind match {
       case k: ModelKind.IncrementalByTimeRange =>
-        Some(UtcInterval.condition(k.timeColumn, k.timeFormat, interval.start, interval.end))
+        Some(UtcInterval.condition(k.timeColumn, k.timeFormat, interval.start, interval.end,
+          UtcInterval.typeOf(written.schema, k.timeColumn)))
       case _ => None
     }
     final case class AuditSpec(name: String, blocking: Boolean,
@@ -340,8 +346,8 @@ class SnapshotEvaluator(
     lazy val toWrite = observation match {
       case Some(o) =>
         val ms = observedPlans.values.flatMap(_.metrics).toSeq
-        rendered.observe(o, ms.head, ms.tail: _*)
-      case None => rendered
+        written.observe(o, ms.head, ms.tail: _*)
+      case None => written
     }
 
     s.model.kind match {
