@@ -41,18 +41,18 @@ class CommitRecordSpec extends AnyFunSuite {
   }
 
   test("a partition column keeps its written type, whatever its values look like") {
+    // all-numeric and date-like strings, and a DATE column
     val m = new SparkMaterializer(spark)
-    val t = tbl("codes", Seq("code", "day"))
+    val t = tbl("codes", Seq("code", "dl", "day"))
     m.replaceQuery(t, Seq(
-      (1, "007", java.sql.Date.valueOf("2024-01-05")),
-      (2, "7", java.sql.Date.valueOf("2024-01-06")),
-      (3, "01", java.sql.Date.valueOf("2024-01-06")),
-      (4, "2024-01-05", java.sql.Date.valueOf("2024-01-07"))).toDF("id", "code", "day"))
+      (1, "007", "2024-01-05", java.sql.Date.valueOf("2024-01-05")),
+      (2, "7", "2024-01-06", java.sql.Date.valueOf("2024-01-06"))).toDF("id", "code", "dl", "day"))
     for (df <- Seq(m.read(t), spark.table(t.qualified))) {
       assert(df.schema("code").dataType == StringType, df.schema)
+      assert(df.schema("dl").dataType == StringType, df.schema)
       assert(df.schema("day").dataType == DateType, df.schema)
-      val got = df.select("id", "code").as[(Int, String)].collect().toSet
-      assert(got == Set(1 -> "007", 2 -> "7", 3 -> "01", 4 -> "2024-01-05"))
+      val got = df.select("id", "code", "dl").as[(Int, String, String)].collect().toSet
+      assert(got == Set((1, "007", "2024-01-05"), (2, "7", "2024-01-06")))
     }
   }
 
